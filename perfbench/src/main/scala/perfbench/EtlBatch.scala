@@ -173,20 +173,12 @@ object EtlBatch {
     val l = loop(s.spark, s.pipeline, a, cores, tracer, a.seconds, Some(layers))
     val (tr, plain) = l.batches.partition(_.traced)
     val wallMs = tr.map(_.ms).sum
-    val senders = tr.map(_.sender)
-    val calls = senders.map(_.calls.get).sum.toDouble
-    val rowsSent = senders.map(_.rows.get).sum.toDouble
     val overhead = Stats.median(tr.map(_.ms)) - Stats.median(plain.map(_.ms))
     val metrics = Seq(
       Metric("pipeline.compile_ms", Stats.median(s.compileMs), "ms"),
       Metric("pipeline.ops", s.pipeline.ops.size.toDouble, "count")) ++
-      layers.planMetrics ++ layers.exec.metrics(wallMs, cores, "traced-") ++ Seq(
-      Metric("io.send_calls", calls, "count"),
-      Metric("io.rows_sent", rowsSent, "count"),
-      Metric("io.bytes_sent", senders.map(_.bytes.get).sum.toDouble, "bytes"),
-      Metric("io.send_ms", senders.map(_.ownNanos.get).sum / 1e6, "ms"),
-      Metric("io.batch_fill", if (calls > 0) rowsSent / (calls * 1000) else 0, "frac")) ++
-      registry.metrics ++ Seq(
+      layers.planMetrics ++ layers.exec.metrics(wallMs, cores, "traced-") ++
+      Sender.metrics(tr.map(_.sender)) ++ registry.metrics ++ Seq(
       Metric("trace.overhead_ms", overhead, "ms"),
       Metric("trace.overhead_frac", overhead / Stats.median(plain.map(_.ms)), "frac"))
     layers.detach()

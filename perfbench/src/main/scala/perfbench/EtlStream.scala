@@ -399,7 +399,7 @@ object EtlStream {
           Metric("pipeline.compile_ms", Stats.median(s.compileMs), "ms"),
           Metric("pipeline.ops", s.stream.pipeline.ops.size.toDouble, "count")) ++
           s.stream.progress.planMetrics ++ layers.exec.metrics(w.wallS * 1000, cores) ++
-          ioMetrics(w.sender) ++ registry.metrics ++ streamingMetrics(w) ++ Seq(
+          Sender.metrics(Seq(w.sender)) ++ registry.metrics ++ streamingMetrics(w) ++ Seq(
           Metric("trace.overhead_ms", bt - bp, "ms"),
           Metric("trace.overhead_frac", (bt - bp) / bp, "frac"))
         layers.detach()
@@ -421,16 +421,6 @@ object EtlStream {
       s.spark.stop()
       Env.deleteRecursively(root)
     }
-  }
-
-  def ioMetrics(s: Sender): Seq[Metric] = {
-    val calls = s.calls.get.toDouble
-    Seq(
-      Metric("io.send_calls", calls, "count"),
-      Metric("io.rows_sent", s.rows.get.toDouble, "count"),
-      Metric("io.bytes_sent", s.bytes.get.toDouble, "bytes"),
-      Metric("io.send_ms", s.ownNanos.get / 1e6, "ms"),
-      Metric("io.batch_fill", if (calls > 0) s.rows.get / (calls * s.batchSize) else 0, "frac"))
   }
 
   def streamingMetrics(w: Window): Seq[Metric] = {

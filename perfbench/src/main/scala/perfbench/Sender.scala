@@ -62,6 +62,19 @@ final class Sender(val batchSize: Int, trackIds: Boolean) {
 }
 
 object Sender {
+  /** The `io` layer over the senders of a window. */
+  def metrics(senders: Seq[Sender]): Seq[Metric] = {
+    val calls = senders.map(_.calls.get).sum.toDouble
+    val rows = senders.map(_.rows.get).sum.toDouble
+    val capacity = senders.map(s => s.calls.get * s.batchSize).sum.toDouble
+    Seq(
+      Metric("io.send_calls", calls, "count"),
+      Metric("io.rows_sent", rows, "count"),
+      Metric("io.bytes_sent", senders.map(_.bytes.get).sum.toDouble, "bytes"),
+      Metric("io.send_ms", senders.map(_.ownNanos.get).sum / 1e6, "ms"),
+      Metric("io.batch_fill", if (capacity > 0) rows / capacity else 0, "frac"))
+  }
+
   /** The first field of every produced value is the event id, an Avro
     * `long`: a zig-zag varint at offset 0.
     */
