@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one benchmark workload.
 
-    python3 perfbench/run.py --workload <etl_batch|etl_stream|curation_batch> \
+    python3 perfbench/run.py --workload <etl_stream|curation_batch> \
         --seed <n> --seconds <s> --trace <0|1> [--inject drop|dup]
 
 Run from the repository root. The first run compiles the library's sources

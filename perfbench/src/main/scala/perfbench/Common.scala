@@ -7,8 +7,7 @@ import scala.jdk.CollectionConverters._
 
 /** Command-line arguments of one benchmark run. `inject` names a deliberate
   * fault for the anti-vacuity checks (`drop` = the sender loses one record,
-  * `dup` = one planted duplicate survives curation); real runs leave it
-  * empty.
+  * `dup` = one duplicate reaches the sink); real runs leave it empty.
   */
 final case class Args(workload: String, seed: Long, seconds: Int,
                       trace: Boolean, inject: Option[String],
@@ -62,17 +61,6 @@ object Stats {
     s(lo) + (s(hi) - s(lo)) * (pos - lo)
   }
   def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
-
-  /** Quantile of samples given as (value, weight) pairs: the value below
-    * which `q` of the total weight lies (weights are record counts).
-    */
-  def weightedQuantile(xs: Seq[(Double, Long)], q: Double): Double = {
-    require(xs.nonEmpty, "quantile of no samples")
-    val s = xs.sortBy(_._1)
-    val total = s.map(_._2).sum.toDouble
-    var acc = 0L
-    s.find { case (_, w) => acc += w; acc >= q * total }.getOrElse(s.last)._1
-  }
 }
 
 /** FNV-1a 64-bit hashing plus an order-independent multiset digest: a

@@ -5,7 +5,9 @@ import graft.text.TextAnalysis
 import java.util.SplittableRandom
 import scala.collection.mutable.ArrayBuffer
 
-/** Corpus parameters of `curation_batch`; printed with every result. */
+/** Corpus parameters of `curation_batch`; printed with every result. The
+  * values are assumptions chosen to exercise every stage of the chain,
+  * not measured from a real corpus. */
 final case class CorpusParams(
     baseDocs: Int = 800,
     vocab: Int = 20000,

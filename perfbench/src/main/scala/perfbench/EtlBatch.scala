@@ -4,26 +4,14 @@ import graft.pipeline.Pipeline
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
-import scala.collection.mutable.ArrayBuffer
-
-/** `etl_batch`: a closed loop with one client, like a Connect sink task's
-  * `put()`. Each iteration hands a fresh generated batch of Kafka-envelope
-  * rows to the compiled morphline, whose `kafkaProducer` feeds the
-  * benchmark's sender; the action is a `noop` write, so every output
-  * column is computed.
+/** One generated batch of Kafka-envelope rows through the compiled
+  * morphline, as a Connect sink task's `put()` hands it over: the
+  * per-command prefix passes of the traced `etl_stream` run, and the batch
+  * check the tests use.
   */
 object EtlBatch {
   val BatchRows = 4000
-  val SetupRounds = 3
-  val MinBatches = 4
-  val PrefixReps = 3
-  /** Warm-up batches in the first set-up round, and again in the final
-    * session before timing starts: the JIT needs many to settle. */
-  val WarmBatches = 4
-  private val WarmSalt = 0x5bd1e995L
-
-  final case class BatchOut(ms: Double, ok: Boolean, traced: Boolean,
-                            latencyMs: Seq[(Double, Long)], sender: Sender)
+  val PrefixReps = 2
 
   /** What the sink must receive for a batch, from the generator's truth. */
   final class Expected(events: Array[Event], truth: EtlGen.Truth) {
@@ -39,159 +27,23 @@ object EtlBatch {
     }
   }
 
+  final case class BatchOut(ok: Boolean, sender: Sender)
+
+  /** Run `events` through `pipeline` into a fresh sender (a `noop` write,
+    * so every output column is computed) and check what the sender saw:
+    * count, per-topic counts and the record digest. */
   def runBatch(spark: SparkSession, pipeline: Pipeline, events: Array[Event],
-               cores: Int, truth: EtlGen.Truth, tracer: Tracer,
-               dropOne: Boolean): BatchOut = {
-    val exp = tracer.span("check.truth")(new Expected(events, truth))
+               cores: Int, truth: EtlGen.Truth, dropOne: Boolean): BatchOut = {
+    val exp = new Expected(events, truth)
     val guard = Env.releaseCaches()
     val sender = new Sender(1000, trackIds = false).install()
     if (dropOne) sender.dropOne.set(true)
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(events.map(_.row).toSeq, cores), EtlGen.Schema)
-    val t0 = System.nanoTime()
-    tracer.span("batch") {
-      val out = tracer.span("pipeline.apply")(pipeline(df))
-      tracer.span("sink.noop_write")(Etl.noop(out))
-    }
-    val t1 = System.nanoTime()
+    Etl.noop(pipeline(df))
     val ok = guard && sender.rows.get == exp.count &&
       sender.topicCounts == exp.topics && sender.digest.value == exp.digest
-    import scala.jdk.CollectionConverters._
-    val lat = sender.arrivals.asScala.toSeq.map { case (t, n) => ((t - t0) / 1e6, n.toLong) }
-    BatchOut((t1 - t0) / 1e6, ok, tracer.enabled, lat, sender)
-  }
-
-  final case class LoopOut(batches: Seq[BatchOut], rows: Long, digest: String)
-
-  /** Run batches from a fresh generator until `seconds` of timed work are
-    * done. With `layers`, odd batches are traced and even ones are not, so
-    * both halves see the same JIT and heap state. */
-  def loop(spark: SparkSession, pipeline: Pipeline, a: Args, cores: Int,
-           tracer: Tracer, seconds: Double, layers: Option[Layers]): LoopOut = {
-    val gen = new EtlGen(a.seed)
-    val truth = new EtlGen.Truth
-    val digest = new Digest.Running
-    val out = ArrayBuffer.empty[BatchOut]
-    var timedMs = 0.0
-    var rows = 0L
-    while (out.size < MinBatches || timedMs < seconds * 1000 ||
-        (layers.isDefined && out.size % 2 == 1)) {
-      val b = out.size
-      tracer.iter = b
-      layers.foreach { l =>
-        l.drain()
-        tracer.enabled = b % 2 == 1
-        spark.sparkContext.setJobGroup(s"${if (tracer.enabled) "traced" else "plain"}-$b", "etl_batch")
-      }
-      val events = tracer.span("gen")(gen.batch(b, BatchRows))
-      if (b < MinBatches) events.foreach(e => digest.add(e.valueJson))
-      val r = runBatch(spark, pipeline, events, cores, truth, tracer,
-        dropOne = a.inject.contains("drop") && b == 0)
-      out += r
-      timedMs += r.ms
-      rows += events.length
-    }
-    layers.foreach { l => l.drain(); tracer.enabled = false; spark.sparkContext.clearJobGroup() }
-    LoopOut(out.toSeq, rows, digest.hex)
-  }
-
-  final case class Setup(spark: SparkSession, pipeline: Pipeline,
-                         setupS: Seq[Double], compileMs: Seq[Double], warmOk: Boolean)
-
-  /** Session build, `fromHocon` compile and (once per process, since the
-    * JVM stays warm across sessions) generated warm-up batches, repeated;
-    * `setup_s` is the median round. */
-  def setup(a: Args, cores: Int, registry: BenchRegistry, tracer: Tracer): Setup = {
-    var spark: SparkSession = null
-    var pipeline: Pipeline = null
-    val setupS = ArrayBuffer.empty[Double]
-    val compileMs = ArrayBuffer.empty[Double]
-    var warmOk = true
-    for (round <- 0 until SetupRounds) {
-      if (spark != null) spark.stop()
-      val t0 = System.nanoTime()
-      spark = Env.session(cores)
-      val tc = System.nanoTime()
-      pipeline = Etl.compile(registry)
-      compileMs += (System.nanoTime() - tc) / 1e6
-      if (round == 0) {
-        val warmGen = new EtlGen(a.seed ^ WarmSalt)
-        for (b <- 0 until WarmBatches)
-          warmOk &= runBatch(spark, pipeline, warmGen.batch(b, BatchRows), cores,
-            new EtlGen.Truth, tracer, dropOne = false).ok
-      }
-      setupS += (System.nanoTime() - t0) / 1e9
-    }
-    val warmGen = new EtlGen(a.seed ^ WarmSalt ^ 1L)
-    for (b <- 0 until WarmBatches)
-      warmOk &= runBatch(spark, pipeline, warmGen.batch(b, BatchRows), cores,
-        new EtlGen.Truth, tracer, dropOne = false).ok
-    Setup(spark, pipeline, setupS.toSeq, compileMs.toSeq, warmOk)
-  }
-
-  def run(a: Args): Result = {
-    val cores = Env.cores(reserveForGenerator = false)
-    val registry = new BenchRegistry
-    val tracer = new Tracer(false)
-    val s = setup(a, cores, registry, tracer)
-    val report = ArrayBuffer[(String, Any)](
-      "traffic" -> (Seq("batch_rows" -> BatchRows, "loop" -> "closed, 1 client") ++
-        EtlParams().describe),
-      "settings" -> Env.settings(s.spark),
-      "setup_s_samples" -> s.setupS,
-      "warmup_checks_ok" -> s.warmOk)
-    try if (a.trace) traced(a, s, cores, registry, tracer, report) else {
-      val l = loop(s.spark, s.pipeline, a, cores, tracer, a.seconds, None)
-      val ms = l.batches.map(_.ms)
-      val lat = l.batches.flatMap(_.latencyMs)
-      val rps = l.rows / (ms.sum / 1000)
-      val failed = l.batches.count(!_.ok).toLong + (if (s.warmOk) 0 else 1)
-      report ++= Seq("input_digest" -> l.digest, "batches" -> l.batches.size,
-        "records" -> l.rows, "batch_ms_samples" -> ms,
-        "latency_samples" -> lat.map(_._2).sum,
-        "latency_note" -> ("closed loop: stream_* metrics read the loop's completed " +
-          "rate and each record's delay from its batch start to the sender"))
-      val p50 = Stats.weightedQuantile(lat, 0.5)
-      val p99 = Stats.weightedQuantile(lat, 0.99)
-      Result(l.batches.size, failed, Seq(
-        Metric("setup_s", Stats.median(s.setupS), "s"),
-        Metric("records_per_s", rps, "1/s"),
-        Metric("batch_ms_p50", Stats.median(ms), "ms"),
-        Metric("batch_ms_p90", Stats.quantile(ms, 0.9), "ms"),
-        Metric("stream_sustained_rps", rps, "1/s"),
-        Metric("stream_latency_ms_p50.low", p50, "ms"),
-        Metric("stream_latency_ms_p99.low", p99, "ms"),
-        Metric("stream_latency_ms_p50.high", p50, "ms"),
-        Metric("stream_latency_ms_p99.high", p99, "ms")), report.toSeq)
-    } finally s.spark.stop()
-  }
-
-  private def traced(a: Args, s: Setup, cores: Int, registry: BenchRegistry,
-                     tracer: Tracer, report: ArrayBuffer[(String, Any)]): Result = {
-    val layers = new Layers(s.spark, tracer)
-    layers.reset()
-    val l = loop(s.spark, s.pipeline, a, cores, tracer, a.seconds, Some(layers))
-    val (tr, plain) = l.batches.partition(_.traced)
-    val wallMs = tr.map(_.ms).sum
-    val overhead = Stats.median(tr.map(_.ms)) - Stats.median(plain.map(_.ms))
-    val metrics = Seq(
-      Metric("pipeline.compile_ms", Stats.median(s.compileMs), "ms"),
-      Metric("pipeline.ops", s.pipeline.ops.size.toDouble, "count")) ++
-      layers.planMetrics ++ layers.exec.metrics(wallMs, cores, "traced-") ++
-      Sender.metrics(tr.map(_.sender)) ++ registry.metrics ++ Seq(
-      Metric("trace.overhead_ms", overhead, "ms"),
-      Metric("trace.overhead_frac", overhead / Stats.median(plain.map(_.ms)), "frac"))
-    layers.detach()
-    val ops = prefixPasses(s.spark, s.pipeline, new EtlGen(a.seed).batch(0, BatchRows), cores,
-      PrefixReps)
-    report ++= Seq("input_digest" -> l.digest, "traced_batch_ms" -> tr.map(_.ms),
-      "untraced_batch_ms" -> plain.map(_.ms),
-      "ratio_bases" -> Seq(
-        "exec.busy_frac" -> s"task_run_ms / (traced batches' wall $wallMs ms x $cores cores)",
-        "io.batch_fill" -> "rows_sent / (send_calls x batch size 1000)",
-        "trace.overhead_frac" -> "(median traced - median untraced batch ms) / median untraced"))
-    Trace.writeOut(a, tracer, metrics ++ ops, report.toSeq)
-    Result(l.batches.size, l.batches.count(!_.ok).toLong, metrics ++ ops, report.toSeq)
+    BatchOut(ok, sender)
   }
 
   /** Per-command rows and marginal cost on one fixed batch: prefix k runs

@@ -11,7 +11,9 @@ import java.time.format.DateTimeFormatter
 import java.util.SplittableRandom
 
 /** Traffic parameters of the ETL workloads. Every field is printed with
-  * the result so a run says exactly what load it measured.
+  * the result so a run says exactly what load it measured. The values are
+  * assumptions chosen to exercise every branch of the morphline, not
+  * shares measured from a real trace.
   */
 final case class EtlParams(
     users: Int = 5000, // distinct Kafka keys

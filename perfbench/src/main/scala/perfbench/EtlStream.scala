@@ -20,17 +20,24 @@ import scala.jdk.CollectionConverters._
   * morphline's `kafkaProducer` into the benchmark's sender, run by a
   * `noop` stream writer. Each event is timed from the moment its file was
   * due to be written to its arrival at the sender.
+  *
+  * A window has two phases, each driven until the sink has every event:
+  * the low and the high rate, whose latency is read, then one step at a
+  * rate the stream cannot keep up with, whose backlog it must clear.
   */
 object EtlStream {
   val TickMs = 250
-  /** Fixed input rates (events per second), one step each. */
-  val Rates = Seq(400, 2400)
-  /** p99 latency limit a step must meet to count as sustained. */
-  val LatencyLimitMs = 6000.0
+  /** Fixed input rates (events per second) whose latency is read. */
+  val LowRate = 400
+  val HighRate = 1600
+  /** Offered above what the stream can take, so its backlog grows through
+    * the step and the rate it clears it at is `stream_sustained_rps`: about
+    * three times the drain rate measured for the current code (README). */
+  val OverloadRate = 12000
   val WatermarkDelay = "10 seconds"
   /** Share of each step whose events are not timed, so the latency of a
     * rate is read after the stream has adjusted to it. */
-  val SettleShare = 0.25
+  val SettleShare = 1.0 / 3
   val RedeliveryShare = 0.03
   val RedeliveryTicks = (2, 10)
   val OutOfOrderShare = 0.05
@@ -40,7 +47,7 @@ object EtlStream {
   val SetupWarm = (400, 4)
   /** Before timing, the final query runs at the high rate until the JIT
     * has settled (not part of `setup_s`). */
-  val PreWarm = (2400, 16)
+  val PreWarm = (HighRate, 8)
   val SetupRounds = 3
   val DrainTimeoutMs = 60000L
 
@@ -58,9 +65,18 @@ object EtlStream {
         "streaming.state_rows_dropped_late" -> "count", "streaming.state_mem_bytes" -> "bytes") ++
       RocksDbMetrics.map { case (m, u) => s"streaming.rocksdb.$m" -> u }
 
-  def traffic: Seq[(String, Any)] = Seq(
-    "loop" -> "open", "tick_ms" -> TickMs, "rate_steps_per_s" -> Rates,
-    "latency_limit_ms" -> LatencyLimitMs, "watermark_delay" -> WatermarkDelay,
+  /** The window's phases as (rate, ticks) steps: `seconds` split 2:2:1
+    * between the low, the high and the overload rate (the overload step's
+    * backlog takes several times its length to clear). */
+  def phases(seconds: Int): Seq[Seq[(Int, Int)]] = {
+    val fifth = math.max(2, seconds * 1000 / TickMs / 5)
+    Seq(Seq((LowRate, 2 * fifth), (HighRate, 2 * fifth)), Seq((OverloadRate, fifth)))
+  }
+
+  def traffic(seconds: Int): Seq[(String, Any)] = Seq(
+    "loop" -> "open", "tick_ms" -> TickMs,
+    "phases" -> phases(seconds).map(_.map { case (r, t) => Seq("rate_per_s" -> r, "ticks" -> t) }),
+    "watermark_delay" -> WatermarkDelay,
     "untimed_step_start_share" -> SettleShare,
     "redelivery_share" -> RedeliveryShare,
     "redelivery_delay_ticks" -> Seq(RedeliveryTicks._1, RedeliveryTicks._2),
@@ -268,55 +284,74 @@ object EtlStream {
     g
   }
 
-  final case class StepOut(rate: Int, events: Int, offeredPerS: Double, p50: Double,
-                           p99: Double, backlogGrew: Boolean, passed: Boolean)
+  /** One rate step as measured: `delivered_per_s` is its events over the
+    * time from its first due tick to the arrival of its last event, and
+    * `drain_s` how long after its last tick that event arrived. Latency is
+    * read over the events due after the step's settling share. */
+  final case class StepOut(rate: Int, events: Int, offeredPerS: Double, deliveredPerS: Double,
+                           drainS: Double, timed: Int, p50: Double, p99: Double)
 
-  final case class Window(g: Generator, sender: Sender, steps: Seq[StepOut],
-                          expected: Int, failed: Long, progress: Seq[StreamingQueryProgress],
-                          backlog: Seq[(Long, Int)], wallS: Double)
+  final case class Window(gens: Seq[Generator], sender: Sender, steps: Seq[StepOut],
+                          expected: Int, failed: Long, phaseS: Seq[Double],
+                          phaseProgress: Seq[Seq[StreamingQueryProgress]],
+                          backlog: Seq[(Long, Int)], wallS: Double) {
+    def progress: Seq[StreamingQueryProgress] = phaseProgress.flatten
+  }
 
-  /** One measured window: every rate step, then the output check. */
-  def measure(st: Stream, a: Args, seedSalt: Long, idBase: Long, tracer: Tracer): Window = {
+  /** One measured window: each phase driven until the sink has all of it,
+    * then the output check over every phase. */
+  def measure(st: Stream, a: Args, seedSalt: Long, idBase: Long, tracer: Tracer,
+              phases: Seq[Seq[(Int, Int)]]): Window = {
     val sender = new Sender(1000, trackIds = true).install()
-    if (a.inject.contains("drop")) sender.dropOne.set(true)
+    a.inject.foreach {
+      case "drop" => sender.dropOne.set(true)
+      case "dup" => sender.dupOne.set(true)
+    }
     val gen = new EtlGen(a.seed + seedSalt)
     gen.skipIds(idBase)
-    val stepTicks = math.max(10, a.seconds * 1000 / TickMs / Rates.size)
-    val steps = Rates.map(r => (r, stepTicks))
     val samples = ArrayBuffer.empty[(Long, Int)]
-    val t0Ms = System.currentTimeMillis()
+    val startsMs = ArrayBuffer.empty[Long]
     val t0 = System.nanoTime()
-    val g = tracer.span("stream.window")(drive(st, sender, a.seed + seedSalt, gen, steps, tracer, Some(samples)))
+    val gens = tracer.span("stream.window")(phases.zipWithIndex.map { case (steps, i) =>
+      startsMs += System.currentTimeMillis()
+      drive(st, sender, a.seed + seedSalt + 0x9e3779b9L * i, gen, steps, tracer, Some(samples))
+    })
     val wallS = (System.nanoTime() - t0) / 1e9
     org.apache.spark.PerfbenchBridge.drainListeners(st.spark.sparkContext)
+    val all = st.progress.since(startsMs.head)
+    val phaseProgress = startsMs.indices.map { i =>
+      val end = startsMs.lift(i + 1).getOrElse(Long.MaxValue)
+      all.filter { p =>
+        val ms = java.time.Instant.parse(p.timestamp).toEpochMilli
+        ms >= startsMs(i) && ms < end
+      }
+    }
     val truth = new EtlGen.Truth
-    val expected = g.due.keySet.asScala.toSeq.map(id => g.events.get(id)).filterNot(_.dropped)
+    val expectedOf = gens.map(g => g.due.keySet.asScala.toSeq.map(id => g.events.get(id))
+      .filterNot(_.dropped))
+    val expected = expectedOf.flatten
     val exp = new Digest.Multiset
     expected.foreach(e => exp.add(truth.recordHash(e)))
     val expIds = expected.map(_.id).toSet
     val wrong = expected.count(e => Option(sender.deliveries.get(e.id)).forall(_.get != 1)) +
       sender.deliveries.keySet.asScala.count(id => !expIds.contains(id))
     val failed = wrong.toLong + (if (sender.digest.value == exp.value) 0 else 1)
-    val out = steps.indices.map { s =>
-      val settled = g.stepStart(s) + ((g.stepEnd(s) - g.stepStart(s)) * SettleShare).toLong
-      val ids = expected.filter(e => g.stepOfId.get(e.id) == s &&
-        g.due.get(e.id) >= settled).map(_.id)
-      val lat = ids.map(id => Option(sender.firstArrival.get(id))
-        .map(t => (t - g.due.get(id)) / 1e6).getOrElse(DrainTimeoutMs.toDouble))
-      val p50 = Stats.quantile(lat, 0.5)
-      val p99 = Stats.quantile(lat, 0.99)
-      // backlog growth shows as latency climbing through the step: the
-      // last third of its events waits far longer than the first third
-      val byDue = ids.sortBy(id => g.due.get(id).longValue).map(id =>
-        Option(sender.firstArrival.get(id)).map(t => (t - g.due.get(id)) / 1e6)
-          .getOrElse(DrainTimeoutMs.toDouble))
-      val third = math.max(1, byDue.size / 3)
-      val grew = byDue.size >= 3 && Stats.median(byDue.takeRight(third)) -
-        Stats.median(byDue.take(third)) > LatencyLimitMs / 2
-      val offered = g.offered(s).get / ((g.stepEnd(s) - g.stepStart(s)) / 1e9)
-      StepOut(steps(s)._1, ids.size, offered, p50, p99, grew, p99 <= LatencyLimitMs && !grew)
+    def arrival(id: Long): Option[Long] = Option(sender.firstArrival.get(id)).map(_.longValue)
+    val phaseS = gens.zip(expectedOf).map { case (g, es) =>
+      (es.flatMap(e => arrival(e.id)).maxOption.getOrElse(g.stepEnd.last) - g.stepStart.head) / 1e9
     }
-    Window(g, sender, out, expected.size, failed, st.progress.since(t0Ms), samples.toSeq, wallS)
+    val out = for ((g, i) <- gens.zipWithIndex; s <- phases(i).indices) yield {
+      val inStep = expectedOf(i).filter(e => g.stepOfId.get(e.id) == s)
+      val settled = g.stepStart(s) + ((g.stepEnd(s) - g.stepStart(s)) * SettleShare).toLong
+      val lat = inStep.filter(e => g.due.get(e.id) >= settled).map(e =>
+        arrival(e.id).map(t => (t - g.due.get(e.id)) / 1e6).getOrElse(DrainTimeoutMs.toDouble))
+      val last = inStep.flatMap(e => arrival(e.id)).maxOption.getOrElse(g.stepEnd(s))
+      StepOut(phases(i)(s)._1, inStep.size,
+        g.offered(s).get / ((g.stepEnd(s) - g.stepStart(s)) / 1e9),
+        inStep.size / ((last - g.stepStart(s)) / 1e9), (last - g.stepEnd(s)) / 1e9,
+        lat.size, Stats.quantile(lat, 0.5), Stats.quantile(lat, 0.99))
+    }
+    Window(gens, sender, out, expected.size, failed, phaseS, phaseProgress, samples.toSeq, wallS)
   }
 
   final case class Setup(spark: SparkSession, stream: Stream, setupS: Seq[Double],
@@ -356,34 +391,34 @@ object EtlStream {
     val tracer = new Tracer(false)
     val root = new File(a.outDir, s"stream-${ProcessHandle.current().pid()}")
     val s = setup(a, cores, registry, tracer, root)
-    val report = ArrayBuffer[(String, Any)]("traffic" -> traffic,
+    val report = ArrayBuffer[(String, Any)]("traffic" -> traffic(a.seconds),
       "settings" -> Env.settings(s.spark), "setup_s_samples" -> s.setupS)
     try {
       if (!a.trace) {
-        val w = measure(s.stream, a, 0L, s.idBase, tracer)
+        val w = measure(s.stream, a, 0L, s.idBase, tracer, phases(a.seconds))
         describe(w, report)
-        val trig = w.progress.map(_.durationMs.asScala.get("triggerExecution").map(_.toDouble).getOrElse(0.0))
-        val sustained = w.steps.filter(_.passed).map(_.offeredPerS).maxOption.getOrElse(0.0)
-        // an open loop completes what it is offered: distinct events
-        // delivered over the offered window (the check requires all of them)
-        val offeredS = (w.g.stepEnd.last - w.g.stepStart.head) / 1e9
-        val delivered = w.sender.deliveries.size
+        // per-trigger time at the fixed rates (the first phase)
+        val trig = w.phaseProgress.head.filter(_.numInputRows > 0)
+          .map(_.durationMs.asScala.get("triggerExecution").map(_.toDouble).getOrElse(0.0))
+        val Seq(low, high, overload) = w.steps
         Result(w.expected, w.failed, Seq(
           Metric("setup_s", Stats.median(s.setupS), "s"),
-          Metric("records_per_s", delivered / offeredS, "1/s"),
+          // distinct events delivered over the time from each phase's first
+          // due tick to its last arrival, so drain lag counts
+          Metric("records_per_s", w.sender.deliveries.size / w.phaseS.sum, "1/s"),
           Metric("batch_ms_p50", Stats.median(trig), "ms"),
           Metric("batch_ms_p90", Stats.quantile(trig, 0.9), "ms"),
-          Metric("stream_sustained_rps", sustained, "1/s"),
-          Metric("stream_latency_ms_p50.low", w.steps.head.p50, "ms"),
-          Metric("stream_latency_ms_p99.low", w.steps.head.p99, "ms"),
-          Metric("stream_latency_ms_p50.high", w.steps.last.p50, "ms"),
-          Metric("stream_latency_ms_p99.high", w.steps.last.p99, "ms")), report.toSeq)
+          Metric("stream_sustained_rps", overload.deliveredPerS, "1/s"),
+          Metric("stream_latency_ms_p50.low", low.p50, "ms"),
+          Metric("stream_latency_ms_p99.low", low.p99, "ms"),
+          Metric("stream_latency_ms_p50.high", high.p50, "ms"),
+          Metric("stream_latency_ms_p99.high", high.p99, "ms")), report.toSeq)
       } else {
-        val plain = measure(s.stream, a, 0L, s.idBase, tracer)
+        val plain = measure(s.stream, a, 0L, s.idBase, tracer, phases(a.seconds))
         val layers = new Layers(s.spark, tracer)
         layers.reset()
         tracer.enabled = true
-        val w = measure(s.stream, a, 1L, s.idBase + 10000000L, tracer)
+        val w = measure(s.stream, a, 1L, s.idBase + 10000000L, tracer, phases(a.seconds))
         layers.drain()
         tracer.enabled = false
         w.progress.foreach { p =>
@@ -439,7 +474,7 @@ object EtlStream {
       Metric("streaming.rows_per_trigger",
         if (ps.isEmpty) 0 else ps.map(_.numInputRows).sum.toDouble / ps.size, "count"),
       Metric("streaming.backlog_files_max", w.backlog.map(_._2).maxOption.getOrElse(0).toDouble, "count"),
-      Metric("streaming.generator_lag_ms", w.g.lagMs.maxOption.getOrElse(0.0), "ms"),
+      Metric("streaming.generator_lag_ms", w.gens.flatMap(_.lagMs).maxOption.getOrElse(0.0), "ms"),
       Metric("streaming.state_commit_ms", ops.map(_.commitTimeMs).sum.toDouble, "ms"),
       Metric("streaming.state_rows_updated", ops.map(_.numRowsUpdated).sum.toDouble, "count"),
       Metric("streaming.state_rows_dropped_late", ops.map(_.numRowsDroppedByWatermark).sum.toDouble, "count"),
@@ -451,14 +486,18 @@ object EtlStream {
   }
 
   private def describe(w: Window, report: ArrayBuffer[(String, Any)]): Unit = report ++= Seq(
-    "input_digest" -> w.g.digest.hex,
+    "input_digest" -> w.gens.map(_.digest.hex),
     "expected_events" -> w.expected,
-    "planted_redeliveries" -> w.g.redelivered.size,
-    "out_of_order_events" -> w.g.outOfOrder.get,
-    "triggers" -> w.progress.size,
+    "planted_redeliveries" -> w.gens.map(_.redelivered.size).sum,
+    "out_of_order_events" -> w.gens.map(_.outOfOrder.get).sum,
+    "triggers_per_phase" -> w.phaseProgress.map(_.size),
+    "trigger_samples" -> w.phaseProgress.map(_.map(p => Seq("batch" -> p.batchId,
+      "rows" -> p.numInputRows, "ms" -> p.durationMs.asScala.get("triggerExecution")
+        .map(_.longValue).getOrElse(0L)))),
+    "phase_s" -> w.phaseS,
     "window_wall_s" -> w.wallS,
-    "generator_lag_ms_max" -> w.g.lagMs.maxOption.getOrElse(0.0),
+    "generator_lag_ms_max" -> w.gens.flatMap(_.lagMs).maxOption.getOrElse(0.0),
     "steps" -> w.steps.map(s => Seq("rate_per_s" -> s.rate, "offered_per_s" -> s.offeredPerS,
-      "events" -> s.events, "latency_ms_p50" -> s.p50, "latency_ms_p99" -> s.p99,
-      "latency_samples" -> s.events, "backlog_grew" -> s.backlogGrew, "passed" -> s.passed)))
+      "events" -> s.events, "delivered_per_s" -> s.deliveredPerS, "drain_s" -> s.drainS,
+      "latency_ms_p50" -> s.p50, "latency_ms_p99" -> s.p99, "latency_samples" -> s.timed)))
 }

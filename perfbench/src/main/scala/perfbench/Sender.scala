@@ -19,19 +19,21 @@ final class Sender(val batchSize: Int, trackIds: Boolean) {
   val ownNanos = new AtomicLong
   val digest = new Digest.Multiset
   val perTopic = new ConcurrentHashMap[String, AtomicLong]()
-  /** (arrival nanoTime, records) per send call. */
-  val arrivals = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
   /** Streaming: event id -> deliveries, and id -> first arrival nanoTime. */
   val deliveries = new ConcurrentHashMap[java.lang.Long, AtomicLong]()
   val firstArrival = new ConcurrentHashMap[java.lang.Long, java.lang.Long]()
-  /** Anti-vacuity fault: silently lose the first record seen. */
+  /** Anti-vacuity faults: silently lose the first record seen, or receive
+    * it twice (a redelivery that got past dedup). */
   val dropOne = new AtomicBoolean(false)
+  val dupOne = new AtomicBoolean(false)
 
   def send(batch: Seq[(String, Array[Byte], Array[Byte])]): Unit = {
     val t0 = System.nanoTime()
     var n = 0
     batch.foreach { case (topic, key, value) =>
-      if (!dropOne.compareAndSet(true, false)) {
+      val copies = if (dropOne.compareAndSet(true, false)) 0
+        else if (dupOne.compareAndSet(true, false)) 2 else 1
+      for (_ <- 0 until copies) {
         n += 1
         bytes.addAndGet((if (key == null) 0 else key.length) +
           (if (value == null) 0 else value.length))
@@ -46,7 +48,6 @@ final class Sender(val batchSize: Int, trackIds: Boolean) {
     }
     calls.incrementAndGet()
     rows.addAndGet(n)
-    arrivals.add((t0, n))
     ownNanos.addAndGet(System.nanoTime() - t0)
   }
 

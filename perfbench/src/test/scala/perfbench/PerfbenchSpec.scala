@@ -45,13 +45,27 @@ class PerfbenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stream(11) != stream(12))
   }
 
-  test("etl_batch: a clean batch passes its check, a sender that drops one record fails it") {
+  test("etl_stream: a clean window passes its check; a lost or a twice-delivered record fails it") {
+    val st = EtlStream.start(spark, new java.io.File(out, "stream"), Etl.compile(new BenchRegistry))
+    try {
+      def failed(inject: Option[String], salt: Long) = {
+        val w = EtlStream.measure(st, args("etl_stream", inject), salt, salt * 1000000L,
+          new Tracer(false), Seq(Seq((400, 12))))
+        assert(w.expected > 0 && w.gens.head.redelivered.nonEmpty)
+        w.failed
+      }
+      assert(failed(None, 1) == 0)
+      assert(failed(Some("drop"), 2) > 0)
+      assert(failed(Some("dup"), 3) > 0)
+    } finally st.stop()
+  }
+
+  test("morphline batch check: a clean batch passes, a sender that drops one record fails") {
     val p = Etl.compile(new BenchRegistry)
     val events = new EtlGen(7).batch(0, 500)
     val truth = new EtlGen.Truth
-    val tracer = new Tracer(false)
-    assert(EtlBatch.runBatch(spark, p, events, 2, truth, tracer, dropOne = false).ok)
-    assert(!EtlBatch.runBatch(spark, p, events, 2, truth, tracer, dropOne = true).ok)
+    assert(EtlBatch.runBatch(spark, p, events, 2, truth, dropOne = false).ok)
+    assert(!EtlBatch.runBatch(spark, p, events, 2, truth, dropOne = true).ok)
   }
 
   test("per-command row counts and routes equal the generator's planted shares") {
@@ -68,8 +82,7 @@ class PerfbenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows("tryRules", "rows_out") == exp.count)
     assert(rows("kafkaProducer", "rows_out") == exp.count)
     // routes: what the sender saw per route equals the planted route shares
-    val sender = EtlBatch.runBatch(spark, p, events, 2, new EtlGen.Truth, new Tracer(false),
-      dropOne = false).sender
+    val sender = EtlBatch.runBatch(spark, p, events, 2, new EtlGen.Truth, dropOne = false).sender
     val routed = sender.topicCounts.toSeq.groupBy(_._1.split("-")(1))
       .map { case (r, ts) => r -> ts.map(_._2).sum }
     assert(routed == exp.routed)
@@ -88,5 +101,17 @@ class PerfbenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Curation.pass(docs, Some(dup), tracer).matches(c))
     Env.releaseCaches()
     docs.unpersist()
+  }
+
+  test("BENCHMARK.json names the workloads and metrics the harness prints") {
+    val f = new java.io.File(Main.home.getAbsoluteFile.getParentFile, "BENCHMARK.json")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+    def names(k: String) = {
+      import scala.jdk.CollectionConverters._
+      json.get(k).elements.asScala.toSeq.map(_.get("name").asText)
+    }
+    assert(names("workloads").toSet == Main.Workloads.keySet)
+    assert(names("end_to_end") == Main.EndToEnd.map(_._1))
+    assert(names("per_layer") == Main.perLayer.map(_._1))
   }
 }
