@@ -383,20 +383,11 @@ object Bench {
       // ADVICE r19 (medium): the remaining execution-shaping knobs.
       // A bench against a smaller corpus sets raw rollmin / rps values
       // no default sf0.1 run can ever match (--strict would fail
-      // forever after); the state-partition count directly changes
-      // stream rps (the STREAM_FILES poisoning class); a non-default
-      // iteration count skews every min-of-N roll.
+      // forever after); a non-default iteration count skews every
+      // min-of-N roll.
       env.getOrElse("SPARK_GRAFT_SF_DIR",
         "/root/testdata/sf0.1") == "/root/testdata/sf0.1" &&
-      !env.contains("SPARK_GRAFT_STREAM_PARTS") &&
-      env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3") == "3" &&
-      !env.contains("SPARK_GRAFT_STATE_PROVIDER") &&
-      !Set("0", "off", "false", "snapshot").contains(
-        env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "1").trim.toLowerCase) &&
-      // row-count tracking default OFF since r22 (write amplification);
-      // an explicit =1 run measures a different state write path
-      !Set("1", "on", "true").contains(
-        env.getOrElse("SPARK_GRAFT_ROCKSDB_TRACKROWS", "0").trim.toLowerCase)
+      env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3") == "3"
 
   /** Warm up codegen/scan paths so the alphabetically-first query doesn't
     * absorb JVM+session startup in its timing. Shared with ScaleBench —
@@ -733,8 +724,8 @@ object Bench {
     val cfgEligible = rollEligibleConfig(sys.env.toMap)
     if (!cfgEligible)
       System.err.println("[bench] non-default execution config " +
-        "(SPARK_GRAFT_MASTER/CPUS/STREAM_FILES/STATE_PROVIDER/" +
-        "ROCKSDB_CHANGELOG set): rolling records frozen, ratio gates off")
+        "(SPARK_GRAFT_MASTER/CPUS/STREAM_FILES/SF_DIR/BENCH_ITERS " +
+        "set): rolling records frozen, ratio gates off")
     val curMin = results.collect { case (n, _, _, mn, _) if mn >= 0 => n -> mn }.toMap
     val rollmin =
       if (!cfgEligible) prevRoll.toSeq
@@ -988,7 +979,8 @@ object Bench {
     if (sm.nonEmpty) {
       System.err.println("[bench] streaming gates: rows/sec, peak state rows, peak state bytes")
       sm.foreach { case (n, rps, sr, sb) =>
-        System.err.println(f"[bench]   $n%-32s rps=$rps%10.1f stateRows=$sr%9d stateBytes=$sb%12d") }
+        val rows = sr.fold("untracked")(_.toString)
+        System.err.println(f"[bench]   $n%-32s rps=$rps%10.1f stateRows=$rows%9s stateBytes=$sb%12d") }
     }
     // probe_s rides on the stdout headline too (16 chars — the judge can
     // normalize the driver-recorded BENCH_r{N}.json without the file)

@@ -199,15 +199,15 @@ object ScaleBench {
     val skew = sys.env.contains("SPARK_GRAFT_SCALE_SKEW")
     val prefixes = if (args.isEmpty) Seq("") else args.toSeq
     // Shared builder (advice r14): ScaleBench must honor the same
-    // SPARK_GRAFT_MASTER / state-provider knobs as Bench/Verify — an
+    // SPARK_GRAFT_MASTER knob and state-store policy as Bench/Verify — an
     // inline local[k] builder here would silently re-measure scaling in
     // single-JVM mode when the user asked for local-cluster.
-    // RocksDB row-count tracking pinned ON here (r22): the state-growth
-    // defense below reads peak numRowsTotal, which is -1 under the
-    // bench's tracking-off default; exponents stay internally consistent
-    // because every scale point pays the same tracking cost.
-    Sessions.rocksdbTrackRowsForce = Some(true)
     val spark = Sessions.build(cpus)
+    // RocksDB row-count tracking ON for this session only: the
+    // state-growth defense below reads peak numRowsTotal, which is
+    // untracked under the library policy; exponents stay internally
+    // consistent because every scale point pays the same tracking cost.
+    spark.conf.set(Sessions.TrackRowsKey, "true")
     // same warmup as Bench: without it, the 1× column of whichever query
     // runs first absorbs JVM/codegen startup, polluting cross-session
     // comparisons of absolute 1× times (round-16 poison sweeps)
@@ -235,7 +235,7 @@ object ScaleBench {
       // in total input), not with total input; a linear-in-input state
       // row is an unbounded-state defect at 100 TB (r16 verdict item 4)
       val isStream = name.startsWith("x_stream")
-      val stateAt = scala.collection.mutable.ArrayBuffer[(Int, Double, Long, Long)]()
+      val stateAt = scala.collection.mutable.ArrayBuffer[(Int, Double, Option[Long], Long)]()
       def median(dir: String): Double = {
         if (isStream) graft.queries.StreamMetrics.reset()
         val t = (1 to iters).map(_ => time(fn(spark, dir).count()))
@@ -268,15 +268,19 @@ object ScaleBench {
         val cols = tNs.map(t => f"$t%8.2f").mkString(" ")
         println(f"$name%-24s $t1%8.2f $cols  $exps")
         if (isStream && stateAt.size >= 2) {
-          def sExp(pick: ((Int, Double, Long, Long)) => Double): String =
+          def sExp(pick: ((Int, Double, Option[Long], Long)) => Double): String =
             stateAt.sliding(2).map { case scala.collection.Seq(a, b) =>
               val e = math.log(math.max(pick(b), 1.0) / math.max(pick(a), 1.0)) /
                 math.log(b._1.toDouble / a._1)
               f"${a._1}x->${b._1}x:$e%5.2f"
             }.mkString(" ")
           val sCols = stateAt.map { case (f, rps, sr, sb) =>
-            f"${f}x[rps=$rps%.0f rows=$sr b=$sb]" }.mkString(" ")
-          println(s"  state $name $sCols  rows-exp: ${sExp(_._3.toDouble)}" +
+            f"${f}x[rps=$rps%.0f rows=${sr.fold("untracked")(_.toString)} b=$sb]"
+          }.mkString(" ")
+          val rowsExp =
+            if (stateAt.forall(_._3.isDefined)) sExp(_._3.get.toDouble)
+            else "untracked"
+          println(s"  state $name $sCols  rows-exp: $rowsExp" +
             s"  bytes-exp: ${sExp(_._4.toDouble)}")
         }
       } catch { case e: Exception =>

@@ -18,13 +18,10 @@ import org.apache.spark.sql.SparkSession
   *    Worker from SPARK_HOME, so they need (a) this project's classes
   *    on their classpath and (b) the same JDK-17 --add-opens set the
   *    driver gets from build.sbt — both wired here, not in each main.
-  *  - `SPARK_GRAFT_STATE_PROVIDER` — `rocksdb` switches Structured
-  *    Streaming state stores to the RocksDB provider (the production
-  *    choice for large state at 100 TB: state lives off-heap/on-disk
-  *    with changelog/snapshot persistence instead of in-memory
-  *    HashMaps). Any other non-empty value is taken as a provider FQCN.
-  *    Consumed by the streaming gates when they start queries; setting
-  *    it at session scope here makes EVERY gate inherit it.
+  *
+  * Every session built here also runs the one streaming state-store
+  * policy, [[StreamState]], at session scope, so every stream started
+  * from a library session inherits it.
   */
 object Sessions {
 
@@ -42,69 +39,38 @@ object Sessions {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
 
-  /** RocksDB changelog checkpointing — DEFAULT ON (round-18 flip of the
-    * round-17 opt-in). The default RocksDB checkpoint uploads a FULL
-    * snapshot per commit, a fixed per-batch cost that made the session
-    * gate superlinear at 400 micro-batches (wall exponent 1.21, fixed to
-    * 0.98 by changelog mode — measured r17); changelog is the production
-    * setting for high-frequency triggers over large state, so it is now
-    * the tested default. Snapshot mode stays reachable for A/B via
-    * `SPARK_GRAFT_ROCKSDB_CHANGELOG=0|off|false|snapshot`. */
-  def rocksdbChangelogEnabled: Boolean =
-    !Set("0", "off", "false", "snapshot").contains(
-      sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "1")
-        .trim.toLowerCase)
+  /** The [[StreamState]] entry naming the state-store provider. */
+  val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
-  /** RocksDB per-row count tracking (`trackTotalNumberOfRows`). When on
-    * (Spark's default), every state put/delete first GETS the existing
-    * key to keep `numRowsTotal` exact — ~2x write amplification on
-    * write-heavy state, purely for a metric. Default OFF here since
-    * round 22 (A/B on the full gate board: see OPTIMIZATION_r22.md);
-    * the cost is that StreamingQueryProgress reports numRowsTotal = -1,
-    * so the bench's peak-state-rows telemetry reads -1 under the
-    * default — re-enable via SPARK_GRAFT_ROCKSDB_TRACKROWS=1 when a
-    * round needs state-size evidence (rolls freeze under the explicit
-    * knob like every execution-shaping env var). */
-  def rocksdbTrackRowsEnabled: Boolean =
-    rocksdbTrackRowsForce.getOrElse(
-      Set("1", "on", "true").contains(
-        sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_TRACKROWS", "0")
-          .trim.toLowerCase))
+  /** The one [[StreamState]] entry a caller may override on its own
+    * session: ScaleBench turns tracking on to read exact state rows. */
+  val TrackRowsKey =
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
 
-  /** In-JVM override for [[rocksdbTrackRowsEnabled]]: ScaleBench pins it
-    * TRUE — its state-growth-exponent defense (r16 VERDICT item 4)
-    * reads peak `numRowsTotal` per scale point, which reports -1 when
-    * tracking is off. Wall-clock exponents stay internally consistent
-    * (every point pays the same tracking cost). */
-  @volatile private[graft] var rocksdbTrackRowsForce: Option[Boolean] = None
-
-  /** Resolved state-store provider FQCN from SPARK_GRAFT_STATE_PROVIDER.
-    * DEFAULT: RocksDB since round 22 (previously Spark's HDFSBacked
-    * in-memory provider). Two reasons, in order:
-    *  - 100 TB posture: HDFSBacked keeps every state row in executor
-    *    heap HashMaps — the documented OOM source for large state;
-    *    RocksDB (with changelog checkpointing, default on since r18)
-    *    is the production provider for state that outgrows the heap.
-    *  - Measured at gate scale (round 22, two interleaved full
-    *    x_stream board pairs at sf0.1/32 cores, min basis): RocksDB
-    *    wins the gate total 43.7/50.4 → 41.2/45.1 s, geomean 1.07x —
-    *    window family 1.17-1.23x, kNN gates 1.16-1.25x, stream-stream
-    *    joins 1.08-1.11x, enrich 1.14x; session family flat; the two
-    *    consistent losers (x_stream_restart_session 0.87x,
-    *    x_stream_window_disorder 0.87x) are RocksDB recovery/update
-    *    costs at toy state sizes, accepted for the scale posture.
-    * `SPARK_GRAFT_STATE_PROVIDER=hdfs` restores the old provider for
-    * A/Bs (rolls freeze under the explicit knob, as before). */
-  def stateProviderClass: Option[String] =
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").map(_.trim).filter(_.nonEmpty)
-      .orElse(Some("rocksdb"))
-      .map {
-        case "rocksdb" =>
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        case "hdfs" =>
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        case fqcn => fqcn
-      }
+  /** The streaming state-store policy, applied at session scope by
+    * [[build]] and by the few sessions built elsewhere (the test session,
+    * FaultInjection's crash child), so every stream runs the same one:
+    *  - RocksDB provider (default since round 22): state lives off-heap
+    *    and on disk instead of in executor-heap HashMaps, the documented
+    *    OOM source for large state. On the 15-gate board (two interleaved
+    *    pairs, sf0.1, 32 cores, min basis) it won the gate total 1.07x
+    *    geomean; the two small-state losers (restart_session,
+    *    window_disorder 0.87x) are recovery costs accepted for scale.
+    *  - Changelog checkpointing (round 18): the default RocksDB commit
+    *    uploads a full snapshot per micro-batch, which made the
+    *    400-batch session gate superlinear (wall exponent 1.21, 0.98 with
+    *    changelog; measured round 17).
+    *  - No row-count tracking (round 22): tracking GETs the existing key
+    *    before every state write, about 2x write amplification purely to
+    *    keep `numRowsTotal` exact. Progress then reads 0 rows however
+    *    large the state, which [[graft.queries.StreamMetrics]] reports as
+    *    untracked. */
+  val StreamState: Map[String, String] = Map(
+    ProviderKey ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true",
+    TrackRowsKey -> "false")
 
   /** Executor-JVM wiring a `local-cluster[...]` master needs when the
     * driver was not launched by spark-submit. Executor JVMs are spawned
@@ -137,7 +103,7 @@ object Sessions {
 
   /** Build the standard harness session: `cpus` threads (or the
     * SPARK_GRAFT_MASTER override), `cpus` shuffle partitions, AQE, UTC,
-    * no UI. */
+    * no UI, and the [[StreamState]] policy. */
   def build(cpus: String): SparkSession = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     var b = SparkSession.builder()
@@ -146,11 +112,10 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(StreamState)
     if (master.startsWith("local-cluster"))
       b = wireLocalCluster(b,
         sys.env.get("SPARK_GRAFT_EXECUTOR_MEM").filter(_.nonEmpty))
-    stateProviderClass.foreach(p =>
-      b = b.config("spark.sql.streaming.stateStore.providerClass", p))
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

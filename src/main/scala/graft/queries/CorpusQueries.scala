@@ -350,65 +350,19 @@ object CorpusQueries {
     s.read.parquet(run.resolve("out").toString)
   }
 
-  /** State partitions for the streaming gates: 4 at gate scale (the
-    * round-12 sweep's winner — see [[runToCompletion]]), overridable via
-    * SPARK_GRAFT_STREAM_PARTS so ScaleBench can demonstrate the
-    * documented cluster-side mitigation (state partitions sized to state
-    * VOLUME: at 100× events the 4-partition pin is the session gate's
-    * bottleneck, and 32 is the right setting there — measured in
-    * PLANS.md round 13). Output is partition-count independent. */
-  private def streamParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")
-
-  /** Run a streaming `start()` under the gates' streaming conf: state
-    * partitions pinned to [[streamParts]] and — when
-    * SPARK_GRAFT_STATE_PROVIDER is set (round-14: RocksDB parity) — the
-    * state-store provider class, both restored immediately after start
-    * (streaming captures conf at start; later batch queries see the
-    * originals). One definition so the provider knob reaches EVERY gate
-    * (continuous, restart phases, tests with their own sessions) and
-    * the single-threaded-driver conf-mutation caveat documented at the
-    * original site lives in one place. */
+  /** Run a streaming `start()` with the gates' state partitions pinned to
+    * 4 (the round-12 sweep's winner — see [[runToCompletion]]), restored
+    * immediately after start (streaming captures conf at start; later
+    * batch queries see the original). The state-store policy itself is
+    * session scope ([[graft.Sessions.StreamState]]). One definition so
+    * every gate (continuous, restart phases, fault injection) runs the
+    * same partitioning, and the single-threaded-driver conf-mutation
+    * caveat documented at [[runToCompletion]] lives in one place. */
   private[graft] def startWithStreamConf[T](s: SparkSession)(start: => T): T = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    // RocksDB changelog checkpointing — DEFAULT ON since round 18 (see
-    // Sessions.rocksdbChangelogEnabled for the r17 measurement that
-    // motivated the flip; snapshot mode reachable via
-    // SPARK_GRAFT_ROCKSDB_CHANGELOG=snapshot). Set EXPLICITLY both ways
-    // so the gates' mode never depends on the Spark build's default.
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val wantCl = graft.Sessions.rocksdbChangelogEnabled
-    // RocksDB row-count tracking (see Sessions.rocksdbTrackRowsEnabled):
-    // set EXPLICITLY both ways so the gates' write path never depends on
-    // the Spark build's default.
-    val trKey =
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-    val wantTr = graft.Sessions.rocksdbTrackRowsEnabled
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(provKey)
-    val prevCl = s.conf.getOption(clKey)
-    val prevTr = s.conf.getOption(trKey)
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    graft.Sessions.stateProviderClass.foreach(s.conf.set(provKey, _))
-    s.conf.set(clKey, wantCl.toString)
-    s.conf.set(trKey, wantTr.toString)
+    s.conf.set("spark.sql.shuffle.partitions", "4")
     try start
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      if (graft.Sessions.stateProviderClass.isDefined) prevProv match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-      prevCl match {
-        case Some(p) => s.conf.set(clKey, p)
-        case None => s.conf.unset(clKey)
-      }
-      prevTr match {
-        case Some(p) => s.conf.set(trKey, p)
-        case None => s.conf.unset(trKey)
-      }
-    }
+    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
   /** Run a streaming aggregation to completion into a memory sink

@@ -13,16 +13,28 @@ package graft.queries
   */
 object StreamMetrics {
   private final case class Acc(rows: Long, ms: Long,
-                               stateRows: Long, stateBytes: Long)
+                               stateRows: Option[Long], stateBytes: Long)
   private val acc =
     new java.util.concurrent.ConcurrentHashMap[String, Acc]()
+
+  /** Whether `q`'s state operators count their rows. Without row-count
+    * tracking, which the library policy turns off
+    * ([[graft.Sessions.StreamState]]), each RocksDB store reports -1
+    * rows; Spark's sum metric drops negative values, so progress reads
+    * 0 however large the state. Read from the query's session, where
+    * the policy is set once per session. */
+  private def rowsTracked(q: org.apache.spark.sql.streaming.StreamingQuery): Boolean = {
+    val conf = q.sparkSession.conf
+    !conf.get(graft.Sessions.ProviderKey, "").endsWith("RocksDBStateStoreProvider") ||
+      conf.get(graft.Sessions.TrackRowsKey, "true").toBoolean
+  }
 
   /** Record a finished streaming query's progress under the GATE name
     * (sink names arrive as `<gate>_sink` and are stripped). State sizes
     * are the run's PEAK (max over triggers of the summed state
-    * operators) — the figure a capacity plan needs; provider-agnostic
-    * (`numRowsTotal` / `memoryUsedBytes` exist for both HDFSBacked and
-    * RocksDB providers). */
+    * operators) — the figure a capacity plan needs. State rows are
+    * None (untracked) unless [[rowsTracked]]; record a query before
+    * changing its session's state-store conf. */
   def record(sinkName: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val name = sinkName.stripSuffix("_sink")
     val ps = q.recentProgress
@@ -44,13 +56,15 @@ object StreamMetrics {
       Option(p.durationMs.get("triggerExecution"))
         .map(_.longValue).getOrElse(0L)).sum
     val peakRows =
-      if (ps.isEmpty) 0L else ps.map(_.stateOperators.map(_.numRowsTotal).sum).max
+      if (!rowsTracked(q)) None
+      else Some(ps.map(_.stateOperators.map(_.numRowsTotal).sum)
+        .maxOption.getOrElse(0L))
     val peakBytes =
       if (ps.isEmpty) 0L else ps.map(_.stateOperators.map(_.memoryUsedBytes).sum).max
     if (rows > 0 && ms > 0)
       acc.merge(name, Acc(rows, ms, peakRows, peakBytes),
         (a, b) => Acc(a.rows + b.rows, a.ms + b.ms,
-          math.max(a.stateRows, b.stateRows),
+          for (x <- a.stateRows; y <- b.stateRows) yield math.max(x, y),
           math.max(a.stateBytes, b.stateBytes)))
   }
 
@@ -60,9 +74,9 @@ object StreamMetrics {
     acc.asScala.map { case (k, a) => k -> a.rows * 1000.0 / a.ms }.toMap
   }
 
-  /** gate → (rows/sec, peak state rows, peak state bytes) for the
-    * stderr summary table (PLANS state-size evidence). */
-  def summary: Seq[(String, Double, Long, Long)] = {
+  /** gate → (rows/sec, peak state rows or None if untracked, peak state
+    * bytes) for the stderr summary table (PLANS state-size evidence). */
+  def summary: Seq[(String, Double, Option[Long], Long)] = {
     import scala.jdk.CollectionConverters._
     acc.asScala.toSeq.sortBy(_._1).map { case (k, a) =>
       (k, a.rows * 1000.0 / a.ms, a.stateRows, a.stateBytes) }

@@ -16,8 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `stream`: same kill, mid-stream, on the production append gate
   *    (`x_stream_window_append`) — state-store recovery: the dead
   *    executor's loaded state is gone; the replacement must reload it
-  *    from the checkpoint (run with SPARK_GRAFT_STATE_PROVIDER=rocksdb
-  *    for the production provider).
+  *    from the checkpoint.
   *  - `stream-total`: SIGKILL EVERY executor at once mid-stream (node
   *    preemption / spot reclaim): zero survivors carry loaded state, the
   *    app must finish on Master-relaunched executors — exercised on the
@@ -156,19 +155,11 @@ object FaultInjection {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the parent resumes under the same policy, so the crash certifies
+      // a same-mode recovery rather than a conf migration
+      .config(graft.Sessions.StreamState)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.Sessions.stateProviderClass.foreach(p =>
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", p))
-    // mirror the changelog-checkpointing mode in the CHILD too (default
-    // ON since r18 — Sessions.rocksdbChangelogEnabled): without this the
-    // child's phase 1 would write snapshot-mode checkpoints while the
-    // parent's resume runs changelog-mode — a useful conf-migration
-    // recovery case (kept green in PLANS r17) but not the pure
-    // same-mode crash certification the default run asserts
-    s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-      ".changelogCheckpointing.enabled",
-      graft.Sessions.rocksdbChangelogEnabled.toString)
     val schema = org.apache.spark.sql.types.DataType.fromJson(
       new String(java.nio.file.Files.readAllBytes(
         runDir.resolve("schema.json")), "UTF-8"))

@@ -52,11 +52,9 @@ object ScanAudit {
         if (!seen.contains(rel)) {
           seen += rel
           c.cachedRels += 1
-          im.relation.cachedPlan match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              tally(a.inputPlan, c, seen)
-            case cp => tally(cp, c, seen)
-          }
+          // an adaptive cached plan is walked through its initialPlan
+          // like the top level, so its exchanges and sorts count too
+          tally(im.relation.cachedPlan, c, seen)
         }
       case _ => ()
     }

@@ -155,27 +155,20 @@ class BenchAdjudicationSpec extends AnyFunSuite {
 
   test("rollEligibleConfig: default env eligible; every shaping knob freezes rolls") {
     assert(Bench.rollEligibleConfig(Map.empty))
-    assert(Bench.rollEligibleConfig(Map("SPARK_GRAFT_CPUS" -> "32",
-      "SPARK_GRAFT_ROCKSDB_CHANGELOG" -> "1")))
+    assert(Bench.rollEligibleConfig(Map("SPARK_GRAFT_CPUS" -> "32")))
     assert(!Bench.rollEligibleConfig(Map(
       "SPARK_GRAFT_MASTER" -> "local-cluster[2,8,8192]")))
     assert(!Bench.rollEligibleConfig(Map("SPARK_GRAFT_CPUS" -> "8")))
     assert(!Bench.rollEligibleConfig(Map(
       "SPARK_GRAFT_STREAM_FILES" -> "span:648000")))
-    assert(!Bench.rollEligibleConfig(Map(
-      "SPARK_GRAFT_STATE_PROVIDER" -> "rocksdb")))
-    assert(!Bench.rollEligibleConfig(Map(
-      "SPARK_GRAFT_ROCKSDB_CHANGELOG" -> "snapshot")))
     // ADVICE r19 (medium): the remaining execution-shaping knobs freeze
-    // rolls too — a smaller corpus, a different state-partition count,
-    // or a different iteration count each sets records a default run
-    // can never match
+    // rolls too — a smaller corpus or a different iteration count each
+    // sets records a default run can never match
     assert(!Bench.rollEligibleConfig(Map(
       "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.01")))
     assert(Bench.rollEligibleConfig(Map(
       "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.1")),
       "explicitly naming the default corpus stays eligible")
-    assert(!Bench.rollEligibleConfig(Map("SPARK_GRAFT_STREAM_PARTS" -> "16")))
     assert(!Bench.rollEligibleConfig(Map("SPARK_GRAFT_BENCH_ITERS" -> "6")))
     assert(Bench.rollEligibleConfig(Map("SPARK_GRAFT_BENCH_ITERS" -> "3")),
       "explicitly naming the default iteration count stays eligible")

@@ -454,25 +454,6 @@ class CorpusStatsSpec extends SparkSpec {
       s"$out vs ($d1, $d2)")
   }
 
-  test("wordpieceTrain: identical merge table under every score-join strategy (r22)") {
-    // The per-round argmax frame is parameterized by how the symbol
-    // counts attach (collect→LocalRelation / explicit broadcast / plain
-    // join — r22 A/B, graft.tools.WordpieceBench); the learned artifact
-    // must be bit-identical under all three, including tie rounds and
-    // early exhaustion.
-    val df = Seq((1L, "qu qu the the the the abab aab"), (2L, "cd bbbbb"))
-      .toDF("doc_id", "text")
-    val tables = Seq("collect", "broadcast", "plain").map { st =>
-      st -> CorpusStats
-        .wordpieceTrain(df, "text", 6, forceDecimalTier = false, st)
-        .orderBy("step")
-        .as[(Long, String, String, String, Long, Long)].collect().toSeq
-    }
-    assert(tables.head._2.nonEmpty)
-    for ((st, t) <- tables.tail)
-      assert(t == tables.head._2, s"strategy $st diverged from collect")
-  }
-
   test("wordpieceTrain ranks by likelihood, not frequency (qu beats the)") {
     // tokens: "qu"×2, "the"×4. Round-1 pair counts: (t,h)=4, (h,e)=4,
     // (q,u)=2 — frequency (BPE) would merge (h,e) (tie → lexicographic);

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one JVM-wide SparkSession across suites (getOrCreate). */
+/** Shared session: one JVM-wide SparkSession across suites (getOrCreate),
+  * running the library's streaming state-store policy. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -14,6 +15,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.warehouse.dir",
       s"/tmp/graft-warehouse-${java.lang.ProcessHandle.current().pid()}")
     .config("spark.ui.enabled", "false")
+    .config(Sessions.StreamState)
     .getOrCreate()
 
   def sf0: String = "/root/testdata/sf0.001"

@@ -830,27 +830,28 @@ class StreamingSpec extends SparkSpec {
 
   test("RocksDB state-store provider: engaged (custom metrics present) " +
       "and output-identical to the default provider") {
-    // Production 100 TB streams run RocksDB state stores, not the
+    // Production 100 TB streams run RocksDB state stores, not Spark's
     // default in-memory HDFSBacked provider — round-14 verdict item 2.
     // Two claims: (a) setting the provider conf actually ENGAGES
     // RocksDB (asserted via the provider-specific custom metrics in the
     // query progress — a typo'd FQCN would throw at start, but a
-    // conf-plumbing bug that silently kept the default must fail
+    // conf-plumbing bug that silently kept the other provider must fail
     // here), and (b) the emitted watermark+append set is identical.
+    // Both runs name their provider: the session default is RocksDB.
     val src = Tables.load(spark, sf0, "events")
       .select(col("ts").cast("timestamp").as("ts"), col("event_type"),
         col("value"))
     val inDir = tempDir("graft-rocks-in")
     src.coalesce(2).write.mode("overwrite").parquet(inDir.toString)
-    def run(provider: Option[String]): (Set[(String, String, Long)],
+    def run(provider: String): (Set[(String, String, Long)],
         Set[String]) = {
       val provKey = "spark.sql.streaming.stateStore.providerClass"
       val prev = spark.conf.getOption(provKey)
-      provider.foreach(spark.conf.set(provKey, _))
+      spark.conf.set(provKey, provider)
       try {
         val stream = spark.readStream.schema(src.schema).format("parquet")
           .option("maxFilesPerTrigger", "1").load(inDir.toString)
-        val name = s"rocks_parity_${provider.isDefined}"
+        val name = s"rocks_parity_${provider.split('.').last}"
         spark.streams.active
           .filter(q => Option(q.name).contains(name)).foreach(_.stop())
         val q = stream.withWatermark("ts", "2 hours")
@@ -873,16 +874,17 @@ class StreamingSpec extends SparkSpec {
         case None => spark.conf.unset(provKey)
       }
     }
-    val (defaultOut, defaultMetrics) = run(None)
-    val (rocksOut, rocksMetrics) = run(Some(
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+    val (hdfsOut, hdfsMetrics) = run(
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    val (rocksOut, rocksMetrics) = run(
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     assert(rocksMetrics.exists(_.toLowerCase.contains("rocksdb")),
       s"RocksDB provider not engaged — state metrics: $rocksMetrics")
-    assert(!defaultMetrics.exists(_.toLowerCase.contains("rocksdb")),
-      "default run unexpectedly used RocksDB (conf leaked)")
-    assert(rocksOut == defaultOut && rocksOut.nonEmpty,
+    assert(!hdfsMetrics.exists(_.toLowerCase.contains("rocksdb")),
+      "HDFSBacked run unexpectedly used RocksDB (conf ignored)")
+    assert(rocksOut == hdfsOut && rocksOut.nonEmpty,
       s"provider changed the emitted set: rocks=${rocksOut.size} " +
-        s"default=${defaultOut.size}")
+        s"hdfs=${hdfsOut.size}")
   }
 
   test("bounded-disorder replay (disorder < delay) emits exactly the " +

@@ -73,10 +73,8 @@ rm -rf "$LC_OUT"
 if [ "$QUICK" = "1" ]; then
   echo "=== certify (QUICK) 1/2: fault smoke (3 configurations) + iterative oracles ==="
   SPARK_GRAFT_MASTER='local-cluster[2,8,8192]' \
-  SPARK_GRAFT_STATE_PROVIDER=rocksdb \
   sbt -batch "runMain graft.tools.FaultInjection batch $SF 20260815"
   SPARK_GRAFT_MASTER='local-cluster[2,8,8192]' \
-  SPARK_GRAFT_STATE_PROVIDER=rocksdb \
   sbt -batch "runMain graft.tools.FaultInjection stream $SF 20260815"
   sbt -batch "runMain graft.tools.FaultInjection batch-write $SF"
   ITER_OUT=$(mktemp -d /tmp/graft-certify-iter-XXXX)

@@ -15,21 +15,15 @@ SEED=${2:-20260815}
 
 echo "== batch + stream executor-kill under local-cluster[2,8,8192] + RocksDB =="
 SPARK_GRAFT_MASTER='local-cluster[2,8,8192]' \
-SPARK_GRAFT_STATE_PROVIDER=rocksdb \
 sbt -batch "runMain graft.tools.FaultInjection batch $SF $SEED"
 SPARK_GRAFT_MASTER='local-cluster[2,8,8192]' \
-SPARK_GRAFT_STATE_PROVIDER=rocksdb \
 sbt -batch "runMain graft.tools.FaultInjection stream $SF $SEED"
 SPARK_GRAFT_MASTER='local-cluster[2,8,8192]' \
-SPARK_GRAFT_STATE_PROVIDER=rocksdb \
 sbt -batch "runMain graft.tools.FaultInjection stream-total $SF $SEED"
 
 echo "== non-graceful driver halt + checkpoint recovery (RocksDB) =="
-SPARK_GRAFT_STATE_PROVIDER=rocksdb \
 sbt -batch "runMain graft.tools.FaultInjection crash $SF"
-SPARK_GRAFT_STATE_PROVIDER=rocksdb \
 sbt -batch "runMain graft.tools.FaultInjection crash-early $SF"
-SPARK_GRAFT_STATE_PROVIDER=rocksdb \
 sbt -batch "runMain graft.tools.FaultInjection crash-session $SF"
 
 echo "== batch-write tear: writer JVM halt(9) mid-df.write.parquet =="
