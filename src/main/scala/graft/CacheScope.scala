@@ -23,7 +23,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object CacheScope {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-  private val session = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
 
   /** Persist `df` and register it for later release. Re-caching an
     * already-cached plan is a CacheManager no-op, so calling ops twice on
@@ -37,24 +36,6 @@ object CacheScope {
     p
   }
 
-  /** SESSION-tier persist: survives [[releaseAll]], released only by
-    * [[releaseSession]]. For an op's slim PRODUCT relation that several
-    * independent queries in one session re-derive identically (the
-    * verified near-dup pair graph is the canonical case: three gate
-    * queries consume it, and on a cluster you would persist it to
-    * parquet once between pipeline stages). Contract: session-tier
-    * relations must be small (ids + a metric — never text, shingles, or
-    * embeddings), so parking them across queries cannot cause storage
-    * eviction pressure.
-    */
-  private[graft] def cacheSession(
-      df: DataFrame,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    val p = df.persist(level)
-    session.add(p)
-    p
-  }
-
   /** Register an ALREADY-persisted (or checkpoint-backed) frame for
     * release without touching its storage level — used by iterative ops
     * whose surviving round is already materialized.
@@ -64,22 +45,17 @@ object CacheScope {
   /** Number of registered (not yet released) cached intermediates. */
   def liveCount: Int = live.size
 
-  /** Number of registered session-tier relations. */
-  def sessionLiveCount: Int = session.size
+  /** Always 0 (there is no session tier); `perfbench` still reads it. */
+  def sessionLiveCount: Int = 0
 
-  /** Unpersist every registered PER-QUERY intermediate. Session-tier
-    * relations survive — release them with [[releaseSession]] (e.g.
-    * between corpora). Safe to call at any point: a plan re-run after
-    * release simply re-materializes lazily.
+  /** Unpersist every registered intermediate. Safe to call at any point:
+    * a plan re-run after release simply re-materializes lazily.
     */
   def releaseAll(blocking: Boolean = false): Unit = {
     var d = live.poll()
     while (d != null) { d.unpersist(blocking); d = live.poll() }
   }
 
-  /** Unpersist every session-tier relation. */
-  def releaseSession(blocking: Boolean = false): Unit = {
-    var d = session.poll()
-    while (d != null) { d.unpersist(blocking); d = session.poll() }
-  }
+  /** No-op (there is no session tier); `perfbench.Common.releaseCaches` still calls it. */
+  def releaseSession(blocking: Boolean = false): Unit = ()
 }

@@ -171,8 +171,7 @@ object Dedup {
     */
   def jaccardPairsExact(df: DataFrame, textCol: String, idCol: String,
                         blockCols: Seq[String] = Nil, shingleSize: Int = 3,
-                        threshold: Double = 0.5,
-                        sessionProduct: Boolean = false): DataFrame = {
+                        threshold: Double = 0.5): DataFrame = {
     val tEff = threshold - 1e-6
     val (base, _, prefix) =
       shinglePrefixRelations(df, textCol, idCol, blockCols, shingleSize, tEff)
@@ -213,15 +212,8 @@ object Dedup {
     // builder, threshold re-filters, and repeated invocations on the same
     // corpus all share one candidate join + verification instead of
     // re-running them. Pairs are three slim columns; at 100 TB this is the
-    // relation you would persist to parquet between pipeline stages —
-    // `sessionProduct = true` opts the product into the SESSION cache
-    // tier (survives CacheScope.releaseAll) so independent queries over
-    // the same corpus share one pair-gen build, the in-memory analogue
-    // of that between-stage parquet persist.
-    val tier: DataFrame => DataFrame =
-      if (sessionProduct) graft.CacheScope.cacheSession(_)
-      else graft.CacheScope.cache(_)
-    tier(candByA
+    // relation you would persist to parquet between pipeline stages.
+    graft.CacheScope.cache(candByA
       .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .select(col("id_a"), col("sh_a"), explode(col("__bs")).as("id_b"))
       .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))

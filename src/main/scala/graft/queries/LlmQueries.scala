@@ -21,14 +21,6 @@ object LlmQueries {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
-  /** THE near-dup pair graph of the corpus — one definition shared by
-    * every consumer (`d_ngram_jaccard`, `d_dedup_clusters`,
-    * `d_cluster_keep_best`) so their reuse of the expensive verified-pair
-    * relation is structural: `jaccardPairsExact` caches its product, and
-    * because all three call sites build the IDENTICAL downstream plan
-    * through this helper, CacheManager reuse can no longer be broken by
-    * alias or parameter drift between hand-copied variants.
-    */
   /** Driver-held coarse/PQ model vectors: the first `n` embeddings in
     * vec_id order — the ONE construction every IVF/PQ gate (batch and
     * streaming) and the recall gate build their index from, so the
@@ -75,17 +67,20 @@ object LlmQueries {
       cb, m = 8, k = 5, shortlist = 20)
   }
 
+  /** THE near-dup pair graph of the corpus — one definition shared by
+    * every consumer (`d_ngram_jaccard`, `d_dedup_clusters`,
+    * `d_soft_weights`, `d_cluster_keep_best`) so their plans cannot drift
+    * apart through alias or parameter changes in hand-copied variants.
+    * `jaccardPairsExact` caches its product until the next
+    * `CacheScope.releaseAll`, so the bench's cold run of each consumer
+    * pays pair generation and its warm runs reuse the product.
+    */
   private def jacPairs(s: SparkSession, dir: String): DataFrame =
     Dedup.jaccardPairsExact(
         docs(s, dir).select(col("doc_id"), col("source"), col("lang"),
           col("text")),
         "text", "doc_id", Seq("source", "lang"),
-        shingleSize = 3, threshold = 0.2,
-        // the verified-pair product lives in the SESSION cache tier:
-        // slim (id, id, jac) rows, shared by all three consumers across
-        // CacheScope.releaseAll boundaries — one pair-gen build per
-        // session instead of one per consuming query
-        sessionProduct = true)
+        shingleSize = 3, threshold = 0.2)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jac"))
       .filter(col("jac") >= 0.2)
 

@@ -98,7 +98,6 @@ object ScanAudit {
       graft.CacheScope.releaseAll()
       spark.sharedState.cacheManager.clearCache()
     }
-    graft.CacheScope.releaseSession()
     spark.stop()
   }
 }

@@ -200,27 +200,6 @@ class LlmOpsSpec extends SparkSpec {
     assert(Dedup.minhashLshPairs(df, "text", "id").count() >= 1)
   }
 
-  test("CacheScope session tier: survives releaseAll, freed by releaseSession") {
-    CacheScope.releaseAll(blocking = true)
-    CacheScope.releaseSession(blocking = true)
-    val df = Seq((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "x y z w v u"))
-      .toDF("id", "text")
-    val pairs = Dedup.jaccardPairsExact(df, "text", "id",
-      shingleSize = 2, threshold = 0.2, sessionProduct = true)
-    assert(pairs.count() >= 1)
-    assert(CacheScope.sessionLiveCount == 1)
-    assert(CacheScope.liveCount > 0) // internal shingle/prefix caches
-    CacheScope.releaseAll(blocking = true)
-    assert(CacheScope.liveCount == 0)
-    // the product survives the per-query release...
-    assert(CacheScope.sessionLiveCount == 1)
-    assert(pairs.storageLevel.useMemory || pairs.storageLevel.useDisk)
-    CacheScope.releaseSession(blocking = true)
-    assert(CacheScope.sessionLiveCount == 0)
-    // ...and a released product still re-materializes lazily
-    assert(pairs.count() >= 1)
-  }
-
   test("simhash: identical→0 hamming, near-dup small, unrelated large") {
     val a = (1 to 50).map(i => s"tok$i").mkString(" ")
     val b = (1 to 48).map(i => s"tok$i").mkString(" ") + " x y"

@@ -37,7 +37,6 @@ class PlanFingerprintSpec extends SparkSpec {
       // query would swap InMemoryTableScan into this one's plan and make
       // the fingerprint depend on evaluation ORDER instead of the query
       CacheScope.releaseAll()
-      CacheScope.releaseSession()
       spark.sharedState.cacheManager.clearCache()
       val fp = graft.tools.PlanFingerprint.of(
         SparkEntry.queries(n)(spark, sf0))
@@ -47,7 +46,6 @@ class PlanFingerprintSpec extends SparkSpec {
   test("headline physical plans match the committed fingerprint fixture") {
     val got = currentFingerprints()
     CacheScope.releaseAll()
-    CacheScope.releaseSession()
     spark.sharedState.cacheManager.clearCache()
     if (sys.env.get("GRAFT_REGEN_PLANS").contains("1")) {
       java.nio.file.Files.createDirectories(fixturePath.getParent)
@@ -89,7 +87,6 @@ class PlanFingerprintSpec extends SparkSpec {
     val a = currentFingerprints().toMap
     val b = currentFingerprints().toMap
     CacheScope.releaseAll()
-    CacheScope.releaseSession()
     spark.sharedState.cacheManager.clearCache()
     val unstable = a.keys.filter(k => a(k) != b(k))
     assert(unstable.isEmpty,
