@@ -76,9 +76,12 @@ object ControlOps {
       s"not can only wrap a predicate command (equals/contains/...), got '${other.name}'")
   }
 
-  /** `if { conditions then else }`: conditional sub-pipeline. Column-level
-    * effects compile to `when(cond, then).otherwise(else)`; record-level
-    * routing to two filtered branches unioned (no shuffle — union is narrow).
+  /** `if { conditions then else }` as two filtered copies of the input,
+    * each run through its branch and unioned (no shuffle — union is narrow,
+    * but each copy re-runs the plan upstream of it). A null condition takes
+    * `else`. The morphline compiler fuses branches that only assign
+    * columns into one pass (`PipelineSpec`); this form serves opaque
+    * branch functions and branches holding record-level commands.
     */
   def ifThenElse(cond: Column, thenOps: DataFrame => DataFrame,
                  elseOps: DataFrame => DataFrame): Op =
@@ -88,8 +91,11 @@ object ControlOps {
     }
 
   /** `tryRules`: first-matching-rule dispatch. Each record is routed to the
-    * first rule whose condition matches (ordered `when` semantics over
-    * branches).
+    * first rule whose condition holds (null counts as false), else to
+    * `catchAll` when given, and is dropped otherwise. Built like
+    * [[ifThenElse]]: one filtered copy per rule, unioned, for opaque and
+    * record-level branches; the morphline compiler fuses column-only rules
+    * into one pass.
     */
   def tryRules(rules: Seq[(Column, DataFrame => DataFrame)],
                catchAll: Option[DataFrame => DataFrame] = None): Op =

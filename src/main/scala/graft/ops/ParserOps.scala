@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.pipeline.Op
+import graft.pipeline.{Op, ProjectionOp}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -16,8 +16,9 @@ object ParserOps {
   /** `readJson` (reference: config/cloudsolr.conf:30): parse a JSON string
     * column into a struct column with an explicit schema.
     */
-  def readJson(src: String, schema: DataType, out: String = "json"): Op =
-    Op("readJson")(df => df.withColumn(out, from_json(col(src).cast("string"), schema)))
+  def readJson(src: String, schema: DataType, out: String = "json"): ProjectionOp =
+    Op.projection("readJson")(_ =>
+      Seq(out -> from_json(col(src).cast("string"), schema)))
 
   /** Schema-free `readJson`: sample-infer the schema at plan time (the
     * schemaless `Map` payload case, Records.java:47-69). Inference reads a
@@ -96,10 +97,10 @@ object ParserOps {
     }
 
   /** `readBlob`/`readClob`: whole payload as one binary/string field. */
-  def readBlob(src: String, out: String = "blob"): Op =
-    Op("readBlob")(df => df.withColumn(out, col(src).cast("binary")))
-  def readClob(src: String, out: String = "clob"): Op =
-    Op("readClob")(df => df.withColumn(out, col(src).cast("string")))
+  def readBlob(src: String, out: String = "blob"): ProjectionOp =
+    Op.projection("readBlob")(_ => Seq(out -> col(src).cast("binary")))
+  def readClob(src: String, out: String = "clob"): ProjectionOp =
+    Op.projection("readClob")(_ => Seq(out -> col(src).cast("string")))
 
   /** `separateAttachments`: fan out one record per attachment (1→N). */
   def separateAttachments(arrayField: String, out: String): Op =

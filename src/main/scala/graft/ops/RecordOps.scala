@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.functions.{Grok, Interp, TimeFunctions}
-import graft.pipeline.Op
+import graft.pipeline.{Op, ProjectionOp}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -14,47 +14,43 @@ object RecordOps {
   /** `setValues` (reference: config/cloudsolr.conf:52-56): assign fields;
     * values may interpolate `@{field}` refs; replaces existing values.
     */
-  def setValues(assignments: (String, String)*): Op =
-    Op("setValues") { df =>
-      assignments.foldLeft(df) { case (d, (field, template)) =>
-        d.withColumn(field,
-          Interp.interpolate(template, Some(d.columns.toSet)))
+  def setValues(assignments: (String, String)*): ProjectionOp =
+    Op.projection("setValues") { df =>
+      // each template sees the input columns and the fields assigned
+      // before it
+      val known = df.columns.toSet
+      assignments.zipWithIndex.map { case ((field, template), i) =>
+        field -> Interp.interpolate(template,
+          Some(known ++ assignments.take(i).map(_._1)))
       }
     }
 
   /** Typed variant: assign arbitrary Column expressions. */
-  def setColumns(assignments: (String, Column)*): Op =
-    Op("setColumns") { df =>
-      assignments.foldLeft(df) { case (d, (f, c)) => d.withColumn(f, c) }
+  def setColumns(assignments: (String, Column)*): ProjectionOp =
+    Op.projection("setColumns")(_ => assignments)
+
+  /** A field as a multi-valued list: an absent field is empty, a scalar
+    * field a one-element array (morphline fields are List-valued,
+    * ToConnectDataBuilder.java:153-158).
+    */
+  private def valuesOf(df: DataFrame, field: String): Column =
+    if (!df.columns.contains(field)) array()
+    else df.schema(field).dataType match {
+      case _: org.apache.spark.sql.types.ArrayType => col(field)
+      case _ => array(col(field))
     }
 
-  /** `addValues`: append to a multi-valued field (promotes scalar → array;
-    * morphline fields are List-valued, ToConnectDataBuilder.java:153-158).
-    */
-  def addValues(field: String, values: Column*): Op =
-    Op("addValues") { df =>
-      val base: Column =
-        if (!df.columns.contains(field)) array()
-        else df.schema(field).dataType match {
-          case _: org.apache.spark.sql.types.ArrayType => col(field)
-          case _ => array(col(field))
-        }
-      df.withColumn(field, concat(base, array(values: _*)))
-    }
+  /** `addValues`: append to a multi-valued field (promotes scalar → array). */
+  def addValues(field: String, values: Column*): ProjectionOp =
+    Op.projection("addValues")(df =>
+      Seq(field -> concat(valuesOf(df, field), array(values: _*))))
 
   /** `addValuesIfAbsent`: append only values not already present (same
     * scalar→array promotion and missing-field handling as [[addValues]]).
     */
-  def addValuesIfAbsent(field: String, values: Column*): Op =
-    Op("addValuesIfAbsent") { df =>
-      val base: Column =
-        if (!df.columns.contains(field)) array()
-        else df.schema(field).dataType match {
-          case _: org.apache.spark.sql.types.ArrayType => col(field)
-          case _ => array(col(field))
-        }
-      df.withColumn(field, array_union(base, array(values: _*)))
-    }
+  def addValuesIfAbsent(field: String, values: Column*): ProjectionOp =
+    Op.projection("addValuesIfAbsent")(df =>
+      Seq(field -> array_union(valuesOf(df, field), array(values: _*))))
 
   /** `removeFields` by exact name (drop). */
   def removeFields(fields: String*): Op =
@@ -67,8 +63,8 @@ object RecordOps {
     }
 
   /** `removeValues`: drop matching values inside an array field. */
-  def removeValues(field: String, value: Column): Op =
-    Op("removeValues")(df => df.withColumn(field, array_remove(col(field), value)))
+  def removeValues(field: String, value: Column): ProjectionOp =
+    Op.projection("removeValues")(_ => Seq(field -> array_remove(col(field), value)))
 
   /** `replaceValues` via regex within a string field = `findReplace`. */
   /** Kite's findReplace matches the pattern LITERALLY unless isRegex is
@@ -76,17 +72,16 @@ object RecordOps {
     * and the replacement are quoted, so a '$' or '\' in the replacement
     * is data, not a group reference. */
   def findReplace(field: String, pattern: String, replacement: String,
-                  isRegex: Boolean = false): Op =
+                  isRegex: Boolean = false): ProjectionOp =
     if (isRegex) findReplaceRegex(field, pattern, replacement)
     else findReplaceRegex(field,
       java.util.regex.Pattern.quote(pattern),
       java.util.regex.Matcher.quoteReplacement(replacement))
 
   private def findReplaceRegex(field: String, pattern: String,
-                               replacement: String): Op =
-    Op("findReplace") { df =>
-      df.withColumn(field, regexp_replace(col(field), pattern, replacement))
-    }
+                               replacement: String): ProjectionOp =
+    Op.projection("findReplace")(_ =>
+      Seq(field -> regexp_replace(col(field), pattern, replacement)))
 
   /** `split`: tokenize a string field into an array of values. */
   /** Kite's `split` treats the separator as a LITERAL unless isRegex is
@@ -94,11 +89,11 @@ object RecordOps {
     * take regexes, so a literal separator like `|` or `.` must be
     * Pattern.quote'd or it silently splits on the wrong boundaries. */
   def splitField(field: String, separator: String, outputField: String,
-                 isRegex: Boolean = false): Op =
-    Op("split") { df =>
+                 isRegex: Boolean = false): ProjectionOp =
+    Op.projection("split") { _ =>
       val sep =
         if (isRegex) separator else java.util.regex.Pattern.quote(separator)
-      df.withColumn(outputField, split(col(field), sep))
+      Seq(outputField -> split(col(field), sep))
     }
 
   /** `splitKeyValue`: parse `k=v` pair strings into a map. Separators are
@@ -111,8 +106,8 @@ object RecordOps {
     * multi-valued record field). */
   def splitKeyValue(field: String, outputField: String,
                     pairSep: String = ",", kvSep: String = "=",
-                    isRegex: Boolean = false): Op =
-    Op("splitKeyValue") { df =>
+                    isRegex: Boolean = false): ProjectionOp =
+    Op.projection("splitKeyValue") { _ =>
       val (p, k) =
         if (isRegex) (pairSep, kvSep)
         else (java.util.regex.Pattern.quote(pairSep),
@@ -128,7 +123,7 @@ object RecordOps {
       val lastWins = filter(entries, (e, i) =>
         !exists(slice(entries, i + lit(2), size(entries)),
           e2 => e2.getField("key") === e.getField("key")))
-      df.withColumn(outputField, map_from_entries(lastWins))
+      Seq(outputField -> map_from_entries(lastWins))
     }
 
   /** `translate`: dictionary lookup with default. Small dictionaries compile
@@ -136,10 +131,10 @@ object RecordOps {
     * broadcast join instead (see [[translateViaJoin]]).
     */
   def translate(field: String, dict: Map[String, String],
-                default: Column, outputField: String): Op =
-    Op("translate") { df =>
+                default: Column, outputField: String): ProjectionOp =
+    Op.projection("translate") { _ =>
       val m = typedLit(dict)
-      df.withColumn(outputField,
+      Seq(outputField ->
         coalesce(element_at(m, col(field).cast("string")), default))
     }
 
@@ -155,64 +150,63 @@ object RecordOps {
     }
 
   /** `toString` with optional trim (reference: TESTR/identity.conf:183-188). */
-  def toStringField(field: String, trimOutput: Boolean = false): Op =
-    Op("toString") { df =>
+  def toStringField(field: String, trimOutput: Boolean = false): ProjectionOp =
+    Op.projection("toString") { _ =>
       val c = col(field).cast("string")
       // full-whitespace trim (tabs/newlines too) — the reference trims with
       // Java String.trim, not the space-only SQL trim
-      df.withColumn(field,
-        if (trimOutput) regexp_replace(c, "^\\s+|\\s+$", "") else c)
+      Seq(field ->
+        (if (trimOutput) regexp_replace(c, "^\\s+|\\s+$", "") else c))
     }
 
   /** `toByteArray` / `decodeBase64` codecs. */
-  def toByteArray(field: String, charset: String = "UTF-8"): Op =
-    Op("toByteArray")(df => df.withColumn(field, encode(col(field), charset)))
+  def toByteArray(field: String, charset: String = "UTF-8"): ProjectionOp =
+    Op.projection("toByteArray")(_ => Seq(field -> encode(col(field), charset)))
   // try_to_binary, not unbase64: under ANSI, unbase64 of a malformed
   // payload throws IllegalArgumentException out of the scan and kills
   // the batch; the reference's DecodeBase64Builder fails the RECORD
   // (dropped / dead-lettered). Identical bytes for valid base64.
-  def decodeBase64(field: String): Op =
-    Op("decodeBase64")(df =>
-      df.withColumn(field, try_to_binary(col(field), lit("base64"))))
-  def encodeBase64(field: String): Op =
-    Op("encodeBase64")(df => df.withColumn(field, base64(col(field).cast("binary"))))
+  def decodeBase64(field: String): ProjectionOp =
+    Op.projection("decodeBase64")(_ =>
+      Seq(field -> try_to_binary(col(field), lit("base64"))))
+  def encodeBase64(field: String): ProjectionOp =
+    Op.projection("encodeBase64")(_ =>
+      Seq(field -> base64(col(field).cast("binary"))))
 
   /** `addCurrentTime` — nondeterministic by nature; mark tests accordingly. */
-  def addCurrentTime(field: String = "timestamp"): Op =
-    Op("addCurrentTime")(df => df.withColumn(field, current_timestamp()))
+  def addCurrentTime(field: String = "timestamp"): ProjectionOp =
+    Op.projection("addCurrentTime")(_ => Seq(field -> current_timestamp()))
 
   /** `addLocalHost`: hostname resolved ONCE on the driver and planted as a
     * literal (per-executor resolution would make sibling rows differ across
     * retries — the determinism caveat from SURVEY.md §2.B).
     */
-  def addLocalHost(field: String = "host"): Op = {
+  def addLocalHost(field: String = "host"): ProjectionOp = {
     val host = java.net.InetAddress.getLocalHost.getHostName
-    Op("addLocalHost")(df => df.withColumn(field, lit(host)))
+    Op.projection("addLocalHost")(_ => Seq(field -> lit(host)))
   }
 
   /** `generateUUID` (reference: config/cloudsolr.conf:57-61). Nondeterministic. */
-  def generateUUID(field: String): Op =
-    Op("generateUUID")(df => df.withColumn(field, expr("uuid()")))
+  def generateUUID(field: String): ProjectionOp =
+    Op.projection("generateUUID")(_ => Seq(field -> expr("uuid()")))
 
   /** Deterministic unique-key variant for testable/idempotent pipelines:
     * content-hash key (what `generateSolrSequenceKey` needs at scale — a
     * stable key makes sink writes idempotent across task retries).
     */
-  def deterministicKey(field: String, from: Column*): Op =
-    Op("deterministicKey") { df =>
-      df.withColumn(field, md5(concat_ws(" ", from: _*)))
-    }
+  def deterministicKey(field: String, from: Column*): ProjectionOp =
+    Op.projection("deterministicKey")(_ =>
+      Seq(field -> md5(concat_ws(" ", from: _*))))
 
   /** `convertTimestamp` (reference: config/cloudsolr.conf:43-51). */
   def convertTimestamp(field: String, inputFormats: Seq[String],
                        outputFormat: String, outputField: String,
                        inputTimezone: String = "UTC",
-                       outputTimezone: String = "UTC"): Op =
-    Op("convertTimestamp") { df =>
-      df.withColumn(outputField,
+                       outputTimezone: String = "UTC"): ProjectionOp =
+    Op.projection("convertTimestamp")(_ =>
+      Seq(outputField ->
         TimeFunctions.convertTimestamp(col(field), inputFormats, outputFormat,
-          inputTimezone, outputTimezone))
-    }
+          inputTimezone, outputTimezone)))
 
   /** `grok`: extract named fields via a grok expression. */
   def grok(field: String, grokExpr: String): Op =
@@ -248,36 +242,31 @@ object RecordOps {
   /** `extractURIComponents` (kite-core): decompose a URI field into
     * scheme/host/port/path/query/fragment columns via `parse_url`.
     */
-  def extractUriComponents(field: String, prefix: String = "uri_"): Op =
-    Op("extractURIComponents") { df =>
+  def extractUriComponents(field: String, prefix: String = "uri_"): ProjectionOp =
+    Op.projection("extractURIComponents") { _ =>
       val u = col(field)
       // try_parse_url, not parse_url: ANSI parse_url throws INVALID_URL
       // on a malformed field and aborts the batch; the reference's
       // extractURIComponents fails the RECORD on URISyntaxException.
       // Null components keep bad records filterable.
-      df.withColumn(s"${prefix}scheme",
-          regexp_extract(u, "^([a-zA-Z][a-zA-Z0-9+.-]*):", 1))
-        .withColumn(s"${prefix}host", try_parse_url(u, lit("HOST")))
-        .withColumn(s"${prefix}path", try_parse_url(u, lit("PATH")))
-        .withColumn(s"${prefix}query", try_parse_url(u, lit("QUERY")))
-        .withColumn(s"${prefix}fragment", try_parse_url(u, lit("REF")))
+      Seq(s"${prefix}scheme" ->
+          regexp_extract(u, "^([a-zA-Z][a-zA-Z0-9+.-]*):", 1),
+        s"${prefix}host" -> try_parse_url(u, lit("HOST")),
+        s"${prefix}path" -> try_parse_url(u, lit("PATH")),
+        s"${prefix}query" -> try_parse_url(u, lit("QUERY")),
+        s"${prefix}fragment" -> try_parse_url(u, lit("REF")))
     }
 
   /** `extractURIQueryParameters`: one named query parameter → column. */
-  def extractUriQueryParam(field: String, param: String, out: String): Op =
-    Op("extractURIQueryParameters") { df =>
-      df.withColumn(out,
-        try_parse_url(col(field), lit("QUERY"), lit(param)))
-    }
+  def extractUriQueryParam(field: String, param: String, out: String): ProjectionOp =
+    Op.projection("extractURIQueryParameters")(_ =>
+      Seq(out -> try_parse_url(col(field), lit("QUERY"), lit(param))))
 
   /** `extractJsonPaths`-style projection with rename map (path → out field).
     * Operates on already-parsed struct columns; see ParserOps.readJson for
     * the string→struct step.
     */
-  def extractPaths(src: String, paths: (String, String)*): Op =
-    Op("extractPaths") { df =>
-      paths.foldLeft(df) { case (d, (path, out)) =>
-        d.withColumn(out, col(s"$src.$path"))
-      }
-    }
+  def extractPaths(src: String, paths: (String, String)*): ProjectionOp =
+    Op.projection("extractPaths")(_ =>
+      paths.map { case (path, out) => out -> col(s"$src.$path") })
 }

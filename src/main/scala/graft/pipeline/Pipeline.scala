@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** A pipeline operator: the Spark-native equivalent of one morphline command.
   *
@@ -23,7 +23,20 @@ trait Op extends (DataFrame => DataFrame) with Serializable {
   * field is single- or multi-valued.
   */
 trait PredicateOp extends Op {
-  def predicateFor(df: DataFrame): org.apache.spark.sql.Column
+  def predicateFor(df: DataFrame): Column
+}
+
+/** A command whose only effect is to add or replace named columns: it keeps
+  * every row and reads nothing but the record it is given. Exposing its
+  * ordered assignments lets the compiler fuse `if`/`tryRules` branches made
+  * only of such commands into one guarded projection
+  * ([[PipelineSpec]]) instead of a union of filtered copies. Each
+  * assignment is built against `df`, the frame the command would see, and
+  * may reference a column assigned before it.
+  */
+trait ProjectionOp extends Op {
+  def assignmentsFor(df: DataFrame): Seq[(String, Column)]
+  def apply(df: DataFrame): DataFrame = Op.project(df, assignmentsFor(df))
 }
 
 object Op {
@@ -35,13 +48,35 @@ object Op {
   /** A predicate command: keeps rows matching `cond` (SQL filter semantics —
     * null does not match).
     */
-  def predicate(opName: String)(
-      cond: DataFrame => org.apache.spark.sql.Column): PredicateOp =
+  def predicate(opName: String)(cond: DataFrame => Column): PredicateOp =
     new PredicateOp {
       val name: String = opName
-      def predicateFor(df: DataFrame): org.apache.spark.sql.Column = cond(df)
+      def predicateFor(df: DataFrame): Column = cond(df)
       def apply(df: DataFrame): DataFrame = df.filter(predicateFor(df))
     }
+
+  /** A column-assigning command (see [[ProjectionOp]]). */
+  def projection(opName: String)(
+      assign: DataFrame => Seq[(String, Column)]): ProjectionOp =
+    new ProjectionOp {
+      val name: String = opName
+      def assignmentsFor(df: DataFrame): Seq[(String, Column)] = assign(df)
+    }
+
+  /** Prefix of the branch-tag columns a fused `if`/`tryRules` assigns for
+    * its one pass; [[project]] drops them again.
+    */
+  private[pipeline] val BranchTag = "__branch_"
+
+  /** Apply assignments in order (each sees the ones before it), then drop
+    * any branch-tag column they introduced.
+    */
+  private[pipeline] def project(df: DataFrame,
+                                assignments: Seq[(String, Column)]): DataFrame = {
+    val out = assignments.foldLeft(df) { case (d, (f, c)) => d.withColumn(f, c) }
+    val tags = out.columns.filter(_.startsWith(BranchTag))
+    if (tags.isEmpty) out else out.drop(tags.toSeq: _*)
+  }
 
   /** `pipe` / `callParentPipe` (SURVEY.md §2.C): a nested pipeline as a
     * single op — function composition, one combined Catalyst plan.

@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.ops.ControlOps
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, expr, lit, when}
 
 import scala.jdk.CollectionConverters._
 
@@ -39,8 +42,6 @@ object PipelineSpec {
                 registry: OpRegistry = StandardOps.registry,
                 settings: Map[String, String] = Map.empty,
                 env: String => Option[String] = sys.env.get): Pipeline = {
-    import com.fasterxml.jackson.databind.JsonNode
-
     // The connector's override channel (MorphlineSinkTask.java:108,119-127):
     // `morphlines.*` connector settings parse into a config tree that wins
     // over the file (`override.withFallback(fileConfig)`), then `${path}` /
@@ -96,8 +97,6 @@ object PipelineSpec {
     // counter across ALL nesting levels so log observation names stay unique
     // even when `if`/`tryRules` branches each carry their own log commands
     val cmdSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-    def fold(ops: Seq[Op]): org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      df => ops.foldLeft(df)((d, op) => op(d))
 
     def buildOps(arr: JsonNode): Seq[Op] = {
       require(arr != null && arr.isArray, s"expected a commands array, got: $arr")
@@ -109,39 +108,13 @@ object PipelineSpec {
       val entries = cmd.properties.asScala.toSeq
       require(entries.size == 1, s"morphline command must have one key: $cmd")
       val (name, cfgVal) = (entries.head.getKey, entries.head.getValue)
-      name match {
-        // control-flow commands hold nested command lists, not scalar
-        // config — compile them recursively (same semantics as fromJson's
-        // if/tryRules/pipe handling)
-        case "if" =>
-          val cond = org.apache.spark.sql.functions.expr(
-            Option(cfgVal.get("condition")).map(_.asText).getOrElse(
-              throw new IllegalArgumentException("if needs a 'condition'")))
-          val thenOps = Option(cfgVal.get("then")).map(buildOps).getOrElse(Nil)
-          val elseOps = Option(cfgVal.get("else")).map(buildOps).getOrElse(Nil)
-          graft.ops.ControlOps.ifThenElse(cond, fold(thenOps), fold(elseOps))
-        case "tryRules" =>
-          val rules = Option(cfgVal.get("rules")).filter(_.isArray)
-            .getOrElse(throw new IllegalArgumentException(
-              "tryRules needs a 'rules' array"))
-            .elements.asScala.toSeq.map { rule =>
-              val cond = org.apache.spark.sql.functions.expr(
-                rule.get("condition").asText)
-              (cond, fold(buildOps(rule.get("commands"))))
-            }
-          graft.ops.ControlOps.tryRules(rules,
-            Option(cfgVal.get("catchAll")).map(ca => fold(buildOps(ca))))
-        case "pipe" =>
-          Op.pipe(Pipeline(
-            Option(cfgVal.get("id")).map(_.asText).getOrElse("nested"),
-            buildOps(cfgVal.get("commands"))))
-        // Kite `not { <command> {...} }`: the value is itself a one-key
-        // command block; compile it and invert its predicate. The legacy
-        // scalar field/value form falls through to the registry below.
-        case "not" if cfgVal.isObject && cfgVal.size() == 1 &&
-            !cfgVal.has("field") =>
-          graft.ops.ControlOps.notOp(buildOne(cfgVal))
-        case _ =>
+      // Kite `not { <command> {...} }`: the value is itself a one-key
+      // command block. The legacy scalar field/value form falls through to
+      // the registry below.
+      val negated = Some(cfgVal)
+        .filter(v => v.isObject && v.size() == 1 && !v.has("field"))
+      controlFlow(name, cfgVal, idx, buildOps, negated.map(buildOne))
+        .getOrElse {
           val raw: Map[String, String] =
             if (cfgVal.isObject)
               cfgVal.properties.asScala.flatMap { e =>
@@ -165,9 +138,124 @@ object PipelineSpec {
               cfg0 + ("name" -> s"${name}_$idx") // unique observation names
             else cfg0
           registry.build(name, cfg)
-      }
+        }
     }
     Pipeline(morphlineId, connectEnvelopeAliases +: buildOps(commands))
+  }
+
+  /** The control-flow commands both spellings share, compiled from their
+    * block `cfg`: `if`, `tryRules`, `pipe`, and `not` when `negated` holds
+    * the compiled command it wraps. `commands` compiles a nested command
+    * array; `seq` numbers the command. None for any other command.
+    */
+  private def controlFlow(name: String, cfg: JsonNode, seq: Int,
+                          commands: JsonNode => Seq[Op],
+                          negated: => Option[Op]): Option[Op] = {
+    def condition(block: JsonNode, what: String): Column =
+      expr(Option(block.get("condition")).map(_.asText).getOrElse(
+        throw new IllegalArgumentException(s"$what needs a 'condition'")))
+    def branch(key: String): Option[Seq[Op]] =
+      Option(cfg.get(key)).map(commands)
+    name match {
+      case "if" =>
+        Some(branching("if", Seq(condition(cfg, "if")),
+          Seq(branch("then").getOrElse(Nil)),
+          Some(branch("else").getOrElse(Nil)), seq))
+      case "tryRules" =>
+        val rules = Option(cfg.get("rules")).filter(_.isArray)
+          .getOrElse(throw new IllegalArgumentException(
+            "tryRules needs a 'rules' array"))
+          .elements.asScala.toSeq
+        Some(branching("tryRules", rules.map(condition(_, "a tryRules rule")),
+          rules.map(r => commands(r.get("commands"))), branch("catchAll"),
+          seq))
+      case "pipe" =>
+        Some(Op.pipe(Pipeline(
+          Option(cfg.get("id")).map(_.asText).getOrElse("nested"),
+          commands(cfg.get("commands")))))
+      case "not" => negated.map(ControlOps.notOp)
+      case _ => None
+    }
+  }
+
+  /** First-match branching: each row takes the first branch whose
+    * condition holds (null counts as false), else `default` when there is
+    * one; unmatched rows are dropped. An `if` is the one-condition case
+    * whose `else` is the default (an absent `else` is an empty branch).
+    *
+    * When every branch only assigns columns ([[ProjectionOp]]), the
+    * branches fuse into one pass: a branch-tag column holds the index of
+    * the branch each row takes, and every assignment of branch `i` becomes
+    * `when(tag === i, value)` over the column's current value (null when
+    * the column is new). Each branch's assignments are built against its
+    * own view — the input plus that branch's earlier assignments — so a
+    * `@{field}` a sibling branch sets still renders empty. Columns come out
+    * in the order the union form's `unionByName` gives them. A fused
+    * branching that keeps every row is itself a [[ProjectionOp]], so
+    * nested branching fuses too. Any other branch keeps the union of
+    * filtered copies (`ControlOps`), which re-runs the upstream plan once
+    * per branch.
+    */
+  private def branching(name: String, conds: Seq[Column],
+                        branches: Seq[Seq[Op]], default: Option[Seq[Op]],
+                        seq: Int): Op = {
+    val all = branches ++ default
+    val projections = all.map(_.collect { case p: ProjectionOp => p })
+    if (projections.flatten.size == all.flatten.size)
+      fused(name, s"${Op.BranchTag}$seq", conds, projections,
+        keepsUnmatched = default.isDefined)
+    else {
+      def fold(ops: Seq[Op]): DataFrame => DataFrame =
+        df => ops.foldLeft(df)((d, op) => op(d))
+      (name, default) match {
+        case ("if", Some(elseOps)) =>
+          ControlOps.ifThenElse(conds.head, fold(branches.head), fold(elseOps))
+        case _ =>
+          ControlOps.tryRules(conds.zip(branches.map(fold)), default.map(fold))
+      }
+    }
+  }
+
+  /** The one-pass form of [[branching]]; `branches` holds the default last
+    * when `keepsUnmatched`.
+    */
+  private def fused(name: String, tag: String, conds: Seq[Column],
+                    branches: Seq[Seq[ProjectionOp]],
+                    keepsUnmatched: Boolean): Op = {
+    val unmatched = lit(if (keepsUnmatched) conds.size else -1)
+    // a null condition does not match (CASE WHEN semantics)
+    val tagValue = conds.zipWithIndex
+      .foldLeft(Option.empty[Column]) { case (w, (c, i)) =>
+        Some(w.fold(when(c, i))(_.when(c, i)))
+      }
+      .fold(unmatched)(_.otherwise(unmatched))
+    def guarded(df: DataFrame): Seq[(String, Column)] = {
+      // column names match the way the analyzer matches them
+      val caseSensitive =
+        df.sparkSession.conf.get("spark.sql.caseSensitive", "false").toBoolean
+      def key(f: String) = if (caseSensitive) f else f.toLowerCase(java.util.Locale.ROOT)
+      var present = df.columns.map(key).toSet
+      branches.zipWithIndex.flatMap { case (ops, i) =>
+        var view = df
+        ops.flatMap { op =>
+          val own = op.assignmentsFor(view)
+          view = Op.project(view, own)
+          own.map { case (f, c) =>
+            val taken = when(col(tag) === i, c)
+            val out =
+              if (present(key(f))) taken.otherwise(col(s"`${f.replace("`", "``")}`"))
+              else taken
+            present += key(f)
+            f -> out
+          }
+        }
+      }
+    }
+    if (keepsUnmatched)
+      Op.projection(name)(df => (tag -> tagValue) +: guarded(df))
+    else Op(name) { df =>
+      Op.project(df.withColumn(tag, tagValue).filter(col(tag) >= 0), guarded(df))
+    }
   }
 
   /** The reference's envelope field names (`_value`, `_topic`, …;
@@ -202,53 +290,22 @@ object PipelineSpec {
   def fromJson(json: String, registry: OpRegistry = StandardOps.registry): Pipeline = {
     val root = mapper.readTree(json)
     val id = Option(root.get("id")).map(_.asText).getOrElse("pipeline")
-    Pipeline(id, compileCommands(root.get("commands"), registry))
-  }
+    val cmdSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def compileCommands(commands: com.fasterxml.jackson.databind.JsonNode,
-                              registry: OpRegistry): Seq[Op] = {
-    require(commands != null && commands.isArray,
-      "pipeline spec needs a 'commands' array")
-    commands.elements.asScala.toSeq.map { node =>
+    def compileCommands(commands: JsonNode): Seq[Op] = {
+      require(commands != null && commands.isArray,
+        "pipeline spec needs a 'commands' array")
+      commands.elements.asScala.toSeq.map(compileOne)
+    }
+
+    def compileOne(node: JsonNode): Op = {
       val name = Option(node.get("command")).map(_.asText).getOrElse(
         throw new IllegalArgumentException(s"command entry missing 'command': $node"))
-      name match {
-        // control-flow commands with nested sub-pipelines (reference
-        // `if {conditions then else}` / `tryRules {rules}` blocks)
-        case "if" =>
-          val cond = org.apache.spark.sql.functions.expr(
-            node.get("condition").asText)
-          val thenOps = compileCommands(node.get("then"), registry)
-          val elseOps = Option(node.get("else"))
-            .map(compileCommands(_, registry)).getOrElse(Nil)
-          graft.ops.ControlOps.ifThenElse(cond,
-            df => thenOps.foldLeft(df)((d, op) => op(d)),
-            df => elseOps.foldLeft(df)((d, op) => op(d)))
-        case "tryRules" =>
-          val rules = node.get("rules").elements.asScala.toSeq.map { rule =>
-            val cond = org.apache.spark.sql.functions.expr(
-              rule.get("condition").asText)
-            val ops = compileCommands(rule.get("commands"), registry)
-            (cond, (df: org.apache.spark.sql.DataFrame) =>
-              ops.foldLeft(df)((d, op) => op(d)))
-          }
-          graft.ops.ControlOps.tryRules(rules,
-            Option(node.get("catchAll")).map { ca =>
-              val ops = compileCommands(ca, registry)
-              (df: org.apache.spark.sql.DataFrame) =>
-                ops.foldLeft(df)((d, op) => op(d))
-            })
-        case "pipe" =>
-          Op.pipe(Pipeline(
-            Option(node.get("id")).map(_.asText).getOrElse("nested"),
-            compileCommands(node.get("commands"), registry)))
-        // JSON spelling of the Kite nested form:
-        // {"command": "not", "nested": {"command": "equals", ...}}
-        case "not" if node.has("nested") =>
-          graft.ops.ControlOps.notOp(
-            compileCommands(mapper.createArrayNode().add(node.get("nested")),
-              registry).head)
-        case _ =>
+      // JSON spelling of the Kite nested `not`:
+      // {"command": "not", "nested": {"command": "equals", ...}}
+      controlFlow(name, node, cmdSeq.getAndIncrement(), compileCommands,
+        Option(node.get("nested")).map(compileOne))
+        .getOrElse {
           val cfg = node.properties.asScala
             .filter(_.getKey != "command")
             .map(e => e.getKey -> (
@@ -260,7 +317,8 @@ object PipelineSpec {
               else e.getValue.asText))
             .toMap
           registry.build(name, cfg)
-      }
+        }
     }
+    Pipeline(id, compileCommands(root.get("commands")))
   }
 }

@@ -183,9 +183,9 @@ object StandardOps {
     r.register("fromConnectData") { c =>
       val valueField = c.getOrElse("valueField", "value")
       val conv = c.getOrElse("converter", "string")
-      Op("fromConnectData")(df => df.withColumn("_attachment_body",
-        if (conv == "avro") col(valueField).cast("binary")
-        else col(valueField).cast("string")))
+      Op.projection("fromConnectData")(_ => Seq("_attachment_body" ->
+        (if (conv == "avro") col(valueField).cast("binary")
+        else col(valueField).cast("string"))))
     }
     r.register("toConnectData") { c =>
       c.get("mappings") match {

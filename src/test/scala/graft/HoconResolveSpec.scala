@@ -98,32 +98,7 @@ class HoconResolveSpec extends AnyFunSuite {
   */
 class HoconControlFlowSpec extends SparkSpec {
   import spark.implicits._
-
-  private val conf =
-    """morphlines : [
-      |  {
-      |    id : ctrl
-      |    commands : [
-      |      { if {
-      |          condition : "value > 100"
-      |          then : [ { setValues { bucket : big } } ]
-      |          else : [ { setValues { bucket : small } } ]
-      |      } }
-      |      { tryRules {
-      |          rules : [
-      |            { condition : "event_type = 'purchase'"
-      |              commands : [ { setValues { kind : buy } } ] }
-      |            { condition : "true"
-      |              commands : [ { setValues { kind : other } } ] }
-      |          ]
-      |      } }
-      |      { pipe {
-      |          id : nested
-      |          commands : [ { setValues { tagged : yes } } ]
-      |      } }
-      |    ]
-      |  }
-      |]""".stripMargin
+  import HoconControlFlowSpec.conf
 
   test("if/tryRules/pipe compile from .conf and apply branch semantics") {
     val pipe = PipelineSpec.fromHocon(conf, "ctrl")
@@ -155,7 +130,41 @@ class HoconControlFlowSpec extends SparkSpec {
         |    ] } ]""".stripMargin
     val pipe = PipelineSpec.fromHocon(logged, "logs")
     // would throw "observation name already exists" on a name collision
-    val n = pipe(Seq((1, "x")).toDF("id", "s")).count()
-    assert(n == 1)
+    val out = pipe(Seq((1, "x")).toDF("id", "s"))
+    assert(out.count() == 1)
+    // branches holding log commands keep the union of filtered copies
+    assert(out.queryExecution.analyzed.collectFirst {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+    }.nonEmpty)
   }
+}
+
+object HoconControlFlowSpec {
+  /** `if` with then/else, a two-rule `tryRules` without `catchAll`, and a
+    * `pipe`: every branch only assigns columns. */
+  val conf: String =
+    """morphlines : [
+      |  {
+      |    id : ctrl
+      |    commands : [
+      |      { if {
+      |          condition : "value > 100"
+      |          then : [ { setValues { bucket : big } } ]
+      |          else : [ { setValues { bucket : small } } ]
+      |      } }
+      |      { tryRules {
+      |          rules : [
+      |            { condition : "event_type = 'purchase'"
+      |              commands : [ { setValues { kind : buy } } ] }
+      |            { condition : "true"
+      |              commands : [ { setValues { kind : other } } ] }
+      |          ]
+      |      } }
+      |      { pipe {
+      |          id : nested
+      |          commands : [ { setValues { tagged : yes } } ]
+      |      } }
+      |    ]
+      |  }
+      |]""".stripMargin
 }

@@ -99,6 +99,25 @@ class StandardOpsSpec extends SparkSpec {
     assert(out == Map(1 -> ("high", "p"), 2 -> ("high", "hv"), 3 -> ("low", "def")))
   }
 
+  test("a JSON if without then runs its else branch alone") {
+    val spec =
+      """{ "id": "else-only", "commands": [
+        |  { "command": "if", "condition": "v > 100",
+        |    "else": [ { "command": "setValues", "tier": "low" } ] } ] }"""
+        .stripMargin
+    val pipe = graft.pipeline.PipelineSpec.fromJson(spec)
+    val out = pipe(Seq((1, 200.0), (2, 10.0)).toDF("id", "v"))
+      .select("id", "tier").as[(Int, String)].collect().toMap
+    assert(out == Map(1 -> null, 2 -> "low"))
+  }
+
+  test("a JSON tryRules without rules fails with a config error") {
+    val e = intercept[IllegalArgumentException](
+      graft.pipeline.PipelineSpec.fromJson(
+        """{ "commands": [ { "command": "tryRules" } ] }"""))
+    assert(e.getMessage.contains("tryRules needs a 'rules' array"))
+  }
+
   test("unknown command fails at compile with known names listed") {
     val e = intercept[IllegalArgumentException](
       StandardOps.compile("bad", Seq("nope" -> Map())))
