@@ -15,9 +15,9 @@ import scala.jdk.CollectionConverters._
   * for now need tests"). typesafe-config is not on Spark 4.1's classpath and
   * this build adds no dependencies, hence a reader instead of a library.
   *
-  * Output is a Jackson tree, so [[PipelineSpec]] walks HOCON and JSON specs
-  * with the same code. Substitutions parse to marker objects
-  * (`{"%subst": path, "%optional": bool}`) and stay unresolved until
+  * Output is a Jackson tree, which [[PipelineSpec]] compiles and each
+  * command's builder reads as its [[Conf]]. Substitutions parse to marker
+  * objects (`{"%subst": path, "%optional": bool}`) and stay unresolved until
   * [[resolve]], mirroring typesafe-config's parse-then-resolve split
   * (`override.withFallback(file)` then `ConfigFactory.load`,
   * MorphlineTransform.java:187-191).

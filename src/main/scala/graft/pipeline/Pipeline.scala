@@ -1,6 +1,10 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.spark.sql.{Column, DataFrame}
+
+import scala.jdk.CollectionConverters._
 
 /** A pipeline operator: the Spark-native equivalent of one morphline command.
   *
@@ -98,22 +102,63 @@ final case class Pipeline(id: String, ops: Seq[Op]) {
 /** Named-op registry: the Spark equivalent of the reference's
   * `CommandBuilder` SPI (`getNames()` + `build(...)`, e.g.
   * FromConnectDataBuilder.java:33-44) discovered via `importCommands` globs.
-  * Ops register under a name; pipelines are assembled programmatically or
-  * from a config map.
+  * Ops register under a name; a builder gets the command's parsed config
+  * block.
   */
 final class OpRegistry {
-  private val builders =
-    scala.collection.mutable.Map.empty[String, Map[String, String] => Op]
+  private val builders = scala.collection.mutable.Map.empty[String, Conf => Op]
 
-  def register(name: String)(builder: Map[String, String] => Op): this.type = {
+  def register(name: String)(builder: Conf => Op): this.type = {
     builders(name) = builder; this
   }
 
-  def build(name: String, config: Map[String, String] = Map.empty): Op =
+  def build(name: String, config: Conf = Conf.empty): Op =
     builders.getOrElse(name,
       throw new IllegalArgumentException(
         s"unknown op '$name'; known: ${builders.keys.toSeq.sorted.mkString(", ")}")
     )(config)
 
   def names: Seq[String] = builders.keys.toSeq.sorted
+}
+
+/** One command's config block as [[Hocon]] parsed it — the `{ ... }` after
+  * the command name, keys in config order. Builders read it only through
+  * these accessors.
+  */
+final class Conf(val node: JsonNode) extends Serializable {
+  private def scalar(key: String, v: JsonNode): String = {
+    require(v.isValueNode, s"config '$key' must be a single value, got: $v")
+    v.asText
+  }
+
+  /** A single value as text; None when the key is absent. */
+  def get(key: String): Option[String] = Option(node.get(key)).map(scalar(key, _))
+
+  def apply(key: String): String =
+    get(key).getOrElse(throw new IllegalArgumentException(s"missing config '$key'"))
+
+  def getOrElse(key: String, default: => String): String = get(key).getOrElse(default)
+
+  def contains(key: String): Boolean = node.has(key)
+
+  /** A list: an array's elements whole, or a scalar split on ','. */
+  def list(key: String): Seq[String] = Option(node.get(key)) match {
+    case Some(v) if v.isArray => v.elements.asScala.map(scalar(key, _)).toSeq
+    case _ => apply(key).split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+  }
+
+  def keys: Seq[String] = node.fieldNames.asScala.toSeq
+
+  /** The single-valued entries, in config order. */
+  def entries: Seq[(String, String)] = keys.map(k => k -> apply(k))
+
+  /** A nested block (`paths { ... }`, `solrLocator : ${SOLR_LOCATOR}`). */
+  def block(key: String): Option[Conf] = Option(node.get(key)).map { v =>
+    require(v.isObject, s"config '$key' must be a block, got: $v")
+    new Conf(v)
+  }
+}
+
+object Conf {
+  val empty: Conf = new Conf(JsonNodeFactory.instance.objectNode())
 }

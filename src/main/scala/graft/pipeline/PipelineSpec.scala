@@ -1,42 +1,42 @@
 package graft.pipeline
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.ops.ControlOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, expr, lit, when}
 
 import scala.jdk.CollectionConverters._
 
-/** Declarative pipeline specs: a JSON document compiled to a [[Pipeline]]
-  * through the [[StandardOps]] registry — the engine's equivalent of the
-  * reference's morphline config file (HOCON is a JSON superset, so a
-  * morphline block converts mechanically to this shape):
+/** Morphline compilation: a HOCON morphline config — the reference's query
+  * language — compiled to a [[Pipeline]] through an [[OpRegistry]]:
   *
   * {{{
-  * { "id": "readjson",
-  *   "commands": [
-  *     { "command": "readJson", "field": "value",
-  *       "schema": "firstName STRING, age INT" },
-  *     { "command": "extractJsonPaths", "paths": "first_name:firstName" } ] }
+  * morphlines : [
+  *   { id : readjson
+  *     commands : [
+  *       { readJson { schema : "firstName STRING, age INT" } }
+  *       { extractJsonPaths { paths : { first_name : /firstName } } }
+  *     ] } ]
   * }}}
   *
+  * Each command's builder gets its parsed config block ([[Conf]]).
   * Compilation happens once on the driver (MorphlineTransform.java:166-195
   * analogue); the result is a single composed Catalyst plan.
   */
 object PipelineSpec {
 
-  private val mapper = new ObjectMapper()
-
   /** Compile a morphline out of a real HOCON config file — the reference's
     * actual query language (`morphlines : [ { id, importCommands, commands :
     * [ {name {config}} ] } ]`, e.g. TESTR/identity.conf) — parsed by
     * [[Hocon]]. `importCommands` globs are accepted and ignored (command
-    * resolution goes through the registry — the SPI equivalent).
+    * resolution goes through the registry — the SPI equivalent). A
+    * strict-JSON document compiles too: HOCON is a JSON superset.
     *
-    * Morphline-default field wiring applies: parsers read from and write to
-    * `_attachment_body` (the reference's Fields.ATTACHMENT_BODY) unless the
-    * config says otherwise, and each `log*` command gets a unique
-    * observation name (Spark requires observation names unique per query).
+    * `if`, `tryRules`, `pipe` and the nested `not` compile here; every
+    * other command is built by the registry. Each `log*` command gets a
+    * unique observation name (Spark requires observation names unique per
+    * query).
     */
   def fromHocon(hocon: String, morphlineId: String,
                 registry: OpRegistry = StandardOps.registry,
@@ -63,33 +63,6 @@ object PipelineSpec {
           morphlines.flatMap(c => Option(c.get("id")).map(_.asText))
             .mkString(", ")))
 
-    // arrays join with the unit separator so elements holding commas
-    // survive the string carrier (StandardOps.splitList splits them back)
-    def scalarOf(v: JsonNode): String =
-      if (v.isArray) v.elements.asScala.map(scalarOf).mkString("\u001F")
-      else v.asText
-    // nested blocks (paths, mappings) flatten to the registry's "k:v,..."
-    def flatten(v: JsonNode): String =
-      if (v.isObject)
-        v.properties.asScala.toSeq // Set → Seq first: keep config order
-          .map(e => s"${e.getKey}:${scalarOf(e.getValue)}")
-          .mkString(",")
-      else scalarOf(v)
-
-    // Morphline parsers replace the attachment body in place
-    // (Fields.ATTACHMENT_BODY); the JSON-spec path defaults to named output
-    // columns instead, so the in-place defaults are injected only here.
-    val inPlace = Map(
-      "readJson" -> Map("field" -> "_attachment_body",
-        "outputField" -> "_attachment_body"),
-      "readCSV" -> Map("field" -> "_attachment_body",
-        "outputField" -> "_attachment_body"),
-      "readAvro" -> Map("field" -> "_attachment_body",
-        "outputField" -> "_attachment_body"),
-      "extractJsonPaths" -> Map("field" -> "_attachment_body"),
-      "extractAvroPaths" -> Map("field" -> "_attachment_body"),
-      "enrichJson" -> Map("valueField" -> "_attachment_body"))
-
     val commands = Option(m.get("commands")).filter(_.isArray)
       .getOrElse(throw new IllegalArgumentException(
         s"morphline '$morphlineId' has no commands array"))
@@ -107,75 +80,42 @@ object PipelineSpec {
       val idx = cmdSeq.getAndIncrement()
       val entries = cmd.properties.asScala.toSeq
       require(entries.size == 1, s"morphline command must have one key: $cmd")
-      val (name, cfgVal) = (entries.head.getKey, entries.head.getValue)
-      // Kite `not { <command> {...} }`: the value is itself a one-key
-      // command block. The legacy scalar field/value form falls through to
-      // the registry below.
-      val negated = Some(cfgVal)
-        .filter(v => v.isObject && v.size() == 1 && !v.has("field"))
-      controlFlow(name, cfgVal, idx, buildOps, negated.map(buildOne))
-        .getOrElse {
-          val raw: Map[String, String] =
-            if (cfgVal.isObject)
-              cfgVal.properties.asScala.flatMap { e =>
-                // object-valued configs (solrLocator, properties blocks) are
-                // exposed both flattened ("k:v,...") and as dotted keys
-                // ("solrLocator.collection") so ops can read sub-fields
-                // without re-parsing
-                val dotted =
-                  if (e.getValue.isObject)
-                    e.getValue.properties.asScala.toSeq.map(s =>
-                      // flatten, not scalarOf: a deeper object-valued
-                      // sub-entry flattens to "k:v,..." instead of asText's ""
-                      s"${e.getKey}.${s.getKey}" -> flatten(s.getValue))
-                  else Nil
-                (e.getKey -> flatten(e.getValue)) +: dotted
-              }.toMap
-            else Map.empty
-          val cfg0 = inPlace.getOrElse(name, Map.empty) ++ raw
-          val cfg =
-            if (name.startsWith("log") && !cfg0.contains("name"))
-              cfg0 + ("name" -> s"${name}_$idx") // unique observation names
-            else cfg0
-          registry.build(name, cfg)
-        }
+      val (name, block) = (entries.head.getKey, entries.head.getValue)
+      def condition(b: JsonNode, what: String): Column =
+        expr(Option(b.get("condition")).map(_.asText).getOrElse(
+          throw new IllegalArgumentException(s"$what needs a 'condition'")))
+      def branch(key: String): Option[Seq[Op]] =
+        Option(block.get(key)).map(buildOps)
+      name match {
+        case "if" =>
+          branching("if", Seq(condition(block, "if")),
+            Seq(branch("then").getOrElse(Nil)),
+            Some(branch("else").getOrElse(Nil)), idx)
+        case "tryRules" =>
+          val rules = Option(block.get("rules")).filter(_.isArray)
+            .getOrElse(throw new IllegalArgumentException(
+              "tryRules needs a 'rules' array"))
+            .elements.asScala.toSeq
+          branching("tryRules", rules.map(condition(_, "a tryRules rule")),
+            rules.map(r => buildOps(r.get("commands"))), branch("catchAll"), idx)
+        case "pipe" =>
+          Op.pipe(Pipeline(
+            Option(block.get("id")).map(_.asText).getOrElse("nested"),
+            buildOps(block.get("commands"))))
+        // Kite `not { <command> {...} }`: the block is itself a one-key
+        // command. The scalar field/value form goes to the registry.
+        case "not" if block.isObject && block.size == 1 && !block.has("field") =>
+          ControlOps.notOp(buildOne(block))
+        case _ =>
+          registry.build(name, block match {
+            case o: ObjectNode if name.startsWith("log") && !o.has("name") =>
+              new Conf(o.deepCopy().put("name", s"${name}_$idx"))
+            case o: ObjectNode => new Conf(o)
+            case _ => Conf.empty
+          })
+      }
     }
     Pipeline(morphlineId, connectEnvelopeAliases +: buildOps(commands))
-  }
-
-  /** The control-flow commands both spellings share, compiled from their
-    * block `cfg`: `if`, `tryRules`, `pipe`, and `not` when `negated` holds
-    * the compiled command it wraps. `commands` compiles a nested command
-    * array; `seq` numbers the command. None for any other command.
-    */
-  private def controlFlow(name: String, cfg: JsonNode, seq: Int,
-                          commands: JsonNode => Seq[Op],
-                          negated: => Option[Op]): Option[Op] = {
-    def condition(block: JsonNode, what: String): Column =
-      expr(Option(block.get("condition")).map(_.asText).getOrElse(
-        throw new IllegalArgumentException(s"$what needs a 'condition'")))
-    def branch(key: String): Option[Seq[Op]] =
-      Option(cfg.get(key)).map(commands)
-    name match {
-      case "if" =>
-        Some(branching("if", Seq(condition(cfg, "if")),
-          Seq(branch("then").getOrElse(Nil)),
-          Some(branch("else").getOrElse(Nil)), seq))
-      case "tryRules" =>
-        val rules = Option(cfg.get("rules")).filter(_.isArray)
-          .getOrElse(throw new IllegalArgumentException(
-            "tryRules needs a 'rules' array"))
-          .elements.asScala.toSeq
-        Some(branching("tryRules", rules.map(condition(_, "a tryRules rule")),
-          rules.map(r => commands(r.get("commands"))), branch("catchAll"),
-          seq))
-      case "pipe" =>
-        Some(Op.pipe(Pipeline(
-          Option(cfg.get("id")).map(_.asText).getOrElse("nested"),
-          commands(cfg.get("commands")))))
-      case "not" => negated.map(ControlOps.notOp)
-      case _ => None
-    }
   }
 
   /** First-match branching: each row takes the first branch whose
@@ -286,39 +226,4 @@ object PipelineSpec {
     fromHocon(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), "UTF-8"), morphlineId, registry,
       settings, env)
-
-  def fromJson(json: String, registry: OpRegistry = StandardOps.registry): Pipeline = {
-    val root = mapper.readTree(json)
-    val id = Option(root.get("id")).map(_.asText).getOrElse("pipeline")
-    val cmdSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-    def compileCommands(commands: JsonNode): Seq[Op] = {
-      require(commands != null && commands.isArray,
-        "pipeline spec needs a 'commands' array")
-      commands.elements.asScala.toSeq.map(compileOne)
-    }
-
-    def compileOne(node: JsonNode): Op = {
-      val name = Option(node.get("command")).map(_.asText).getOrElse(
-        throw new IllegalArgumentException(s"command entry missing 'command': $node"))
-      // JSON spelling of the Kite nested `not`:
-      // {"command": "not", "nested": {"command": "equals", ...}}
-      controlFlow(name, node, cmdSeq.getAndIncrement(), compileCommands,
-        Option(node.get("nested")).map(compileOne))
-        .getOrElse {
-          val cfg = node.properties.asScala
-            .filter(_.getKey != "command")
-            .map(e => e.getKey -> (
-              // arrays join like the HOCON flattener — unit separator, so
-              // a Kite value-list element containing a comma is not mangled
-              // (asText on an array node is "" — would drop the list)
-              if (e.getValue.isArray)
-                e.getValue.elements.asScala.map(_.asText).mkString("\u001F")
-              else e.getValue.asText))
-            .toMap
-          registry.build(name, cfg)
-        }
-    }
-    Pipeline(id, compileCommands(root.get("commands")))
-  }
 }

@@ -7,26 +7,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** The standard op registry: every built-in op registered under its
   * morphline command name (the reference discovers commands by name via the
   * `CommandBuilder` SPI + `importCommands` globs — this is the Spark-side
-  * equivalent, so a `.conf` command chain ports 1:1 to a spec list).
+  * equivalent, so a `.conf` command chain compiles 1:1).
   *
-  * Config values are strings (as HOCON scalars); multi-valued configs use
-  * comma separation. Ops needing Column expressions or schemas parse them
-  * from DDL / JSON strings.
+  * Each builder reads its command's parsed block through [[Conf]]. Ops
+  * needing Column expressions or schemas parse them from SQL / DDL / JSON
+  * strings. Parsers read from and write to `_attachment_body` (the
+  * reference's Fields.ATTACHMENT_BODY) unless the config says otherwise.
   */
 object StandardOps {
 
-  private def req(cfg: Map[String, String], key: String): String =
-    cfg.getOrElse(key, throw new IllegalArgumentException(s"missing config '$key'"))
-
-  /** Split a list-valued config. HOCON/JSON ARRAY values are flattened by
-    * the spec walkers with the ASCII unit separator (U+001F — a character
-    * no config text contains), so an array element holding a comma (Kite
-    * `contains { title : ["a, b"] }`) survives intact; plain scalar
-    * comma-lists ("a,b,c") keep splitting on ','.
-    */
-  private[pipeline] def splitList(v: String): Seq[String] =
-    (if (v.indexOf('\u001F') >= 0) v.split('\u001F') else v.split(','))
-      .toSeq.map(_.trim).filter(_.nonEmpty)
+  /** The entries of a required nested block (`paths`, `dictionary`). */
+  private def entriesOf(c: Conf, key: String): Seq[(String, String)] =
+    c.block(key).map(_.entries).getOrElse(
+      throw new IllegalArgumentException(s"missing config '$key'"))
 
   /** Parse a schema config: DDL ("a INT, b STRING") or JSON StructType. */
   private def schemaOf(s: String): DataType =
@@ -38,7 +31,7 @@ object StandardOps {
     // parsers (§2.A)
     r.register("readJson") { c =>
       val field = c.getOrElse("field", "_attachment_body")
-      val out = c.getOrElse("outputField", "json")
+      val out = c.getOrElse("outputField", "_attachment_body")
       c.get("schema") match {
         case Some(s) => ParserOps.readJson(field, schemaOf(s), out)
         case None =>
@@ -49,80 +42,74 @@ object StandardOps {
       }
     }
     r.register("readCSV") { c =>
-      ParserOps.readCsv(req(c, "field"),
-        schemaOf(req(c, "schema")).asInstanceOf[StructType],
-        c.getOrElse("separator", ","), c.getOrElse("outputField", "csv"))
+      ParserOps.readCsv(c.getOrElse("field", "_attachment_body"),
+        schemaOf(c("schema")).asInstanceOf[StructType],
+        c.getOrElse("separator", ","),
+        c.getOrElse("outputField", "_attachment_body"))
     }
     r.register("readLine") { c =>
-      ParserOps.readLine(req(c, "field"), c.getOrElse("outputField", "line"),
+      ParserOps.readLine(c("field"), c.getOrElse("outputField", "line"),
         c.get("commentPrefix"))
     }
     r.register("readMultiLine") { c =>
-      ParserOps.readMultiLine(req(c, "field"), req(c, "regex"),
+      ParserOps.readMultiLine(c("field"), c("regex"),
         c.getOrElse("outputField", "line"))
     }
     r.register("readBlob")(c =>
-      ParserOps.readBlob(req(c, "field"), c.getOrElse("outputField", "blob")))
+      ParserOps.readBlob(c("field"), c.getOrElse("outputField", "blob")))
     r.register("readClob")(c =>
-      ParserOps.readClob(req(c, "field"), c.getOrElse("outputField", "clob")))
+      ParserOps.readClob(c("field"), c.getOrElse("outputField", "clob")))
     r.register("readAvro") { c =>
-      ParserOps.readAvro(req(c, "field"), req(c, "schemaString"),
-        c.getOrElse("outputField", "avro"))
+      ParserOps.readAvro(c.getOrElse("field", "_attachment_body"),
+        c("schemaString"), c.getOrElse("outputField", "_attachment_body"))
     }
     // field transforms (§2.B)
-    r.register("setValues") { c => RecordOps.setValues(c.toSeq: _*) }
+    r.register("setValues") { c => RecordOps.setValues(c.entries: _*) }
     r.register("addValues") { c =>
-      RecordOps.addValues(req(c, "field"),
-        splitList(req(c, "values")).map(lit): _*)
+      RecordOps.addValues(c("field"), c.list("values").map(lit): _*)
     }
     r.register("removeFields")(c =>
-      RecordOps.removeFields(splitList(req(c, "fields")): _*))
+      RecordOps.removeFields(c.list("fields"): _*))
     r.register("findReplace") { c =>
-      RecordOps.findReplace(req(c, "field"), req(c, "pattern"),
-        req(c, "replacement"),
+      RecordOps.findReplace(c("field"), c("pattern"), c("replacement"),
         isRegex = c.getOrElse("isRegex", "false").toBoolean)
     }
     r.register("split") { c =>
-      RecordOps.splitField(req(c, "field"), req(c, "separator"),
-        c.getOrElse("outputField", req(c, "field")),
+      RecordOps.splitField(c("field"), c("separator"),
+        c.getOrElse("outputField", c("field")),
         isRegex = c.getOrElse("isRegex", "false").toBoolean)
     }
     r.register("splitKeyValue") { c =>
-      RecordOps.splitKeyValue(req(c, "field"),
-        c.getOrElse("outputField", req(c, "field")),
+      RecordOps.splitKeyValue(c("field"),
+        c.getOrElse("outputField", c("field")),
         c.getOrElse("pairSeparator", ","), c.getOrElse("separator", "="),
         isRegex = c.getOrElse("isRegex", "false").toBoolean)
     }
     r.register("translate") { c =>
-      val dict = req(c, "dictionary").split(",").map { kv =>
-        val Array(k, v) = kv.split(":", 2); k.trim -> v.trim
-      }.toMap
-      RecordOps.translate(req(c, "field"), dict,
-        lit(c.getOrElse("fallback", "")), c.getOrElse("outputField", req(c, "field")))
+      val dict = entriesOf(c, "dictionary").toMap
+      RecordOps.translate(c("field"), dict,
+        lit(c.getOrElse("fallback", "")), c.getOrElse("outputField", c("field")))
     }
     r.register("toString")(c =>
-      RecordOps.toStringField(req(c, "field"),
-        c.get("trim").exists(_.toBoolean)))
+      RecordOps.toStringField(c("field"), c.get("trim").exists(_.toBoolean)))
     r.register("convertTimestamp") { c =>
-      RecordOps.convertTimestamp(req(c, "field"),
-        splitList(req(c, "inputFormats")),
-        req(c, "outputFormat"), c.getOrElse("outputField", req(c, "field")),
+      RecordOps.convertTimestamp(c("field"), c.list("inputFormats"),
+        c("outputFormat"), c.getOrElse("outputField", c("field")),
         c.getOrElse("inputTimezone", "UTC"), c.getOrElse("outputTimezone", "UTC"))
     }
     r.register("generateUUID")(c =>
       RecordOps.generateUUID(c.getOrElse("field", "id")))
-    r.register("grok")(c => RecordOps.grok(req(c, "field"), req(c, "pattern")))
+    r.register("grok")(c => RecordOps.grok(c("field"), c("pattern")))
     r.register("extractJsonPaths") { c =>
-      // paths config: "outField:path,outField2:path2" (flatten of the
-      // reference's paths block); morphline "/a/b" paths normalize to "a.b"
-      val paths = req(c, "paths").split(",").map { kv =>
-        val Array(out, path) = kv.split(":", 2)
-        path.trim.stripPrefix("/").replace('/', '.') -> out.trim
-      }.toSeq
-      RecordOps.extractPaths(c.getOrElse("field", "json"), paths: _*)
+      // paths block: outField : path; morphline "/a/b" paths normalize
+      // to "a.b"
+      val paths = entriesOf(c, "paths").map { case (out, path) =>
+        path.stripPrefix("/").replace('/', '.') -> out
+      }
+      RecordOps.extractPaths(c.getOrElse("field", "_attachment_body"), paths: _*)
     }
     r.register("extractJsonTree")(c =>
-      RecordOps.extractTree(req(c, "field"), c.getOrElse("separator", "_")))
+      RecordOps.extractTree(c("field"), c.getOrElse("separator", "_")))
     r.register("enrichJson") { c =>
       // exactly one schema source, like the reference (schemaString |
       // schemaFile | schemaField | schema-registry-url;
@@ -135,13 +122,13 @@ object StandardOps {
       // reference `valueField` (EnrichJsonBuilder.java:150): when it names a
       // struct column, only that payload is conformed — otherwise the whole
       // record, i.e. the top-level columns
+      val valueField = c.getOrElse("valueField", "_attachment_body")
       def enrich(df: org.apache.spark.sql.DataFrame,
-                 p: graft.schema.SchemaProvider) = c.get("valueField") match {
-        case Some(f) if df.schema.fieldNames.contains(f) &&
-            df.schema(f).dataType.isInstanceOf[StructType] =>
-          graft.functions.Conform.conformStruct(df, f, p.schemaJson)
-        case _ => graft.functions.Conform.conformTo(df, p)
-      }
+                 p: graft.schema.SchemaProvider) =
+        if (df.schema.fieldNames.contains(valueField) &&
+            df.schema(valueField).dataType.isInstanceOf[StructType])
+          graft.functions.Conform.conformStruct(df, valueField, p.schemaJson)
+        else graft.functions.Conform.conformTo(df, p)
       sources.head match {
         case "schemaString" =>
           Op("enrichJson")(df =>
@@ -152,17 +139,17 @@ object StandardOps {
         case "schemaField" =>
           Op("enrichJson")(df => graft.functions.Conform.conformByField(df,
             c("schemaField"),
-            keep = splitList(c.getOrElse("keepFields", "")),
+            keep = if (c.contains("keepFields")) c.list("keepFields") else Nil,
             maxSchemas = c.getOrElse("maxSchemas", "16").toInt))
         case "schema-registry-url" =>
           // http(s) urls resolve to a real HTTP client (LRU-cached, the
           // reference's CachedSchemaRegistryClient(url, 100)); other
           // schemes fall back to the pluggable SchemaRegistryEnv.client
           // (config/morphlines.conf:31-37 shape)
-          val subjectField = req(c, "subjectField")
+          val subjectField = c("subjectField")
           val url = c("schema-registry-url")
           Op("enrichJson")(df => graft.functions.Conform.conformBySubject(df,
-            subjectField, c.getOrElse("valueField", "_attachment_body"),
+            subjectField, valueField,
             graft.schema.SchemaRegistryEnv.forUrl(url),
             maxSubjects = c.getOrElse("maxSubjects", "16").toInt))
       }
@@ -188,12 +175,10 @@ object StandardOps {
         else col(valueField).cast("string"))))
     }
     r.register("toConnectData") { c =>
-      c.get("mappings") match {
+      c.block("mappings") match {
         // mappings block: output connect field ← record field
         case Some(m) =>
-          val pairs = m.split(",").map { kv =>
-            val Array(out, src) = kv.split(":", 2); out.trim -> src.trim
-          }.toSeq
+          val pairs = m.entries
           Op("toConnectData")(df =>
             df.select(pairs.map { case (out, src) => col(src).as(out) }: _*))
         // no mappings: the attachment body IS the new connect value
@@ -219,58 +204,51 @@ object StandardOps {
       })
     // equals/contains accept BOTH config shapes: the explicit
     // field/value pair, and the Kite-stdlib map of record-field → value
-    // list (`equals { foo : [bar, baz] }`; lists arrive comma-joined
-    // through the HOCON flattener). If both `field` and `value` keys are
-    // present they are the explicit shape; otherwise every key is a record
-    // field name.
-    def kiteEntries(c: Map[String, String]): Seq[(String, Seq[String])] =
-      c.toSeq.map { case (f, v) =>
-        f -> splitList(v)
-      }
+    // list (`equals { foo : [bar, baz] }`). If both `field` and `value`
+    // keys are present they are the explicit shape; otherwise every key is
+    // a record field name.
     r.register("equals") { c =>
       if (c.contains("field") && c.contains("value"))
         ControlOps.keepWhere(col(c("field")) === c("value"))
-      else ControlOps.kiteEquals(kiteEntries(c))
+      else ControlOps.kiteEquals(c.keys.map(f => f -> c.list(f)))
     }
     r.register("not")(c =>
       // scalar-config form (field/value pair); the Kite nested-command form
       // (`not { equals {...} }`) compiles in PipelineSpec via ControlOps.notOp
       ControlOps.notOp(
-        ControlOps.keepWhere(col(req(c, "field")) === req(c, "value"))))
+        ControlOps.keepWhere(col(c("field")) === c("value"))))
     r.register("contains") { c =>
       if (c.contains("field") && c.contains("value"))
         ControlOps.fieldContains(c("field"), c("value"))
-      else ControlOps.kiteContains(kiteEntries(c))
+      else ControlOps.kiteContains(c.keys.map(f => f -> c.list(f)))
     }
-    r.register("head")(c => ControlOps.head(req(c, "limit").toInt))
+    r.register("head")(c => ControlOps.head(c("limit").toInt))
     r.register("sample")(c =>
-      ControlOps.sample(req(c, "probability").toDouble,
+      ControlOps.sample(c("probability").toDouble,
         c.getOrElse("seed", "42").toLong))
     r.register("separateAttachments")(c =>
-      ParserOps.separateAttachments(req(c, "field"),
+      ParserOps.separateAttachments(c("field"),
         c.getOrElse("outputField", "attachment")))
     // remaining §2.B surface
     r.register("addValuesIfAbsent") { c =>
-      RecordOps.addValuesIfAbsent(req(c, "field"),
-        splitList(req(c, "values")).map(lit): _*)
+      RecordOps.addValuesIfAbsent(c("field"), c.list("values").map(lit): _*)
     }
     r.register("removeValues")(c =>
-      RecordOps.removeValues(req(c, "field"), lit(req(c, "value"))))
+      RecordOps.removeValues(c("field"), lit(c("value"))))
     r.register("replaceValues") { c =>
-      RecordOps.findReplace(req(c, "field"), req(c, "pattern"),
-        req(c, "replacement"))
+      RecordOps.findReplace(c("field"), c("pattern"), c("replacement"))
     }
     r.register("toByteArray")(c =>
-      RecordOps.toByteArray(req(c, "field"), c.getOrElse("charset", "UTF-8")))
-    r.register("decodeBase64")(c => RecordOps.decodeBase64(req(c, "field")))
-    r.register("encodeBase64")(c => RecordOps.encodeBase64(req(c, "field")))
+      RecordOps.toByteArray(c("field"), c.getOrElse("charset", "UTF-8")))
+    r.register("decodeBase64")(c => RecordOps.decodeBase64(c("field")))
+    r.register("encodeBase64")(c => RecordOps.encodeBase64(c("field")))
     r.register("addCurrentTime")(c =>
       RecordOps.addCurrentTime(c.getOrElse("field", "timestamp")))
     r.register("addLocalHost")(c =>
       RecordOps.addLocalHost(c.getOrElse("field", "host")))
     r.register("generateSolrSequenceKey") { c =>
       RecordOps.deterministicKey(c.getOrElse("field", "id"),
-        splitList(req(c, "baseIdField")).map(col): _*)
+        c.list("baseIdField").map(col): _*)
     }
     r.register("sanitizeUnknownSolrFields") { c =>
       // field list comes from an explicit `fields` config or (the reference
@@ -279,8 +257,8 @@ object StandardOps {
       // doesn't matter. No known schema → pass-through (the reference would
       // fetch it from live Solr; without one there is nothing to sanitize
       // against).
-      val explicit = c.get("fields").map(splitList)
-      val collection = c.get("solrLocator.collection")
+      val explicit = if (c.contains("fields")) Some(c.list("fields")) else None
+      val collection = c.block("solrLocator").flatMap(_.get("collection"))
       Op("sanitizeUnknownSolrFields") { df =>
         explicit.orElse(collection.flatMap(graft.io.Sinks.SolrEnv.schemaOf))
           .map(graft.io.Sinks.sanitizeToSchema(df, _)).getOrElse(df)
@@ -288,10 +266,11 @@ object StandardOps {
     }
     // sinks (§2.D) — terminal commands that load and pass the record on
     r.register("loadSolr") { c =>
-      val collection = c.get("solrLocator.collection").orElse(c.get("collection"))
+      val locator = c.block("solrLocator")
+      val collection = locator.flatMap(_.get("collection")).orElse(c.get("collection"))
         .getOrElse(throw new IllegalArgumentException(
           "loadSolr needs solrLocator.collection"))
-      val batch = c.get("solrLocator.batchSize").orElse(c.get("batchSize"))
+      val batch = locator.flatMap(_.get("batchSize")).orElse(c.get("batchSize"))
         .map(_.toInt).getOrElse(1000)
       Op("loadSolr")(df => graft.io.Sinks.loadSolr(df, collection, batch))
     }
@@ -330,25 +309,15 @@ object StandardOps {
       }
     }
     r.register("extractURIComponents")(c =>
-      RecordOps.extractUriComponents(req(c, "field"),
+      RecordOps.extractUriComponents(c("field"),
         c.getOrElse("prefix", "uri_")))
     r.register("extractURIQueryParameters")(c =>
-      RecordOps.extractUriQueryParam(req(c, "field"), req(c, "parameter"),
-        c.getOrElse("outputField", req(c, "parameter"))))
+      RecordOps.extractUriQueryParam(c("field"), c("parameter"),
+        c.getOrElse("outputField", c("parameter"))))
     r.register("extractAvroPaths") { c =>
-      val paths = req(c, "paths").split(",").map { kv =>
-        val Array(out, path) = kv.split(":", 2); path.trim -> out.trim
-      }.toSeq
-      RecordOps.extractPaths(c.getOrElse("field", "avro"), paths: _*)
+      val paths = entriesOf(c, "paths").map(_.swap)
+      RecordOps.extractPaths(c.getOrElse("field", "_attachment_body"), paths: _*)
     }
     r
   }
-
-  /** Compile a named spec — ordered (command, config) pairs — into a
-    * Pipeline, resolving each command through the registry (the morphline
-    * compile step, MorphlineTransform.java:166-195, minus HOCON).
-    */
-  def compile(id: String, spec: Seq[(String, Map[String, String])],
-              reg: OpRegistry = registry): Pipeline =
-    Pipeline(id, spec.map { case (name, cfg) => reg.build(name, cfg) })
 }

@@ -104,8 +104,8 @@ object Similarity {
     * not style: the optimizer collapses Project+Filter and substitutes
     * the FULL score expression (containing the O(dim) dot) into the
     * filter condition once per reference, and neither FilterExec nor
-    * cross-operator codegen eliminates the copies (measured with
-    * [[graft.tools.CodegenAudit]]: an `isNotNull && !isnan && abs=!=Inf`
+    * cross-operator codegen eliminates the copies (counted in the
+    * whole-stage generated code: an `isNotNull && !isnan && abs=!=Inf`
     * spelling inlines the dot loop 3× in the filter + 1× in the project).
     * `abs(c) <= Double.MaxValue` is a TOTAL finiteness test under Spark's
     * NaN-is-largest comparison order: NULL → NULL (dropped), NaN → false

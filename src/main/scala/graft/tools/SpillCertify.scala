@@ -15,11 +15,10 @@ import org.apache.spark.sql.SparkSession
   *     hashes for a spill-prone headline subset over the CLEAN 10× blow-up
   *     of sf0.1 (6M-row lineitem, 50k docs — sf1-equivalent), recording its
   *     own spill metrics (expected ≈0: nothing should spill at 8 GB).
-  *  2. It spawns a CHILD JVM with `-Xmx1500m` (SPARK_GRAFT_SPILL_HEAP) and
-  *     few, large shuffle partitions (SPARK_GRAFT_SPILL_PARTS, default 8,
-  *     on local[8]) so per-task execution memory is ~1500m·0.6/8 ≈ 110 MB
-  *     against multi-hundred-MB per-task sorts — the spill paths MUST
-  *     engage. The child records per-query `memoryBytesSpilled` /
+  *  2. It spawns a CHILD JVM with `-Xmx1500m` (`ChildHeap`) and 8 large
+  *     shuffle partitions (`ChildParts`, on local[8]) so per-task
+  *     execution memory is ~1500m·0.6/8 ≈ 110 MB against
+  *     multi-hundred-MB per-task sorts — the spill paths MUST engage. The child records per-query `memoryBytesSpilled` /
   *     `diskBytesSpilled` from its own task metrics and the same canonical
   *     result hash.
   *  3. The parent asserts (a) every query's child hash equals its
@@ -30,12 +29,15 @@ import org.apache.spark.sql.SparkSession
   * Usage: sbt "runMain graft.tools.SpillCertify" — env knobs:
   *   SPARK_GRAFT_SF_DIR        base corpus (default /root/testdata/sf0.1)
   *   SPARK_GRAFT_SPILL_FACTOR  blow-up factor (default 10; 1 = base dir)
-  *   SPARK_GRAFT_SPILL_HEAP    child -Xmx (default 1500m)
   *   SPARK_GRAFT_SPILL_CPUS    child local[k] (default 8)
-  *   SPARK_GRAFT_SPILL_PARTS   child shuffle partitions (default 8)
   * Exit 0 = certified (all hashes equal AND spill engaged); 1 otherwise.
   */
 object SpillCertify {
+
+  /** The child JVM's -Xmx and shuffle partitions: small enough that the
+    * headline sorts and aggregates cannot fit in execution memory. */
+  private val ChildHeap = "1500m"
+  private val ChildParts = "8"
 
   /** Spill-prone headline subset: full-partition window sorts, sort-merge
     * as-of, multi-join TPC-H shapes, line-grain explode shuffles, corpus
@@ -141,9 +143,7 @@ object SpillCertify {
     }
     val sfBase = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SPILL_FACTOR", "10").toInt
-    val heap = sys.env.getOrElse("SPARK_GRAFT_SPILL_HEAP", "1500m")
     val childCpus = sys.env.getOrElse("SPARK_GRAFT_SPILL_CPUS", "8")
-    val childParts = sys.env.getOrElse("SPARK_GRAFT_SPILL_PARTS", "8")
     val names = if (args.isEmpty) certQueries
                 else if (args.contains("__probe__")) Seq("__probe__")
                 else certQueries.filter(n => args.exists(n.startsWith))
@@ -151,7 +151,7 @@ object SpillCertify {
     val dir = if (factor <= 1) sfBase
               else graft.ScaleBench.ensureBlowup(spark, sfBase, factor)
     System.err.println(s"[spill] corpus: $dir (factor $factor), " +
-      s"child heap $heap, local[$childCpus], $childParts shuffle partitions")
+      s"child heap $ChildHeap, local[$childCpus], $ChildParts shuffle partitions")
 
     val ref = runAll(spark, dir, names, "spill-ref")
     val refSpill = ref.map(r => r._4 + r._5).sum
@@ -168,7 +168,7 @@ object SpillCertify {
          else ""))
     val runDir = java.nio.file.Files.createTempDirectory("graft-spill-")
     java.nio.file.Files.write(runDir.resolve("spill.conf"),
-      (s"$dir\n$childCpus\n$childParts\n${names.mkString(",")}\n" +
+      (s"$dir\n$childCpus\n$ChildParts\n${names.mkString(",")}\n" +
         s"$childMaster\n$childExecMem\n").getBytes("UTF-8"))
     val jvmArgs = java.lang.management.ManagementFactory
       .getRuntimeMXBean.getInputArguments
@@ -180,7 +180,7 @@ object SpillCertify {
       if (!a.startsWith("-agentlib") && !a.startsWith("-Xmx") &&
           !a.startsWith("-Xms")) cmd.add(a)
     }
-    cmd.add(s"-Xmx$heap")
+    cmd.add(s"-Xmx$ChildHeap")
     cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
     cmd.add("graft.tools.SpillCertify"); cmd.add("child")
     cmd.add(runDir.toString)
@@ -218,13 +218,13 @@ object SpillCertify {
     val engaged = totalSpill > 0
     System.err.println(
       f"[spill] reference-run spill (8G heap): ${refSpill / 1048576} MB; " +
-        f"pressured-run spill ($heap): ${totalSpill / 1048576} MB across " +
+        f"pressured-run spill ($ChildHeap): ${totalSpill / 1048576} MB across " +
         s"$spilled/${names.size} queries")
     val ok = allMatch && engaged
     System.err.println("[spill] " + (if (ok)
       "CERTIFIED: all hashes identical under memory pressure AND the spill paths demonstrably engaged"
     else if (!engaged)
-      "FAIL: nothing spilled — the run proves nothing (shrink SPARK_GRAFT_SPILL_HEAP or partitions)"
+      "FAIL: nothing spilled — the run proves nothing (raise SPARK_GRAFT_SPILL_FACTOR or shrink ChildHeap/ChildParts)"
     else "FAIL: result diverged under spill — wrong-result-under-pressure defect"))
     spark.stop()
     if (!ok) sys.exit(1)

@@ -191,9 +191,10 @@ class BranchFusionSpec extends SparkSpec {
     assertSame(p(df), union)
     val r = p(df).filter($"id" === 2).select("x", "y", "z", "w").head()
     // w is absent in rule 1's view: addValues starts an empty list, where
-    // the sibling's (null there) list would make the result null
+    // the sibling's (null there) list would make the result null. z sees
+    // y, which the block assigns before it.
     assert(r.isNullAt(0) && r.getString(1) == "" &&
-      r.getString(2) == """{"id":2,"k":"q"}""" && r.getSeq[String](3) == Seq("b"))
+      r.getString(2) == """{"id":2,"k":"q","y":""}""" && r.getSeq[String](3) == Seq("b"))
   }
 
   test("a streaming run of etl.conf's commands matches the union form in batch") {

@@ -118,8 +118,8 @@ class HoconPipelineSpec extends SparkSpec {
   }
 
   test("Kite value-list elements containing commas survive the config carrier") {
-    // ["a, b"] is ONE element with an embedded comma — the unit-separator
-    // array flattening must not mangle it into two values
+    // ["a, b"] is ONE element with an embedded comma — a list takes an
+    // array's elements whole, never splitting one into two values
     val listConf =
       """morphlines : [
         |  { id : c, commands : [ { contains { title : ["a, b", solo] } } ] }

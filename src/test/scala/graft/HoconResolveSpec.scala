@@ -93,8 +93,8 @@ class HoconResolveSpec extends AnyFunSuite {
   }
 }
 
-/** HOCON control-flow parity: `if`/`tryRules`/`pipe` nested command blocks
-  * compile from `.conf` text the way `fromJson` compiles their JSON shapes.
+/** HOCON control flow: `if`/`tryRules`/`pipe` nested command blocks
+  * compile from `.conf` text and apply branch semantics.
   */
 class HoconControlFlowSpec extends SparkSpec {
   import spark.implicits._

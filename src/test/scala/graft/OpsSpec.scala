@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.{Grok, Interp, TimeFunctions}
 import graft.ops.{ControlOps, ParserOps, RecordOps}
-import graft.pipeline.{Op, OpRegistry, Pipeline}
+import graft.pipeline.{Op, OpRegistry, Pipeline, PipelineSpec}
 import org.apache.spark.sql.functions._
 
 class OpsSpec extends SparkSpec {
@@ -143,9 +143,11 @@ class OpsSpec extends SparkSpec {
   test("op registry builds by name, unknown op fails with names listed") {
     val reg = new OpRegistry()
       .register("head")(cfg => ControlOps.head(cfg("n").toInt))
+    def compile(command: String) = PipelineSpec.fromHocon(
+      s"morphlines : [ { id : r, commands : [ $command ] } ]", "r", reg)
     val df = Seq(1, 2, 3).toDF("v")
-    assert(reg.build("head", Map("n" -> "2"))(df).count() == 2)
-    val e = intercept[IllegalArgumentException](reg.build("nope"))
+    assert(compile("{ head { n : 2 } }")(df).count() == 2)
+    val e = intercept[IllegalArgumentException](compile("{ nope {} }"))
     assert(e.getMessage.contains("head"))
   }
 

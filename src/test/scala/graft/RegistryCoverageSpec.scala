@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.StandardOps
+import graft.pipeline.{PipelineSpec, StandardOps}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** COVERAGE.md's "Registered morphline commands" section is generated from
@@ -22,7 +22,7 @@ class RegistryCoverageSpec extends AnyFunSuite {
     val documented = raw"`([A-Za-z0-9]+)`".r.findAllMatchIn(body)
       .map(_.group(1)).toSet -- Set("if", "tryRules", "pipe",
         "StandardOps", "PipelineSpec", "RegistryCoverageSpec", "fromHocon",
-        "fromJson", "registry")
+        "registry")
     val registered = StandardOps.registry.names.toSet
     assert(documented == registered,
       s"COVERAGE.md drift — undocumented: ${registered -- documented}; " +
@@ -44,7 +44,9 @@ class RegistryCoverageSpec extends AnyFunSuite {
     assert(r.names.contains("userShout"))
     // a fresh StandardOps.registry is NOT polluted by user registration
     assert(!StandardOps.registry.names.contains("userShout"))
-    val op = r.build("userShout", Map("field" -> "x"))
+    val op = PipelineSpec.fromHocon(
+      "morphlines : [ { id : u, commands : [ { userShout { field : x } } ] } ]",
+      "u", r).ops.last
     assert(op.name == "userShout")
   }
 
@@ -52,7 +54,7 @@ class RegistryCoverageSpec extends AnyFunSuite {
     // the registry must never throw on *lookup* of a documented name
     // (unknown-op errors are reserved for genuinely unknown commands)
     StandardOps.registry.names.foreach { name =>
-      try { StandardOps.registry.build(name, Map.empty); () }
+      try { StandardOps.registry.build(name); () }
       catch {
         case e: IllegalArgumentException =>
           assert(!e.getMessage.startsWith("unknown op"),

@@ -110,15 +110,17 @@ class SchemaProviderSpec extends SparkSpec {
   }
 
   test("enrichJson op accepts exactly one schema source") {
-    val reg = graft.pipeline.StandardOps.registry
-    val ok = reg.build("enrichJson", Map("schemaString" -> target))
+    def enrichJson(block: String) = graft.pipeline.PipelineSpec.fromHocon(
+      s"morphlines : [ { id : e, commands : [ { enrichJson { $block } } ] } ]",
+      "e").ops.last
+    val schemaString = "schemaString : \"\"\"" + target + "\"\"\""
+    val ok = enrichJson(schemaString)
     assert(ok.name == "enrichJson")
     intercept[IllegalArgumentException] {
-      reg.build("enrichJson",
-        Map("schemaString" -> target, "schemaFile" -> "/tmp/x.avsc"))
+      enrichJson(s"$schemaString, schemaFile : /tmp/x.avsc")
     }
     intercept[IllegalArgumentException] {
-      reg.build("enrichJson", Map.empty)
+      enrichJson("")
     }
   }
 }
