@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * reproducible. Round 13 adds (a) a factor LIST (`10,100`) so the
   * 10×→100× segment exponent is measured, not extrapolated — a 0.35
   * exponent at 10× can still knee at 100× — and (b) a skewed-key mode
-  * (`SPARK_GRAFT_SCALE_SKEW=1`) that gives one URL/domain/line-digest
+  * (`--skew`) that gives one URL/domain/line-digest
   * identity ~30% of all documents (the real CommonCrawl boilerplate
   * shape), for the dedup/agg straggler measurements.
   *
@@ -29,22 +29,27 @@ import org.apache.spark.sql.functions._
   * exactly one corpus-hot digest. Cold rows keep residues that are never
   * ≡ 0 mod 91, so ids stay unique and the cold key space stays diverse.
   *
-  * Usage: runMain graft.ScaleBench [queryPrefix ...]
-  * Env: SPARK_GRAFT_SF_DIR (base corpus), SPARK_GRAFT_CPUS,
-  *      SPARK_GRAFT_SCALE_FACTOR (default 10; comma list for segments),
-  *      SPARK_GRAFT_SCALE_SKEW (any value enables hot-key documents).
+  * Usage: runMain graft.ScaleBench [--factor=10[,100...]] [--skew]
+  *          [--reuse] [--iters=3] [queryPrefix ...]
+  *  - `--factor`: blow-up factors, a comma list for segments (default 10);
+  *  - `--skew`: hot-key documents;
+  *  - `--reuse`: keep a blow-up already built from the same base, factor
+  *    and skew;
+  *  - `--iters`: timed runs per point, median reported (default 3; the
+  *    100× streaming replays take minutes per run, and the state peak is
+  *    deterministic per corpus, so state-at-volume runs use 1).
+  * Env: SPARK_GRAFT_SF_DIR (base corpus), SPARK_GRAFT_CPUS.
   */
 object ScaleBench {
 
   /** Build the `factor`× all-tables blow-up under `bigDir`. With
-    * SPARK_GRAFT_SCALE_REUSE set, an already-materialized blow-up (and
-    * with it the memoized streaming replay staging, which keys on the
-    * dir fingerprint) is reused — for re-measuring one knob (e.g. the
-    * streaming state-partition count) without paying the build again. */
+    * `reuseOk`, an already-materialized blow-up (and with it the memoized
+    * streaming replay staging, which keys on the dir fingerprint) is
+    * reused — for re-measuring one setting (e.g. the streaming
+    * state-partition count) without paying the build again. */
   private def buildBlowup(spark: SparkSession, sfDir: String, factor: Int,
                           bigDir: String, skew: Boolean,
-                          reuseOk: Boolean =
-                            sys.env.contains("SPARK_GRAFT_SCALE_REUSE")): Unit = {
+                          reuseOk: Boolean): Unit = {
     // The reuse marker records WHAT was built (base dir + its data
     // fingerprint + factor + skew), not just that something was: reusing
     // a blow-up built from a different base would silently measure
@@ -170,7 +175,7 @@ object ScaleBench {
     Seq("part", "supplier", "nation", "region").foreach(t =>
       Tables.load(spark, sfDir, t)
         .write.mode("overwrite").parquet(s"$bigDir/$t.parquet"))
-    // record provenance so SPARK_GRAFT_SCALE_REUSE can actually match
+    // record provenance so `--reuse` can actually match
     // next time (the marker was deleted up front; without this write the
     // reuse path is dead code — advice r13)
     java.nio.file.Files.writeString(marker, provenance)
@@ -194,10 +199,18 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10")
+    val (opts, queryArgs) = args.toSeq.partition(_.startsWith("--"))
+    def valued(name: String): Option[String] =
+      opts.find(_.startsWith(s"--$name=")).map(_.stripPrefix(s"--$name="))
+    opts.filterNot(o => Set("--skew", "--reuse")(o) ||
+        o.startsWith("--factor=") || o.startsWith("--iters="))
+      .foreach(o => sys.error(s"ScaleBench: unknown option $o"))
+    val factors = valued("factor").getOrElse("10")
       .split(",").map(_.trim.toInt).toSeq.sorted
-    val skew = sys.env.contains("SPARK_GRAFT_SCALE_SKEW")
-    val prefixes = if (args.isEmpty) Seq("") else args.toSeq
+    val skew = opts.contains("--skew")
+    val reuse = opts.contains("--reuse")
+    val iters = valued("iters").getOrElse("3").toInt
+    val prefixes = if (queryArgs.isEmpty) Seq("") else queryArgs
     // Shared builder (advice r14): ScaleBench must honor the same
     // SPARK_GRAFT_MASTER knob and state-store policy as Bench/Verify — an
     // inline local[k] builder here would silently re-measure scaling in
@@ -215,17 +228,13 @@ object ScaleBench {
 
     val tag = if (skew) "skew" else "scale"
     val dirs = factors.map(f => f -> s"/tmp/graft-$tag$f")
-    dirs.foreach { case (f, d) => buildBlowup(spark, sfDir, f, d, skew) }
+    dirs.foreach { case (f, d) => buildBlowup(spark, sfDir, f, d, skew, reuse) }
 
     def time(fn: => Long): Double = {
       val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
     }
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => prefixes.exists(n.startsWith))
-    // iteration count: 100× streaming replays take minutes per iteration,
-    // so the state-at-volume runs use 1 (the state PEAK is deterministic
-    // per corpus; only the rps figure benefits from a median)
-    val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "3").toInt
     val hdr = dirs.map { case (f, _) => f"${s"t${f}x"}%8s" }.mkString(" ")
     println(f"${"query"}%-24s ${"t1x"}%8s $hdr  segment-exponents")
     names.foreach { name =>

@@ -21,7 +21,16 @@ import org.apache.spark.sql.SparkSession
   *
   * Every session built here also runs the one streaming state-store
   * policy, [[StreamState]], at session scope, so every stream started
-  * from a library session inherits it.
+  * from a library session inherits it. That policy binds `file:` to
+  * [[graft.io.NioLocalFs]]: a stream commits each micro-batch as small
+  * files (source-log entry, offset, commit, one RocksDB changelog per
+  * state partition), and Hadoop without `libhadoop` forks a `chmod` per
+  * create and a `readlink` twice per rename. On a 4-vCPU host a
+  * checkpoint file (create, 2 KB write, atomic rename) took 34-47 ms
+  * that way and 2 ms through java.nio; `etl_stream`'s median trigger
+  * fell from 607 to 381 ms, with `walCommit` 36 -> 2 ms,
+  * `commitOffsets` 35 -> 3 ms and state commit 220 -> 17 ms per
+  * trigger.
   */
 object Sessions {
 
@@ -47,7 +56,7 @@ object Sessions {
   val TrackRowsKey =
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
 
-  /** The streaming state-store policy, applied at session scope by
+  /** The streaming state and checkpoint policy, applied at session scope by
     * [[build]] and by the few sessions built elsewhere (the test session,
     * FaultInjection's crash child), so every stream runs the same one:
     *  - RocksDB provider (default since round 22): state lives off-heap
@@ -64,13 +73,21 @@ object Sessions {
     *    before every state write, about 2x write amplification purely to
     *    keep `numRowsTotal` exact. Progress then reads 0 rows however
     *    large the state, which [[graft.queries.StreamMetrics]] reports as
-    *    untracked. */
+    *    untracked.
+    *  - `file:` through [[graft.io.NioLocalFs]], for both Hadoop APIs:
+    *    checkpoint logs go through `FileContext`, RocksDB's file manager
+    *    also through `FileSystem`. Only `chmod` and `readlink` change;
+    *    `.crc` side files, Spark's checkpoint checksums and atomic rename
+    *    stay as they were. */
   val StreamState: Map[String, String] = Map(
     ProviderKey ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
       "true",
-    TrackRowsKey -> "false")
+    TrackRowsKey -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.io.NioLocalFs].getName)
 
   /** Executor-JVM wiring a `local-cluster[...]` master needs when the
     * driver was not launched by spark-submit. Executor JVMs are spawned

@@ -9,8 +9,8 @@ import org.apache.spark.storage.StorageLevel
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB shape:
   *
-  *  - exact: one hash-shuffle on a 16-byte digest (never on the raw text —
-  *    shuffling full documents would move the whole corpus).
+  *  - exact: one hash-shuffle keyed on the text's MD5 digest; the rows it
+  *    moves are whole, text included.
   *  - MinHash + LSH: candidate generation via banded signature buckets; the
   *    only shuffles are on small (band, hash) keys; verification joins only
   *    within buckets, never all-pairs.
@@ -20,8 +20,10 @@ import org.apache.spark.storage.StorageLevel
 object Dedup {
 
   /** Exact dedup: keep the lowest-id row per identical content digest.
-    * Shuffles only (digest, id) after a map-side digest — at 100 TB the
-    * shuffle payload is ~32 bytes/doc regardless of document size.
+    * One window partitioned by `md5(text)`: the exchange is keyed on the
+    * digest but carries every column, text included, so its payload is
+    * the corpus itself and grows with document size. Shuffling only
+    * (digest, id) would need a join back to the rows afterwards.
     */
   def exact(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val w = Window.partitionBy(md5(col(textCol))).orderBy(col(idCol))

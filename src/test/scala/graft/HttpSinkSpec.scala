@@ -3,7 +3,6 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.io.HttpSenders
-import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
@@ -12,7 +11,7 @@ import scala.jdk.CollectionConverters._
   * KafkaDataProducerCommandBuilder.java:317-327, retriable IO failures, and
   * the Solr JSON update surface behind `loadSolr`.
   */
-class HttpSinkSpec extends AnyFunSuite {
+class HttpSinkSpec extends SparkSpec {
 
   private val mapper = new ObjectMapper()
 
@@ -280,8 +279,6 @@ class HttpSinkSpec extends AnyFunSuite {
   }
 
   test("registry wire format: framed avro values carry magic 0x00 + BE schema id") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import org.apache.spark.sql.functions._
     val schema =
       """{"type":"record","name":"r","fields":[{"name":"v","type":"long"}]}"""
@@ -324,8 +321,6 @@ class HttpSinkSpec extends AnyFunSuite {
     // SolrEnv-level check (no HTTP): locator batchSize must bound every
     // sender invocation — the batch/commitWithin contract of
     // config/cloudsolr.conf:74-78's loadSolr
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     val batches = java.util.Collections.synchronizedList(
       new java.util.ArrayList[Int]())

@@ -2,26 +2,32 @@ package graft
 
 import graft.queries.StreamMetrics
 import graft.streaming.StreamingOps
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The library's streaming state-store policy ([[Sessions.StreamState]])
-  * as a stream started from a library session actually runs it, and the
-  * telemetry that reads its state size. */
-class StreamStateSpec extends SparkSpec {
+/** Watermarked dedup through the library path (file source →
+  * `StreamingOps.streamingDedupWithin` → parquet sink), shared by the
+  * specs that check what a library-session stream writes. */
+trait DedupRuns extends SparkSpec {
 
-  /** Watermarked dedup through the library path (file source →
-    * `StreamingOps.streamingDedupWithin` → parquet sink), two
-    * micro-batches, run to completion. Returns the query and its
-    * checkpoint directory. */
-  private def dedupRun(tag: String): (StreamingQuery, java.nio.file.Path) = {
-    val src = Tables.load(spark, sf0, "events")
+  /** The sf0 events with a timestamp `ts`, staged as parquet. */
+  def dedupInput(tag: String): java.nio.file.Path = {
+    val inDir = tempDir(s"graft-state-in-$tag")
+    Tables.load(spark, sf0, "events")
       .select(col("ts").cast("timestamp").as("ts"), col("event_type"),
         col("value"))
-    val inDir = tempDir(s"graft-state-in-$tag")
-    src.coalesce(2).write.mode("overwrite").parquet(inDir.toString)
-    val run = tempDir(s"graft-state-run-$tag")
-    val stream = StreamingOps.fileSource(spark, src.schema, inDir.toString,
+      .coalesce(2).write.mode("overwrite").parquet(inDir.toString)
+    inDir
+  }
+
+  /** One file per micro-batch from `inDir` on `session`, run to
+    * completion, writing `run/out` and checkpointing to `run/ckpt`. */
+  def dedupStream(session: SparkSession, tag: String,
+                  inDir: java.nio.file.Path,
+                  run: java.nio.file.Path): StreamingQuery = {
+    val stream = StreamingOps.fileSource(session,
+      session.read.parquet(inDir.toString).schema, inDir.toString,
       options = Map("maxFilesPerTrigger" -> "1"))
     val q = StreamingOps.streamingDedupWithin(stream, "ts", "2 hours",
         Seq("event_type", "value"))
@@ -32,8 +38,22 @@ class StreamStateSpec extends SparkSpec {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    (q, run.resolve("ckpt"))
+    q
   }
+
+  /** [[dedupStream]] on the shared session over fresh input: two
+    * micro-batches, one with data and one that only advances the
+    * watermark. Returns the query and its checkpoint directory. */
+  def dedupRun(tag: String): (StreamingQuery, java.nio.file.Path) = {
+    val run = tempDir(s"graft-state-run-$tag")
+    (dedupStream(spark, tag, dedupInput(tag), run), run.resolve("ckpt"))
+  }
+}
+
+/** The library's streaming state-store policy ([[Sessions.StreamState]])
+  * as a stream started from a library session actually runs it, and the
+  * telemetry that reads its state size. */
+class StreamStateSpec extends DedupRuns {
 
   test("library session: a watermarked dedup stream writes RocksDB " +
       "changelog checkpoints and tracks no row counts") {
