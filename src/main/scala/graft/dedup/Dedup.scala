@@ -1,10 +1,12 @@
 package graft.dedup
 
 import graft.text.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB shape:
@@ -491,13 +493,124 @@ object Dedup {
       .distinct()
   }
 
-  /** Near-dup CLUSTERS from a pair list: connected components via the
-    * alternating large-star/small-star algorithm (Kiveris et al., SoCC
-    * 2014) — each round contracts every node toward the minimum id of its
-    * component, converging in O(log² n) rounds (vs O(diameter) for plain
-    * min-label propagation) to a star per component rooted at its minimum
-    * node. That root doubles as the canonical (keep) document per cluster.
-    * Returns (id, label).
+  /** Edge count at or below which [[dedupClusters]] labels the graph on
+    * the driver. A constant, not an option, in the way Spark's broadcast
+    * threshold is one. It bounds driver memory, not time: the driver path
+    * allocates about 430 bytes per edge on the driver thread (collected
+    * rows, id arrays, the returned local relation). Measured on the
+    * 225,400-edge, 50,000-node graph of `ScaleBench --factor=10`
+    * `d_dedup_clusters` (4 vCPUs, forced onto the driver path): 96-98 MB
+    * and 0.3-0.6 s per call, query median 1.0 s against 3.0-4.2 s for the
+    * star rounds. 100,000 edges caps that at about 45 MB and 200,000 label
+    * rows; larger graphs keep the star rounds, whose driver share does not
+    * grow with the graph.
+    */
+  private val DriverEdgeLimit = 100000L
+
+  /** Id types the driver path labels; any other id type takes the star
+    * rounds. */
+  private val DriverIdTypes: Set[DataType] = Set(LongType, IntegerType)
+
+  /** Default bound on the large-star/small-star rounds: far above the
+    * O(log² n) rounds any graph needs (a 64-link adversarial chain
+    * converges in a handful). */
+  private val MaxStarRounds = 20
+
+  /** Near-dup CLUSTERS from a pair list: connected components, each node
+    * labelled with the minimum id of its component. That root doubles as
+    * the canonical (keep) document per cluster. Returns (id, label) with
+    * the pairs' id type, both columns nullable; self-pairs and duplicate
+    * pairs are dropped, and an empty pair list gives an empty result.
+    *
+    * Two paths give the same rows and schema. The round-0 aggregate
+    * materializes the cached, deduplicated edge relation and counts it:
+    *  - at or below [[DriverEdgeLimit]] edges (`Long` or `Int` ids) one
+    *    more job collects the edges and an array union-find on the driver
+    *    labels them (sorted distinct ids indexed by binary search; the
+    *    smaller index becomes the root, so each root is its component's
+    *    minimum). Its job count does not depend on the graph's shape.
+    *  - above it, the large-star/small-star rounds of [[starClusters]]
+    *    run; `maxIters` bounds only those rounds.
+    *
+    * The edge relation is cached and registered with [[graft.CacheScope]]
+    * for caller-controlled release on both paths.
+    */
+  def dedupClusters(pairs: DataFrame,
+                    maxIters: Int = MaxStarRounds): DataFrame = {
+    val e = clusterEdges(pairs)
+    val (cnt, digest) = edgeStats(e)
+    if (cnt <= DriverEdgeLimit && DriverIdTypes(e.schema("u").dataType))
+      driverLabels(e)
+    else starLabels(e, cnt, digest, maxIters)
+  }
+
+  /** The distributed path of [[dedupClusters]] whatever the edge count:
+    * connected components via the alternating large-star/small-star
+    * algorithm (Kiveris et al., SoCC 2014) — each round contracts every
+    * node toward the minimum id of its component, converging in O(log² n)
+    * rounds (vs O(diameter) for plain min-label propagation) to a star per
+    * component rooted at its minimum node. The only path for graphs too
+    * large for driver memory; specs call it directly to pin both paths to
+    * the same labels.
+    */
+  private[graft] def starClusters(pairs: DataFrame): DataFrame = {
+    val e = clusterEdges(pairs)
+    val (cnt, digest) = edgeStats(e)
+    starLabels(e, cnt, digest, MaxStarRounds)
+  }
+
+  /** Canonical directed edge list (u, v), u > v; self-pairs and duplicate
+    * pairs dropped. Cached like every other op intermediate (caller-
+    * released via CacheScope, NOT unpersisted when round 0 supersedes it):
+    * the pair list is the op's slim input relation, identical across
+    * repeated calls on the same corpus, so keeping it lets CacheManager's
+    * plan-dedupe serve re-runs without re-deriving the pairs.
+    */
+  private def clusterEdges(pairs: DataFrame): DataFrame =
+    graft.CacheScope.cache(pairs
+      .select(greatest(col("id_a"), col("id_b")).as("u"),
+        least(col("id_a"), col("id_b")).as("v"))
+      .filter(col("u") =!= col("v")).distinct())
+
+  /** ONE action: edge count + order-independent XOR digest of the edge set
+    * (XOR, not SUM: ANSI mode makes a 64-bit sum overflow). On a cached
+    * relation it also materializes the cache. */
+  private def edgeStats(e: DataFrame): (Long, Long) = {
+    val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  /** Driver path of [[dedupClusters]]: collect the (materialized) edges and
+    * label them with an array union-find. Roots only ever move to a
+    * smaller index, and ids are indexed in sorted order, so each root is
+    * its component's minimum id. */
+  private def driverLabels(e: DataFrame): DataFrame = {
+    val dt = e.schema("u").dataType
+    val edges = e.collect()
+    val us = edges.map(_.getAs[Number](0).longValue)
+    val vs = edges.map(_.getAs[Number](1).longValue)
+    val all = us ++ vs
+    java.util.Arrays.sort(all)
+    val ids = all.distinct
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    us.indices.foreach { k =>
+      val a = find(java.util.Arrays.binarySearch(ids, us(k)))
+      val b = find(java.util.Arrays.binarySearch(ids, vs(k)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val box: Long => Any = if (dt == IntegerType) _.toInt else identity
+    val rows = ids.indices.map(i => Row(box(ids(i)), box(ids(find(i)))))
+    e.sparkSession.createDataFrame(rows.asJava,
+      StructType(Seq(StructField("id", dt), StructField("label", dt))))
+  }
+
+  /** The star rounds over the materialized edge relation `e0`, whose
+    * round-0 stats are (`cnt0`, `digest0`).
     *
     * 100 TB shape: every shuffle carries (u, v) id pairs only — never the
     * documents; round count is logarithmic even for adversarial long-chain
@@ -513,42 +626,28 @@ object Dedup {
     * which this loop unpersists explicitly as each round supersedes the
     * last. The final round's cache backs the lazily-returned labels and is
     * registered with [[graft.CacheScope]] for caller-controlled release.
+    * Because round 0 materialized `e0` once, an input that is already a
+    * star fixpoint converges after ONE round, and the rounds' repeated
+    * references to `e0` read its cache instead of re-running the pair
+    * pipeline ~4× in parallel.
     */
-  def dedupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
-    // Canonical directed edge list (u, v), u > v; self-pairs dropped.
-    // Cached like every other op intermediate (caller-released via
-    // CacheScope, NOT unpersisted when round 0 supersedes it): the pair
-    // list is the op's slim input relation, identical across repeated
-    // calls on the same corpus, so keeping it lets CacheManager's
-    // plan-dedupe serve re-runs without re-deriving the pairs.
-    var e = graft.CacheScope.cache(pairs
-      .select(greatest(col("id_a"), col("id_b")).as("u"),
-        least(col("id_a"), col("id_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct())
+  private def starLabels(e0: DataFrame, cnt0: Long, digest0: Long,
+                         maxIters: Int): DataFrame = {
+    val spark = e0.sparkSession
     var cachedRound: DataFrame = null // round cache the loop owns + retires
-    // Materialize the (possibly expensive) input pair pipeline ONCE before
-    // the first star round touches it: largeStar references `e` four times
-    // (sym union + the join back), and concurrent scans of a cold cache
-    // each evaluate the underlying plan — the pair-generation join would
-    // run ~4× in parallel. The same aggregate seeds the convergence stats,
-    // so an input that is already a star fixpoint converges after ONE round.
-    val r0 = e.agg(count(lit(1)).as("c"),
-      expr("bit_xor(xxhash64(u, v))").as("s")).head()
-    var prevCnt = r0.getLong(0)
-    var prevSum = if (r0.isNullAt(1)) 0L else r0.getLong(1)
+    var prevCnt = cnt0
+    var prevSum = digest0
     // Flatten the materialized input to a LogicalRDD before the rounds
-    // reference it: `e`'s logical plan is the caller's ENTIRE pair-
+    // reference it: `e0`'s logical plan is the caller's ENTIRE pair-
     // generation tree, and one star round references e ~8x — execution
     // would hit the cache, but the analyzer/optimizer re-processes eight
     // copies of the deep pair-gen plan per round (measured ~2s of pure
     // driver time per round on a 4-edge graph). The RDD scan still reads
     // the cached blocks; the cache itself stays registered for release.
-    e = spark.createDataFrame(e.rdd, e.schema)
+    var e = spark.createDataFrame(e0.rdd, e0.schema)
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
-      val tRound = System.nanoTime()
       val next0 = smallStar(largeStar(e))
       // Every round MUST truncate the logical lineage: one star round
       // references its input ~8× (sym twice in largeStar, the join back in
@@ -563,19 +662,13 @@ object Dedup {
       val next = if (checkpointRound) next0.localCheckpoint()
         else next0.persist(StorageLevel.MEMORY_AND_DISK)
       // ONE job: materializes `next` into its cache AND yields the
-      // convergence stats — count + order-independent XOR digest of the
-      // edge set (XOR, not SUM: ANSI mode makes a 64-bit sum overflow).
-      val r = next.agg(count(lit(1)).as("c"),
-        expr("bit_xor(xxhash64(u, v))").as("s")).head()
-      val cnt = r.getLong(0)
-      val hsum = if (r.isNullAt(1)) 0L else r.getLong(1)
+      // convergence stats
+      val (cnt, hsum) = edgeStats(next)
       if (cnt == prevCnt && hsum == prevSum) {
         // probable fixpoint — exact confirmation: equal-cardinality deduped
         // sets are identical iff the difference is empty (both cached)
         converged = next.exceptAll(e).isEmpty
       }
-      if (sys.props.contains("graft.dedup.debugRounds"))
-        System.err.println(s"[dedupClusters] round=$i edges=$cnt converged=$converged ms=${(System.nanoTime() - tRound) / 1000000}")
       prevCnt = cnt; prevSum = hsum
       e = if (checkpointRound) next
         else spark.createDataFrame(next.rdd, next.schema) // flat LogicalRDD

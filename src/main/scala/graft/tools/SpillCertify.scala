@@ -26,10 +26,18 @@ import org.apache.spark.sql.SparkSession
   *     zero spilled bytes anywhere proves nothing and FAILS the
   *     certification rather than passing vacuously.
   *
-  * Usage: sbt "runMain graft.tools.SpillCertify" — env knobs:
-  *   SPARK_GRAFT_SF_DIR        base corpus (default /root/testdata/sf0.1)
-  *   SPARK_GRAFT_SPILL_FACTOR  blow-up factor (default 10; 1 = base dir)
-  *   SPARK_GRAFT_SPILL_CPUS    child local[k] (default 8)
+  * Usage: runMain graft.tools.SpillCertify [--factor=10] [--cpus=8]
+  *          [--master=local-cluster[2,2,4096]] [--exec-mem=1500m]
+  *          [queryPrefix ... | __probe__]
+  *  - `--factor`: blow-up factor of the base corpus (default 10; 1 = the
+  *    base dir itself);
+  *  - `--cpus`: the child's local[k] (default 8);
+  *  - `--master`: run the child on this master instead, e.g. a
+  *    local-cluster, so spill engages inside separate executor JVMs;
+  *  - `--exec-mem`: the executor memory of that `--master`.
+  * An unknown `--` option fails. As in every other main, the base corpus
+  * is `SPARK_GRAFT_SF_DIR` (default: the sf0.1 test data) and the
+  * reference session's cores `SPARK_GRAFT_CPUS`.
   * Exit 0 = certified (all hashes equal AND spill engaged); 1 otherwise.
   */
 object SpillCertify {
@@ -137,16 +145,40 @@ object SpillCertify {
     spark.stop()
   }
 
+  /** The parsed command line of [[main]]; `master` and `execMem` are ""
+    * when unset. */
+  private[graft] case class Options(factor: Int, cpus: String,
+                                    master: String, execMem: String,
+                                    names: Seq[String])
+
+  /** `--name=value` options anywhere in `args`, the rest query prefixes
+    * (`__probe__` alone selects the synthetic probe; none selects every
+    * cert query). An unknown `--` option fails. */
+  private[graft] def parseArgs(args: Seq[String]): Options = {
+    val (opts, queryArgs) = args.partition(_.startsWith("--"))
+    val known = Seq("factor", "cpus", "master", "exec-mem")
+    def valued(name: String): Option[String] =
+      opts.find(_.startsWith(s"--$name=")).map(_.stripPrefix(s"--$name="))
+    opts.filterNot(o => known.exists(k => o.startsWith(s"--$k=")))
+      .foreach(o => sys.error(s"SpillCertify: unknown option $o"))
+    // optional multi-JVM child: --master (e.g. 'local-cluster[2,2,4096]')
+    // + --exec-mem (e.g. '1500m') starve the EXECUTOR processes instead of
+    // the child driver; the -Xmx child heap then only bounds the driver side
+    Options(valued("factor").getOrElse("10").toInt,
+      valued("cpus").getOrElse("8"),
+      valued("master").getOrElse(""), valued("exec-mem").getOrElse(""),
+      if (queryArgs.isEmpty) certQueries
+      else if (queryArgs.contains("__probe__")) Seq("__probe__")
+      else certQueries.filter(n => queryArgs.exists(n.startsWith)))
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("child")) {
       childMain(java.nio.file.Paths.get(args(1))); return
     }
     val sfBase = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SPILL_FACTOR", "10").toInt
-    val childCpus = sys.env.getOrElse("SPARK_GRAFT_SPILL_CPUS", "8")
-    val names = if (args.isEmpty) certQueries
-                else if (args.contains("__probe__")) Seq("__probe__")
-                else certQueries.filter(n => args.exists(n.startsWith))
+    val Options(factor, childCpus, childMaster, childExecMem, names) =
+      parseArgs(args.toSeq)
     val spark = graft.Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val dir = if (factor <= 1) sfBase
               else graft.ScaleBench.ensureBlowup(spark, sfBase, factor)
@@ -156,12 +188,6 @@ object SpillCertify {
     val ref = runAll(spark, dir, names, "spill-ref")
     val refSpill = ref.map(r => r._4 + r._5).sum
 
-    // optional multi-JVM child: SPARK_GRAFT_SPILL_MASTER (e.g.
-    // 'local-cluster[2,2,4096]') + SPARK_GRAFT_SPILL_EXEC_MEM (e.g.
-    // '1500m') starve the EXECUTOR processes instead of the child
-    // driver; the -Xmx child heap then only bounds the driver side
-    val childMaster = sys.env.getOrElse("SPARK_GRAFT_SPILL_MASTER", "")
-    val childExecMem = sys.env.getOrElse("SPARK_GRAFT_SPILL_EXEC_MEM", "")
     if (childMaster.nonEmpty)
       System.err.println(s"[spill] child master: $childMaster" +
         (if (childExecMem.nonEmpty) s", executor memory $childExecMem"
@@ -224,7 +250,7 @@ object SpillCertify {
     System.err.println("[spill] " + (if (ok)
       "CERTIFIED: all hashes identical under memory pressure AND the spill paths demonstrably engaged"
     else if (!engaged)
-      "FAIL: nothing spilled — the run proves nothing (raise SPARK_GRAFT_SPILL_FACTOR or shrink ChildHeap/ChildParts)"
+      "FAIL: nothing spilled — the run proves nothing (raise --factor or shrink ChildHeap/ChildParts)"
     else "FAIL: result diverged under spill — wrong-result-under-pressure defect"))
     spark.stop()
     if (!ok) sys.exit(1)

@@ -20,6 +20,20 @@ class CertToolsSpec extends SparkSpec {
       s"SpillCertify queries outside the plan-fingerprinted headline: $unheadlined")
   }
 
+  test("SpillCertify options: defaults, each option, typos fail, prefixes stay positional") {
+    import tools.SpillCertify.{Options, certQueries, parseArgs}
+    assert(parseArgs(Nil) == Options(10, "8", "", "", certQueries))
+    assert(parseArgs(Seq("--factor=100", "--cpus=4",
+        "--master=local-cluster[2,2,4096]", "--exec-mem=1500m")) ==
+      Options(100, "4", "local-cluster[2,2,4096]", "1500m", certQueries))
+    // options and query prefixes mix in any order
+    assert(parseArgs(Seq("q_window", "--cpus=2", "q5_")) ==
+      Options(10, "2", "", "", Seq("q5_local_supplier", "q_window_rank")))
+    assert(parseArgs(Seq("--factor=1", "__probe__")).names == Seq("__probe__"))
+    for (typo <- Seq("--factr=1", "--cpus", "--probe"))
+      intercept[RuntimeException](parseArgs(Seq(typo)))
+  }
+
   test("ConcurrentServe queries all exist and are batch-only") {
     val missing = tools.ConcurrentServe.serveQueries
       .filterNot(SparkEntry.queries.contains)

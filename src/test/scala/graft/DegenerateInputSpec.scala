@@ -132,7 +132,10 @@ class DegenerateInputSpec extends SparkSpec {
         new java.util.ArrayList[Row](),
         StructType(Seq(StructField("id_a", LongType),
           StructField("id_b", LongType))))
-      assert(Dedup.dedupClusters(emptyPairs).count() == 0)
+      val driver = Dedup.dedupClusters(emptyPairs)
+      val star = Dedup.starClusters(emptyPairs)
+      assert(driver.count() == 0 && star.count() == 0)
+      assert(driver.schema == star.schema, s"${driver.schema} vs ${star.schema}")
     }
   }
 

@@ -4,6 +4,7 @@ import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.sim.Similarity
 import graft.text.TextAnalysis
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class LlmOpsSpec extends SparkSpec {
@@ -130,12 +131,26 @@ class LlmOpsSpec extends SparkSpec {
     assert(approx == Set((1L, 2L)))
   }
 
+  /** Labels of `pairs` from both paths of `dedupClusters` — the driver
+    * union-find every graph here takes and the star rounds — asserting
+    * equal schemas and equal rows. */
+  private def bothPaths(pairs: DataFrame): Map[Long, Long] = {
+    val driver = Dedup.dedupClusters(pairs)
+    val star = Dedup.starClusters(pairs)
+    assert(driver.schema == star.schema, s"${driver.schema} vs ${star.schema}")
+    def rows(df: DataFrame) = df.collect().map(r => (r.get(0), r.get(1)))
+      .toSeq.sortBy(_.toString)
+    assert(rows(driver) == rows(star))
+    rows(driver).map { case (id, l) =>
+      id.asInstanceOf[Number].longValue -> l.asInstanceOf[Number].longValue
+    }.toMap
+  }
+
   test("dedup clusters: chained pairs collapse to one canonical label") {
     // components: {1,2,3,9} (chain 1-2, 2-3, 3-9), {5,6}; singleton 7-8 pair
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 6L), (7L, 8L))
       .toDF("id_a", "id_b")
-    val labels = Dedup.dedupClusters(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labels = bothPaths(pairs)
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L,
       5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 7L), labels)
   }
@@ -143,10 +158,10 @@ class LlmOpsSpec extends SparkSpec {
   test("dedup clusters: adversarial long chain converges in O(log n) rounds") {
     // a 64-link path graph has diameter 64 — plain min-label propagation
     // would need >20 rounds; the large-star/small-star loop must finish
-    // (and be exact) within the default maxIters = 20 ≫ log²(65)
+    // (and be exact) within its 20-round bound ≫ log²(65);
+    // bothPaths runs them through starClusters
     val pairs = (1L until 65L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = Dedup.dedupClusters(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labels = bothPaths(pairs)
     assert(labels.size == 65 && labels.values.forall(_ == 1L), labels)
   }
 
@@ -154,10 +169,68 @@ class LlmOpsSpec extends SparkSpec {
     // chain 65-64-...-1 fed as (hi, lo) pairs plus a disjoint 2-cycle
     val pairs = ((65L until 130L).map(i => (i + 1, i)) :+ (200L, 201L))
       .toDF("id_a", "id_b")
-    val labels = Dedup.dedupClusters(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labels = bothPaths(pairs)
     assert((65L to 130L).forall(labels(_) == 65L) && labels(200L) == 200L &&
       labels(201L) == 200L, labels)
+  }
+
+  test("dedup clusters: driver and star paths agree on stars, cliques, " +
+      "duplicate and self pairs, and Int ids") {
+    // a 64-leaf star whose center is its largest id
+    val star = bothPaths((1L to 64L).map(i => (100L, i)).toDF("id_a", "id_b"))
+    assert(star == ((1L to 64L) :+ 100L).map(_ -> 1L).toMap, star)
+    // a 10-node clique, every edge in both directions
+    val clique = bothPaths((for (a <- 11L to 20L; b <- 11L to 20L if a != b)
+      yield (a, b)).toDF("id_a", "id_b"))
+    assert(clique == (11L to 20L).map(_ -> 11L).toMap, clique)
+    // duplicate and self pairs: self-only nodes get no label
+    val dups = bothPaths(Seq((3L, 4L), (4L, 3L), (3L, 4L), (5L, 5L), (4L, 6L),
+      (7L, 7L)).toDF("id_a", "id_b"))
+    assert(dups == Map(3L -> 3L, 4L -> 3L, 6L -> 3L), dups)
+    // Int ids keep their type on both paths (bothPaths compares schemas)
+    val ints = Seq((9, 8), (8, 7), (1, 2)).toDF("id_a", "id_b")
+    assert(Dedup.dedupClusters(ints).schema("id").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(bothPaths(ints) == Map(7L -> 7L, 8L -> 7L, 9L -> 7L, 1L -> 1L,
+      2L -> 1L))
+  }
+
+  test("dedup clusters: a below-limit graph runs the same jobs whatever its " +
+      "shape") {
+    // the star rounds' job count follows the graph's shape (a chain needs
+    // more rounds than a star); the driver path's must not
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def jobs(pairs: DataFrame): Int = {
+      val group = s"dedup-clusters-${System.nanoTime()}"
+      val counted = new java.util.concurrent.atomic.AtomicInteger
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`group`) => counted.incrementAndGet()
+            case Some(g) if g == s"$group-end" => drained.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "dedupClusters")
+        Dedup.dedupClusters(pairs).collect()
+        // one marker job after the call: the listener sees job starts in
+        // order, so once it sees the marker it has seen every call job
+        sc.setJobGroup(s"$group-end", "marker")
+        sc.parallelize(Seq(1), 1).count()
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        counted.get
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
+    val chain = jobs((1001L to 1064L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+    val star = jobs((2001L to 2064L).map(i => (3000L, i)).toDF("id_a", "id_b"))
+    assert(chain == star, s"64-link chain ran $chain jobs, 64-leaf star $star")
   }
 
   test("decontamination: only docs sharing an 8-gram with the eval set flag") {

@@ -311,9 +311,10 @@ class PropertySpec extends SparkSpec {
   }
 
   test("dedupClusters equals single-node union-find on random edge sets") {
-    // same class of test that caught the BPE greedy bug: the distributed
-    // construction (large-star/small-star rounds) checked against an
-    // independent textbook reference, not its own mirror
+    // same class of test that caught the BPE greedy bug: both paths — the
+    // driver union-find these small graphs take and the distributed
+    // large-star/small-star rounds — checked against an independent
+    // textbook reference, not their own mirror
     val edgeGen = for {
       n <- Gen.chooseNum(2L, 40L)
       m <- Gen.chooseNum(1, 60)
@@ -321,8 +322,11 @@ class PropertySpec extends SparkSpec {
     } yield edges.filter(e => e._1 != e._2)
     forAllSampled(edgeGen, n = 5) { edges =>
       if (edges.nonEmpty) {
-        val got = graft.dedup.Dedup.dedupClusters(edges.toDF("id_a", "id_b"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val pairs = edges.toDF("id_a", "id_b")
+        def labels(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val driver = labels(graft.dedup.Dedup.dedupClusters(pairs))
+        val star = labels(graft.dedup.Dedup.starClusters(pairs))
         // union-find with min-rooting: component root = min node id
         val parent = scala.collection.mutable.Map.empty[Long, Long]
         def find(x: Long): Long = {
@@ -335,7 +339,8 @@ class PropertySpec extends SparkSpec {
         }
         val want = edges.flatMap(e => Seq(e._1, e._2)).distinct
           .map(x => x -> find(x)).toMap
-        assert(got == want, s"edges=$edges")
+        assert(driver == want, s"driver path, edges=$edges")
+        assert(star == want, s"star path, edges=$edges")
       }
     }
   }

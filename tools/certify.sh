@@ -90,9 +90,7 @@ tools/fault_injection.sh "$SF"
 
 echo "=== certify 2/4: spill certification (100x blow-up, 1500m child) ==="
 SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SPILL_BASE:-/root/testdata/sf0.1} \
-SPARK_GRAFT_SPILL_FACTOR=100 \
-SPARK_GRAFT_SPILL_CPUS=4 \
-sbt -batch "runMain graft.tools.SpillCertify"
+sbt -batch "runMain graft.tools.SpillCertify --factor=100 --cpus=4"
 
 # DEFAULT since r19 (was opt-in; r18 VERDICT item 4): the same spill
 # certification with the pressured side running as SEPARATE 1500m
@@ -101,11 +99,7 @@ sbt -batch "runMain graft.tools.SpillCertify"
 if [ "${CERTIFY_SPILL_LC:-1}" = "1" ]; then
   echo "=== certify 2b/4: spill inside separate executor JVMs ==="
   SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SPILL_BASE:-/root/testdata/sf0.1} \
-  SPARK_GRAFT_SPILL_FACTOR=100 \
-  SPARK_GRAFT_SPILL_CPUS=4 \
-  SPARK_GRAFT_SPILL_MASTER='local-cluster[2,2,4096]' \
-  SPARK_GRAFT_SPILL_EXEC_MEM=1500m \
-  sbt -batch "runMain graft.tools.SpillCertify"
+  sbt -batch "runMain graft.tools.SpillCertify --factor=100 --cpus=4 --master=local-cluster[2,2,4096] --exec-mem=1500m"
 fi
 
 echo "=== certify 3/4: concurrent serving (sf0.01 + sf0.1) ==="
