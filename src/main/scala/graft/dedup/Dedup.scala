@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for training-data pipelines, each designed for
@@ -154,12 +155,225 @@ object Dedup {
     * Xiao et al.'s PPJoin): identical output to a blocked all-pairs join,
     * without the quadratic hazard of joining on coarse block keys alone.
     *
-    * Principle: order every document's shingles by ascending global
-    * frequency; any pair with Jaccard >= t must share at least one shingle
-    * within each side's first (|s| - floor(t·|s|) + 1) shingles under that
-    * common order. Exploding ONLY those prefixes and equi-joining on
-    * (blockCols, shingle) yields a candidate superset of the true result,
-    * then each candidate pair is verified with one exact Jaccard.
+    * Principle: rank every shingle under ONE global total order and sort
+    * each document's shingles by it. Candidates are the pairs sharing a
+    * (blocks…, shingle) key within both sides' first
+    * (|s| - floor(t·|s|) + 1) shingles whose ranks also pass PPJoin's
+    * length and positional filters; each candidate is then verified with
+    * one exact Jaccard. Neither filter depends on WHICH total order:
+    *  - pigeonhole: J >= t forces overlap o >= t·|A| (as o <= |B|). Had
+    *    A's first shared shingle a rank past the prefix, every shared
+    *    shingle would sit in A's last floor(t·|A|) - 1 places, so
+    *    o < t·|A|.
+    *  - positional (§3.2): J >= t forces o >= t/(1+t)·(|A|+|B|), and
+    *    every shared shingle sorts at or after the FIRST shared one, at
+    *    ranks (i, j), so o <= 1 + min(|A|-i, |B|-j).
+    * The first shared shingle of a true pair therefore always survives,
+    * under any order both sides share. Frequency-ascending orders keep
+    * the prefixes on rare shingles, which is what makes them short. Both
+    * filters use `tEff = threshold - 1e-6`, so they stay conservative.
+    *
+    * Two paths give the same rows and schema. One aggregate materializes
+    * the cached (id, blocks…, sh) relation and sums its shingle
+    * occurrences:
+    *  - at or below [[DriverShingleLimit]] occurrences (`Long` or `Int`
+    *    ids, blocks of a [[DriverBlockTypes]] type) one more job collects
+    *    the relation and [[driverJaccardPairs]] joins it in memory,
+    *    returning a local relation. Its order is (document frequency,
+    *    first occurrence).
+    *  - otherwise the distributed join of [[distributedJaccardPairs]]
+    *    runs, ordered by (frequency, shingle bytes). The driver path
+    *    falls back to it as well when a non-null id repeats (the
+    *    distributed join-back multiplies such rows) or when its
+    *    candidate-join rows would pass [[DriverCandidateLimit]].
+    *
+    * Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard within
+    * 1e-6 of `threshold` or above (callers round and apply the exact
+    * threshold; the slack means float rounding can only ADD candidates).
+    * Null ids and null block values never pair, as SQL `===` never
+    * matches null. `threshold` must be positive: a prefix filter only
+    * finds pairs that share a shingle, so it could not keep a promise
+    * that includes zero-overlap pairs.
+    */
+  def jaccardPairsExact(df: DataFrame, textCol: String, idCol: String,
+                        blockCols: Seq[String] = Nil, shingleSize: Int = 3,
+                        threshold: Double = 0.5): DataFrame = {
+    val tEff = effectiveThreshold("jaccardPairsExact", threshold)
+    val base = shingleBase(df, textCol, idCol, blockCols, shingleSize)
+    val keyFields = base.schema.fields.take(1 + blockCols.size)
+    val onDriver = DriverIdTypes(keyFields.head.dataType) &&
+      keyFields.tail.forall(f => DriverBlockTypes(f.dataType)) &&
+      shingleOccurrences(base) <= DriverShingleLimit
+    (if (onDriver) driverJaccardPairs(base, blockCols.size, tEff) else None)
+      .getOrElse(distributedJaccardPairs(base, blockCols, tEff))
+  }
+
+  /** The distributed path of [[jaccardPairsExact]] whatever the input
+    * size. The only path for inputs too large for driver memory; specs
+    * call it directly to pin both paths to the same rows. */
+  private[graft] def jaccardPairsDistributed(df: DataFrame, textCol: String,
+      idCol: String, blockCols: Seq[String] = Nil, shingleSize: Int = 3,
+      threshold: Double = 0.5): DataFrame =
+    distributedJaccardPairs(
+      shingleBase(df, textCol, idCol, blockCols, shingleSize), blockCols,
+      effectiveThreshold("jaccardPairsExact", threshold))
+
+  /** Shingle occurrences at or below which [[jaccardPairsExact]] joins on
+    * the driver. A constant, not an option, like [[DriverEdgeLimit]]. It
+    * bounds driver memory, not time: the driver path allocates 350-460
+    * bytes per occurrence on the driver thread (collected rows, shingle
+    * ids, posting lists, the local relation). Measured on 4 vCPUs:
+    * `curation_batch` seed 7, 196,863 occurrences: 69-84 MB, 0.18-0.58 s;
+    * sf0.1 `documents`, 260,388: 87-120 MB, 0.42-1.06 s; the 2,653,880 of
+    * `ScaleBench --factor=10` `d_ngram_jaccard` (forced onto this path):
+    * 1.14-1.16 GB, 2.1-3.6 s, against 18.6-29.1 s for its distributed
+    * query. 500,000 caps a call near 230 MB; larger inputs keep the
+    * distributed join, whose driver share does not grow with the input.
+    */
+  private val DriverShingleLimit = 500000L
+
+  /** Candidate-join rows past which the driver path hands the input to
+    * the distributed join before probing. A row is two prefix entries
+    * sharing a (blocks…, shingle) key, counted before the length and
+    * positional filters, as the distributed equi-join produces it; the
+    * count is known from the posting-list lengths. It bounds driver time
+    * and output on corpora of near-identical documents or hot shingles,
+    * where the rows grow with the square of the documents; the distinct
+    * candidates, and so the pairs, never outnumber them. Measured (4
+    * vCPUs): 21,930 rows for `curation_batch` seed 7 (238 distinct), 11,385
+    * and 452,041 for sf0.1 `documents` at t=0.2 in (source, lang) blocks
+    * and unblocked at t=0.5; the 10x blow-up's 10,818,955 rows (855,010
+    * distinct) probed and verified in 0.54-0.87 s, 50-80 ns a row. 2M rows
+    * is over 4x the largest of this repository's driver-path inputs and
+    * caps the probe near 0.15 s.
+    */
+  private val DriverCandidateLimit = 2000000L
+
+  /** Block column types whose `Row` values compare with `==` exactly as
+    * SQL `===` does; blocks of any other type (floating point, binary,
+    * nested) take the distributed join. */
+  private val DriverBlockTypes: Set[DataType] = Set(StringType, LongType,
+    IntegerType, ShortType, ByteType, BooleanType, DateType)
+
+  /** `threshold - 1e-6`, the bound both pair paths filter on, after
+    * rejecting a threshold the prefix filter cannot honour. */
+  private def effectiveThreshold(op: String, threshold: Double): Double = {
+    require(threshold > 0, s"$op: threshold must be > 0, got $threshold " +
+      "(a prefix filter finds only pairs that share a shingle)")
+    threshold - 1e-6
+  }
+
+  /** ONE action over the cached shingle relation: materializes it and
+    * returns its shingle occurrences. */
+  private def shingleOccurrences(base: DataFrame): Long = {
+    val r = base.agg(sum(size(col("sh")))).head()
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
+
+  /** Driver path of [[jaccardPairsExact]] over the materialized `base`
+    * (id, blocks…, sh): PPJoin in memory, or None to fall back (a
+    * repeated non-null id, or more than [[DriverCandidateLimit]]
+    * candidate-join rows). Shingles are ranked by (document frequency,
+    * first occurrence), and each document's prefix is entered into one
+    * posting list per (block group, rank). Documents are probed in order
+    * against the lists' earlier entries. The length, prefix and
+    * positional filters are the distributed join condition's formulas in
+    * the same `Double` arithmetic. Each distinct candidate is verified once, by
+    * merging the two rank-sorted arrays into
+    * [[graft.exprs.HashExprs.ArrayJaccard]]'s `inter / (|A| + |B| - inter)`,
+    * so `jaccard` is bit-identical. The distributed path's
+    * `ranked`/`prefix` caches are never built.
+    */
+  private def driverJaccardPairs(base: DataFrame, nBlocks: Int,
+                                 tEff: Double): Option[DataFrame] = {
+    val rows = base.collect()
+    val ids = rows.map(r =>
+      if (r.isNullAt(0)) None else Some(r.getAs[Number](0).longValue))
+    val known = ids.flatten
+    if (known.distinct.length < known.length) return None
+    val shingles = rows.map(_.getSeq[String](nBlocks + 1))
+    // shingles as dense ids in first-seen order, ranked by (document
+    // frequency, id): a global total order, which is all exactness needs
+    val idOfShingle = mutable.HashMap.empty[String, Int]
+    val docShingles = shingles.map(_.iterator
+      .map(t => idOfShingle.getOrElseUpdate(t, idOfShingle.size)).toArray)
+    val freq = new Array[Int](idOfShingle.size)
+    docShingles.foreach(_.foreach(t => freq(t) += 1))
+    val order = Array.tabulate(freq.length)(t => freq(t).toLong << 32 | t)
+    java.util.Arrays.sort(order)
+    val rank = new Array[Int](order.length)
+    order.indices.foreach(r => rank(order(r).toInt) = r)
+    val sets = docShingles.map { a =>
+      val r = a.map(rank); java.util.Arrays.sort(r); r
+    }
+    // only documents with a non-null id and non-null blocks can pair; each
+    // one's prefix as posting-list numbers
+    val docs = rows.indices.filter(i => (0 to nBlocks).forall(!rows(i).isNullAt(_)))
+    val groups = mutable.HashMap.empty[Seq[Any], Int]
+    val listOf = mutable.LongMap.empty[Int]
+    val prefixes = docs.map { x =>
+      val g = groups.getOrElseUpdate((1 to nBlocks).map(rows(x).get), groups.size)
+      val sz = sets(x).length
+      Array.tabulate(math.min(sz, sz - math.floor(tEff * sz).toInt + 1)) { i =>
+        listOf.getOrElseUpdate((g.toLong << 32) | sets(x)(i), listOf.size)
+      }
+    }
+    val len = new Array[Int](listOf.size)
+    prefixes.foreach(_.foreach(l => len(l) += 1))
+    // the candidate join's rows before its filters: any two entries of a list
+    if (len.iterator.map(n => n.toLong * (n - 1) / 2).sum > DriverCandidateLimit)
+      return None
+    val start = len.scanLeft(0)(_ + _)
+    val fill = start.clone() // lists fill in document order
+    val entryDoc = new Array[Int](start.last)
+    val entryRank = new Array[Int](start.last)
+    val posCoef = tEff / (1 + tEff)
+    val seen = Array.fill(rows.length)(-1) // last x that verified y
+    val out = mutable.ArrayBuffer.empty[(Long, Long, Row)]
+    docs.indices.foreach { d =>
+      val x = docs(d); val a = sets(x); val sx = a.length
+      prefixes(d).indices.foreach { i0 =>
+        val l = prefixes(d)(i0); val i = i0 + 1
+        var e = start(l)
+        while (e < fill(l)) {
+          val y = entryDoc(e); val b = sets(y); val sy = b.length
+          if (seen(y) != x &&
+              sx.toDouble >= tEff * sy.toDouble &&
+              sy.toDouble >= tEff * sx.toDouble &&
+              (1 + math.min(sx - i, sy - entryRank(e))).toDouble >=
+                posCoef * (sx + sy).toDouble) {
+            seen(y) = x
+            var inter = 0; var p = 0; var q = 0
+            while (p < sx && q < sy) {
+              if (a(p) < b(q)) p += 1
+              else if (a(p) > b(q)) q += 1
+              else { inter += 1; p += 1; q += 1 }
+            }
+            val jac = inter.toDouble / (sx + sy - inter).toDouble
+            if (jac >= tEff) {
+              val (lo, hi) = if (ids(x).get < ids(y).get) (x, y) else (y, x)
+              out += ((ids(lo).get, ids(hi).get,
+                Row(rows(lo).get(0), rows(hi).get(0), jac)))
+            }
+          }
+          e += 1
+        }
+        entryDoc(fill(l)) = x; entryRank(fill(l)) = i; fill(l) += 1
+      }
+    }
+    // the distributed result's schema: id_b comes out of an explode of a
+    // collect_set, which holds no nulls; jaccard is null iff an input is
+    val id = base.schema("id")
+    Some(base.sparkSession.createDataFrame(
+      out.sortBy(t => (t._1, t._2)).map(_._3).asJava,
+      StructType(Seq(
+        StructField("id_a", id.dataType, id.nullable),
+        StructField("id_b", id.dataType, nullable = false),
+        StructField("jaccard", DoubleType, base.schema("sh").nullable)))))
+  }
+
+  /** The distributed prefix-filtered self-join of [[jaccardPairsExact]]
+    * over the cached shingle relation `base`.
     *
     * 100 TB shape: every shuffle is keyed by shingle (fine-grained;
     * frequency-ascending prefixes keep the join buckets on RARE shingles),
@@ -168,17 +382,10 @@ object Dedup {
     * that shingle's document frequency, not the block size. The extra cost
     * vs LSH is one global token-frequency aggregation (linear, combiner-
     * friendly) — the price of exactness.
-    *
-    * Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard within
-    * 1e-6 of `threshold` or above (callers round and apply the exact
-    * threshold; the slack means float rounding can only ADD candidates).
     */
-  def jaccardPairsExact(df: DataFrame, textCol: String, idCol: String,
-                        blockCols: Seq[String] = Nil, shingleSize: Int = 3,
-                        threshold: Double = 0.5): DataFrame = {
-    val tEff = threshold - 1e-6
-    val (base, _, prefix) =
-      shinglePrefixRelations(df, textCol, idCol, blockCols, shingleSize, tEff)
+  private def distributedJaccardPairs(base: DataFrame, blockCols: Seq[String],
+                                      tEff: Double): DataFrame = {
+    val (_, prefix) = shinglePrefixRelations(base, blockCols, tEff)
     val a = prefix.alias("a"); val b = prefix.alias("b")
     val cond = blockCols.map(c => col(s"a.$c") === col(s"b.$c"))
       .foldLeft(col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
@@ -248,10 +455,10 @@ object Dedup {
   def containmentPairsExact(df: DataFrame, textCol: String, idCol: String,
                             blockCols: Seq[String] = Nil, shingleSize: Int = 3,
                             threshold: Double = 0.8): DataFrame = {
-    val tEff = threshold - 1e-6
-    val (base, ranked, prefix) =
-      shinglePrefixRelations(df, textCol, idCol, blockCols, shingleSize, tEff,
-        cacheRanked = true)
+    val tEff = effectiveThreshold("containmentPairsExact", threshold)
+    val base = shingleBase(df, textCol, idCol, blockCols, shingleSize)
+    val (ranked, prefix) =
+      shinglePrefixRelations(base, blockCols, tEff, cacheRanked = true)
     // containment prunes ONLY the smaller side (the prefix); the larger
     // side keeps its full posting list — ranked, so the positional filter
     // below can bound the remaining overlap on BOTH sides
@@ -285,27 +492,32 @@ object Dedup {
       .filter(col("containment") >= tEff)
   }
 
-  /** Shared prefix-filter scaffolding for the exact pair ops
-    * ([[jaccardPairsExact]], [[containmentPairsExact]]): the base shingle
-    * relation, the exploded (id, blocks, sz, tok) stream, and the per-doc
-    * frequency-ascending pigeonhole prefix for effective threshold `tEff`
-    * — floor (not ceil) of t·sz under-counts the required overlap, so the
-    * prefix is never too short and exactness is preserved at the
-    * boundary. ONE definition so the prefix-length subtlety and the cache
-    * policy can't drift between the two metrics.
-    *
-    * All three relations feed multiple consumers or a self-join and are
-    * cached (caller-released via [[graft.CacheScope.releaseAll]]; at
-    * 100 TB these are the relations you'd checkpoint between stages).
+  /** The base shingle relation (id, blocks…, sh) of the exact pair ops
+    * ([[jaccardPairsExact]], [[containmentPairsExact]]), documents without
+    * shingles dropped. It feeds several consumers and is cached
+    * (caller-released via [[graft.CacheScope.releaseAll]]; at 100 TB it
+    * is the relation you'd checkpoint between stages).
     */
-  private def shinglePrefixRelations(df: DataFrame, textCol: String,
-      idCol: String, blockCols: Seq[String], shingleSize: Int,
-      tEff: Double, cacheRanked: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
-    val blocks = blockCols.map(col)
-    val base = graft.CacheScope.cache(
-      df.select((col(idCol).as("id") +: blocks :+
+  private def shingleBase(df: DataFrame, textCol: String, idCol: String,
+                          blockCols: Seq[String], shingleSize: Int): DataFrame =
+    graft.CacheScope.cache(
+      df.select((col(idCol).as("id") +: blockCols.map(col) :+
         TextAnalysis.wordShingles(col(textCol), shingleSize).as("sh")): _*)
       .filter(size(col("sh")) > 0))
+
+  /** Shared prefix-filter scaffolding of the distributed exact pair ops
+    * over [[shingleBase]]: the exploded (id, blocks, sz, tok) stream
+    * ranked per doc, and the per-doc frequency-ascending pigeonhole
+    * prefix for effective threshold `tEff` — floor (not ceil) of t·sz
+    * under-counts the required overlap, so the prefix is never too short
+    * and exactness is preserved at the boundary. ONE definition so the
+    * prefix-length subtlety and the cache policy can't drift between the
+    * two metrics. The prefix feeds a self-join and is cached (caller-
+    * released, like `base`).
+    */
+  private def shinglePrefixRelations(base: DataFrame, blockCols: Seq[String],
+      tEff: Double, cacheRanked: Boolean = false): (DataFrame, DataFrame) = {
+    val blocks = blockCols.map(col)
     // toks is deliberately NOT cached: it is the one corpus-sized
     // relation here (every shingle OCCURRENCE), and each of its consumers
     // re-derives it from cached `base` with a scan-stage explode —
@@ -326,7 +538,7 @@ object Dedup {
     val prefix = graft.CacheScope.cache(ranked
       .filter(col("__rn") <=
         col("sz") - floor(lit(tEff) * col("sz")).cast("int") + 1))
-    (base, ranked, prefix)
+    (ranked, prefix)
   }
 
   /** Per-document fraction of sentences duplicated elsewhere in the corpus —
@@ -511,7 +723,7 @@ object Dedup {
     * rounds. */
   private val DriverIdTypes: Set[DataType] = Set(LongType, IntegerType)
 
-  /** Default bound on the large-star/small-star rounds: far above the
+  /** Bound on the large-star/small-star rounds: far above the
     * O(log² n) rounds any graph needs (a 64-link adversarial chain
     * converges in a handful). */
   private val MaxStarRounds = 20
@@ -530,18 +742,17 @@ object Dedup {
     *    smaller index becomes the root, so each root is its component's
     *    minimum). Its job count does not depend on the graph's shape.
     *  - above it, the large-star/small-star rounds of [[starClusters]]
-    *    run; `maxIters` bounds only those rounds.
+    *    run, at most [[MaxStarRounds]] of them.
     *
     * The edge relation is cached and registered with [[graft.CacheScope]]
     * for caller-controlled release on both paths.
     */
-  def dedupClusters(pairs: DataFrame,
-                    maxIters: Int = MaxStarRounds): DataFrame = {
+  def dedupClusters(pairs: DataFrame): DataFrame = {
     val e = clusterEdges(pairs)
     val (cnt, digest) = edgeStats(e)
     if (cnt <= DriverEdgeLimit && DriverIdTypes(e.schema("u").dataType))
       driverLabels(e)
-    else starLabels(e, cnt, digest, maxIters)
+    else starLabels(e, cnt, digest)
   }
 
   /** The distributed path of [[dedupClusters]] whatever the edge count:
@@ -556,7 +767,7 @@ object Dedup {
   private[graft] def starClusters(pairs: DataFrame): DataFrame = {
     val e = clusterEdges(pairs)
     val (cnt, digest) = edgeStats(e)
-    starLabels(e, cnt, digest, MaxStarRounds)
+    starLabels(e, cnt, digest)
   }
 
   /** Canonical directed edge list (u, v), u > v; self-pairs and duplicate
@@ -631,8 +842,7 @@ object Dedup {
     * references to `e0` read its cache instead of re-running the pair
     * pipeline ~4× in parallel.
     */
-  private def starLabels(e0: DataFrame, cnt0: Long, digest0: Long,
-                         maxIters: Int): DataFrame = {
+  private def starLabels(e0: DataFrame, cnt0: Long, digest0: Long): DataFrame = {
     val spark = e0.sparkSession
     var cachedRound: DataFrame = null // round cache the loop owns + retires
     var prevCnt = cnt0
@@ -647,7 +857,7 @@ object Dedup {
     var e = spark.createDataFrame(e0.rdd, e0.schema)
     var converged = false
     var i = 0
-    while (!converged && i < maxIters) {
+    while (!converged && i < MaxStarRounds) {
       val next0 = smallStar(largeStar(e))
       // Every round MUST truncate the logical lineage: one star round
       // references its input ~8× (sym twice in largeStar, the join back in
@@ -680,7 +890,7 @@ object Dedup {
     // At the star fixpoint every edge points directly at its component's
     // minimum node, so labels read straight off the edges; roots (targets)
     // label themselves. groupBy-min also degrades gracefully to "min
-    // incident label" if maxIters was exhausted before the fixpoint.
+    // incident label" if the rounds ran out before the fixpoint.
     e.select(col("u").as("id"), col("v").as("label"))
       .unionAll(e.select(col("v").as("id"), col("v").as("label")))
       .groupBy(col("id")).agg(min(col("label")).as("label"))

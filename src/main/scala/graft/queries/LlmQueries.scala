@@ -71,9 +71,9 @@ object LlmQueries {
     * every consumer (`d_ngram_jaccard`, `d_dedup_clusters`,
     * `d_soft_weights`, `d_cluster_keep_best`) so their plans cannot drift
     * apart through alias or parameter changes in hand-copied variants.
-    * `jaccardPairsExact` caches its product until the next
-    * `CacheScope.releaseAll`, so the bench's cold run of each consumer
-    * pays pair generation and its warm runs reuse the product.
+    * `jaccardPairsExact` caches only its shingles here: corpora up to
+    * sf0.1 are joined on the driver each time a query is built, so every
+    * bench run of a consumer pays pair generation in its own window.
     */
   private def jacPairs(s: SparkSession, dir: String): DataFrame =
     Dedup.jaccardPairsExact(

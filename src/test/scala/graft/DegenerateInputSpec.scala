@@ -95,10 +95,33 @@ class DegenerateInputSpec extends SparkSpec {
       import graft.dedup.Dedup
       for (d <- Seq(emptyDocs, oneDoc, nullDocs)) {
         assert(Dedup.minhashLshPairs(d, "text", "doc_id").count() == 0)
-        assert(Dedup.jaccardPairsExact(d, "text", "doc_id").count() == 0)
+        assert(PairPaths.jaccard(d, "text", "doc_id").count() == 0)
         assert(Dedup.containmentPairsExact(d, "text", "doc_id").count() == 0)
         assert(Dedup.simhashPairs(d, "text", "doc_id").count() == 0)
         assert(Dedup.winnowPairs(d, "text", "doc_id").count() == 0)
+      }
+    }
+  }
+
+  test("exact pair finders reject a threshold of zero or below") {
+    // a prefix filter finds only pairs that share a shingle, so it cannot
+    // return the zero-overlap pairs a threshold <= 0 would promise
+    afterEach {
+      import graft.dedup.Dedup
+      val twoDocs = docsOf(
+        Row(1L, "alpha beta gamma delta", null, "web"),
+        Row(2L, "epsilon zeta eta theta", null, "web"))
+      for (t <- Seq(0.0, -0.5)) {
+        val calls = Seq[() => DataFrame](
+          () => Dedup.jaccardPairsExact(twoDocs, "text", "doc_id", threshold = t),
+          () => Dedup.jaccardPairsDistributed(twoDocs, "text", "doc_id",
+            threshold = t),
+          () => Dedup.containmentPairsExact(twoDocs, "text", "doc_id",
+            threshold = t))
+        for (call <- calls) {
+          val e = intercept[IllegalArgumentException](call())
+          assert(e.getMessage.contains("threshold must be > 0"), e.getMessage)
+        }
       }
     }
   }

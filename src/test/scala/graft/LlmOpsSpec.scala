@@ -62,7 +62,8 @@ class LlmOpsSpec extends SparkSpec {
   test("prefix-filtered jaccard join is EXACT: equals the all-pairs result") {
     val docs = Tables.load(spark, sf0, "documents")
       .select(col("doc_id"), col("source"), col("lang"), col("text"))
-    val fast = Dedup.jaccardPairsExact(docs, "text", "doc_id",
+    // both paths agree (PairPaths); the driver path's rows are checked here
+    val fast = PairPaths.jaccard(docs, "text", "doc_id",
         Seq("source", "lang"), shingleSize = 3, threshold = 0.2)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jac"))
       .filter(col("jac") >= 0.2)
@@ -79,6 +80,57 @@ class LlmOpsSpec extends SparkSpec {
       .filter(col("jac") >= 0.2)
       .as[(Long, Long, Double)].collect().toSet
     assert(fast == brute, s"prefix filter diverged: ${fast.diff(brute)} extra, ${brute.diff(fast)} missing")
+  }
+
+  test("jaccard pairs: both paths agree on Int ids, null ids and blocks, " +
+      "one-shingle and equal-size near-duplicate documents") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val near = (1 to 20).map(i => s"w$i").mkString(" ") // 18 shingles
+    val rows = Seq(
+      Row(1, "a", near), Row(2, "a", near + " extra"), // J = 18/19
+      Row(null, "a", near),  // a null id never pairs
+      Row(3, null, near),    // nor does a null block value
+      Row(4, "b", near), Row(5, "b", near.replace("w10", "x10")), // 15/21
+      Row(6, "b", "solo"), Row(7, "b", "solo"), // one shingle each: J = 1
+      Row(8, "b", "other"))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("doc_id", IntegerType),
+        StructField("src", StringType), StructField("text", StringType))))
+    val pairs = PairPaths.jaccard(df, "text", "doc_id", Seq("src"),
+      threshold = 0.5)
+    assert(pairs.schema("id_a").dataType == IntegerType)
+    assert(pairs.collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+      .toSet == Set((1, 2, 18.0 / 19), (4, 5, 15.0 / 21), (6, 7, 1.0)))
+  }
+
+  test("jaccard pairs: both paths stay exact when every shingle frequency ties") {
+    // a ring of 8 four-word documents: every word sits in exactly four of
+    // them, so the global order is decided by the token alone. Neighbours
+    // share 3 words (J = 3/5), next-but-one 2 (2/6), then 1 (1/7).
+    val words = (0 until 8).map(i => s"r$i")
+    val docs = (0 until 8).map(k =>
+      (k.toLong, (0 until 4).map(i => words((k + i) % 8)).mkString(" ")))
+      .toDF("doc_id", "text")
+    val got = PairPaths.jaccard(docs, "text", "doc_id", shingleSize = 1,
+        threshold = 0.3)
+      .as[(Long, Long, Double)].collect().toSet
+    val want = for {
+      a <- 0L until 8L; b <- a + 1 until 8L
+      d = math.min(b - a, 8 - (b - a)) if d <= 2
+    } yield (a, b, (4 - d).toDouble / (4 + d))
+    assert(got == want.toSet, s"$got vs $want")
+  }
+
+  test("jaccard pairs: a repeated id takes the distributed join") {
+    // the distributed join-back multiplies the rows of a repeated id, so
+    // the driver path hands such corpora to it
+    val near = (1 to 20).map(i => s"w$i").mkString(" ")
+    val docs = Seq((1L, near), (1L, near + " extra"), (2L, near))
+      .toDF("doc_id", "text")
+    val got = PairPaths.jaccard(docs, "text", "doc_id", onDriver = false)
+      .as[(Long, Long, Double)].collect().sorted.toSeq
+    assert(got == Seq((1L, 2L, 18.0 / 19), (1L, 2L, 1.0)), got)
   }
 
   test("containment pairs catch a quote inside a much longer page that jaccard misses") {

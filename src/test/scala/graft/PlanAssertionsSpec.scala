@@ -118,10 +118,17 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("ngram jaccard: no self-join keyed only on coarse (source, lang) blocks") {
-    // the op persists its result relation, so cache substitution collapses
+    // d_ngram_jaccard's small sf0 corpus is joined on the driver, a local
+    // relation with no join; the distributed entry on the same input is
+    // the plan larger corpora run, so that is the one inspected. It
+    // persists its result relation, so cache substitution collapses
     // the OPTIMIZED plan to an InMemoryRelation leaf — inspect the ANALYZED
     // plan, which still carries the join tree as constructed
-    val df = SparkEntry.queries("d_ngram_jaccard")(spark, sf0)
+    import org.apache.spark.sql.functions.{col, round}
+    val docs = Tables.load(spark, sf0, "documents")
+      .select(col("doc_id"), col("source"), col("lang"), col("text"))
+    val df = graft.dedup.Dedup.jaccardPairsDistributed(docs, "text", "doc_id",
+      Seq("source", "lang"), shingleSize = 3, threshold = 0.2)
     val joins = df.queryExecution.analyzed.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
         j.condition.map(_.sql).getOrElse("")
@@ -132,6 +139,11 @@ class PlanAssertionsSpec extends SparkSpec {
       assert(c.contains("tok"), s"join keyed only on coarse block: $c")
     }
     assert(joins.exists(_.contains("tok")), s"no shingle-keyed candidate join in: $joins")
+    // and the query returns that entry's rows
+    val query = SparkEntry.queries("d_ngram_jaccard")(spark, sf0).collect().toSeq
+    val dist = df.select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jac"))
+      .filter(col("jac") >= 0.2).orderBy("id_a", "id_b").collect().toSeq
+    assert(query.nonEmpty && query == dist, s"$query vs $dist")
   }
 
   test("embed neardup: exact tier is gated by the block-size guard") {

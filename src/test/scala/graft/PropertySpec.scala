@@ -356,9 +356,10 @@ class PropertySpec extends SparkSpec {
     forAllSampled(Gen.listOfN(8, docGen), n = 4) { texts =>
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      val got = graft.dedup.Dedup
-        .jaccardPairsExact(docs, "text", "doc_id", Nil,
-          shingleSize = 2, threshold = 0.3)
+      // both paths: the driver join these corpora take and the
+      // distributed one (PairPaths asserts they agree)
+      val got = PairPaths
+        .jaccard(docs, "text", "doc_id", Nil, shingleSize = 2, threshold = 0.3)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
         .filter(col("j") >= 0.3)
         .as[(Long, Long, Double)].collect().toSet
