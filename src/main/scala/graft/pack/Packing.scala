@@ -1,10 +1,9 @@
 package graft.pack
 
 import graft.text.TextAnalysis
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Training-batch assembly operators: sequence packing and deterministic
   * source mixing — the last-mile steps between a filtered corpus and a
@@ -17,40 +16,29 @@ object Packing {
     * window `capacity` chops the tape, and each document is assigned the
     * window its FIRST token lands in. The GPT-style packing scheme (Brown
     * et al. 2020 §2.2 pack-to-2048; the T5 "pack examples" input pipeline).
-    * Returns (id, n_toks, bin).
+    * Returns (id, n_toks, bin, bin_off). Rows whose id is null are left
+    * out: an id-ordered tape has no place for them, and their tokens must
+    * not shift anyone else's offset.
     *
     * Scalable global cumulative sum: a bare `Window.orderBy(id)` funnels
     * the whole corpus through ONE task — the classic global-sort bottleneck.
-    * Instead the cumsum is two-level: (1) per-doc token counts stay in the
-    * scan stage; (2) contiguous id RANGES aggregate their token sums (slim
-    * (range, sum) shuffle with map-side combine); (3) the bounded range
-    * list — corpus/rangeSize entries, the caller sizes it like any
-    * driver-side model — prefix-sums on the driver and broadcast-joins
-    * back; (4) within-range cumsums run as a window PARTITIONED BY range,
-    * parallel across ranges. No stage sees more than a range of rows in
-    * one task.
-    *
-    * Step (3) has two implementations behind `distributedPrefix`:
-    *  - false (default, right for most corpora): the bounded range list
-    *    collects to the driver, prefix-sums in a loop, and broadcast-joins
-    *    back. Simple, but the collect is a single-threaded driver pass —
-    *    ~2.4M rows at 10^10 docs with the default rangeSize.
-    *  - true: the range-level prefix is a second Spark window ordered by
-    *    range — the two-level scan never leaves the cluster. The global
-    *    window funnels the RANGE relation (corpus/rangeSize slim rows,
-    *    never documents) through one task, the same bounded-dimension
-    *    shape as every per-source model aggregate here; the join back is
-    *    planner-chosen (broadcast while small, shuffle when not).
+    * Instead the cumsum is two-level ([[cumulativeTokens]]): contiguous id
+    * RANGES of `rangeSize` ids aggregate their token sums (slim
+    * (range, sum) shuffle with map-side combine), the range list
+    * prefix-sums in a window ordered by range and broadcast-joins back,
+    * and within-range cumsums run as a window PARTITIONED BY range,
+    * parallel across ranges. No stage sees more than one range of
+    * documents in one task (the range-prefix window sees corpus/rangeSize
+    * slim rows, never documents), and building the plan runs no job.
     */
   def packSequences(df: DataFrame, textCol: String, idCol: String,
-                    capacity: Long, rangeSize: Long = 4096,
-                    distributedPrefix: Boolean = false): DataFrame =
+                    capacity: Long, rangeSize: Long = 4096): DataFrame =
     packByLength(
       // null text counts as zero-length (kite missing-field semantics):
       // a null n_toks would otherwise null-poison bin/bin_off for the row
       df.select(col(idCol).as("__id"),
         coalesce(TextAnalysis.tokenCount(col(textCol)), lit(0)).as("__len")),
-      "__len", "__id", capacity, rangeSize, distributedPrefix)
+      "__len", "__id", capacity, rangeSize)
 
   /** [[packSequences]] over a PRECOMPUTED length column — the form a real
     * pipeline uses once lengths come from an actual tokenizer
@@ -58,9 +46,7 @@ object Packing {
     * whitespace counting. Same two-level prefix sum, same output columns.
     */
   def packByLength(df: DataFrame, lenCol: String, idCol: String,
-                   capacity: Long, rangeSize: Long = 4096,
-                   distributedPrefix: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
+                   capacity: Long, rangeSize: Long = 4096): DataFrame = {
     // cached (caller-released): tc feeds the range aggregate AND the join
     // probe — uncached, the caller's length pipeline evaluated once per
     // consumer (p_pack_bpe's BPE-encode chain ran TWICE per invocation;
@@ -69,32 +55,36 @@ object Packing {
     val tc = graft.CacheScope.cache(
       df.select(col(idCol).cast("long").as("id"),
           col(lenCol).cast("long").as("n_toks"))
+        .filter(col("id").isNotNull)
         .withColumn("rng", expr(s"id div $rangeSize")))
-    val rangeAgg = tc.groupBy(col("rng")).agg(sum(col("n_toks")).as("rs"))
-    val prefixDf = if (distributedPrefix) {
-      rangeAgg.select(col("rng"),
-        coalesce(sum(col("rs")).over(Window.orderBy(col("rng"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("prefix"))
-    } else {
-      // Bounded driver fetch: one (range, sum) row per id range.
-      val rangeSums = rangeAgg.orderBy(col("rng")).collect()
-      var acc = 0L
-      val prefixRows = rangeSums.map { r =>
-        val p = acc; acc += r.getLong(1); Row(r.getLong(0), p)
-      }
-      broadcast(spark.createDataFrame(
-        spark.sparkContext.parallelize(prefixRows.toSeq, 1),
-        StructType(Seq(StructField("rng", LongType, nullable = false),
-          StructField("prefix", LongType, nullable = false)))))
-    }
-    val w = Window.partitionBy(col("rng")).orderBy(col("id"))
-    tc.join(prefixDf, Seq("rng"))
-      .withColumn("cum_end", col("prefix") + sum(col("n_toks")).over(w))
+    cumulativeTokens(tc, "rng", col("rng"))
       .withColumn("bin", expr(s"(cum_end - n_toks) div $capacity"))
       // where in its window the doc STARTS — the dataloader needs this to
       // place attention/loss-mask boundaries without re-counting tokens
       .withColumn("bin_off", expr(s"(cum_end - n_toks) % $capacity"))
       .select(col("id"), col("n_toks"), col("bin"), col("bin_off"))
+  }
+
+  /** The two-level cumulative token sum behind [[packByLength]] and
+    * [[selectWithinBudget]] (the scan-then-propagate prefix sum, Blelloch
+    * 1990): `tc`'s (id, n_toks) rows are grouped by `key`; each key's
+    * token total prefix-sums over all keys before it in `order`, and
+    * joins back to its rows, where a window partitioned by `key` adds the
+    * running sum in id order. Returns `tc`'s columns plus `prefix` and
+    * `cum_end`, the tape offset just past the row's last token. The
+    * prefix join is an explicit broadcast for the lengthBuckets reason:
+    * the key relation is bounded (id ranges, rounded scores), but its size
+    * estimate inherits the corpus scan's.
+    */
+  private def cumulativeTokens(tc: DataFrame, key: String,
+                               order: Column): DataFrame = {
+    val prefix = tc.groupBy(col(key)).agg(sum(col("n_toks")).as("rs"))
+      .select(col(key),
+        coalesce(sum(col("rs")).over(Window.orderBy(order)
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("prefix"))
+    tc.join(broadcast(prefix), Seq(key))
+      .withColumn("cum_end", col("prefix") + sum(col("n_toks"))
+        .over(Window.partitionBy(col(key)).orderBy(col("id"))))
   }
 
   /** Length-quantile bucket assignment — the dynamic-batching /
@@ -151,15 +141,15 @@ object Packing {
     * the kept set is a deterministic prefix of the quality ranking.
     * Returns (id, n_toks, score, cum_end) for kept documents only.
     *
-    * Scale shape: the cumulative-tokens-by-rank sum reuses the two-level
-    * scan of [[packSequences]], with SCORE QUANTILES as the ranges: the
-    * corpus reduces to a per-rounded-score token histogram
-    * (dimension-sized — scores arrive rounded to a few decimals), the
-    * range prefix runs over that histogram in descending score order, and
-    * within-range cumsums window per rounded score. A corpus where many
-    * docs share one rounded score puts them in one window partition — the
-    * caller controls that granularity through the score's rounding, the
-    * same knob as packSequences' rangeSize.
+    * Scale shape: the cumulative-tokens-by-rank sum is the two-level
+    * scan of [[packSequences]] ([[cumulativeTokens]]), with SCORE
+    * QUANTILES as the ranges: the corpus reduces to a per-rounded-score
+    * token histogram (dimension-sized — scores arrive rounded to a few
+    * decimals), the range prefix runs over that histogram in descending
+    * score order, and within-range cumsums window per rounded score. A
+    * corpus where many docs share one rounded score puts them in one
+    * window partition — the caller controls that granularity through the
+    * score's rounding, the same knob as packSequences' rangeSize.
     */
   def selectWithinBudget(df: DataFrame, textCol: String, idCol: String,
                          scoreCol: String, budgetTokens: Long): DataFrame = {
@@ -173,16 +163,8 @@ object Packing {
         col(scoreCol).cast("double").as("score"),
         coalesce(TextAnalysis.tokenCount(col(textCol)).cast("long"), lit(0L))
           .as("n_toks")))
-    val rangeAgg = tc.groupBy(col("score")).agg(sum(col("n_toks")).as("rs"))
     // prefix of all STRICTLY BETTER scores (descending order)
-    val prefix = rangeAgg.select(col("score"),
-      coalesce(sum(col("rs")).over(Window.orderBy(col("score").desc)
-        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("prefix"))
-    val w = Window.partitionBy(col("score")).orderBy(col("id"))
-    // broadcast for the same estimate-lapse reason as lengthBuckets: the
-    // prefix relation is bounded by distinct rounded scores
-    tc.join(broadcast(prefix), Seq("score"))
-      .withColumn("cum_end", col("prefix") + sum(col("n_toks")).over(w))
+    cumulativeTokens(tc, "score", col("score").desc)
       .filter(col("cum_end") <= budgetTokens)
       .select(col("id"), col("n_toks"), col("score"), col("cum_end"))
   }

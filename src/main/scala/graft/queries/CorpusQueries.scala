@@ -448,13 +448,13 @@ object CorpusQueries {
       Packing.packSequences(docs(s, dir), "text", "doc_id", capacity = 2048)
         .orderBy("id")),
 
-    // Same packing, driver-free: the range-level prefix sum runs as a
-    // second Spark window instead of a driver collect — the 100 TB path.
-    // Gated against the SAME oracle as p_pack_sequences, which IS the
-    // two-path parity proof at both verify scales.
+    // Same packing over 17-id ranges: the verify scales' 500 doc_ids span
+    // 30 ranges (one at the default 4096), so the range-level prefix is
+    // non-zero. Gated against the SAME oracle as p_pack_sequences: the
+    // range size must not change a single bin.
     "p_pack_dist" -> ((s, dir) =>
       Packing.packSequences(docs(s, dir), "text", "doc_id", capacity = 2048,
-          distributedPrefix = true)
+          rangeSize = 17)
         .orderBy("id")),
 
     // Packing datasheet: how many documents a GPT-style concat-and-chop
@@ -1589,8 +1589,8 @@ object CorpusQueries {
         |  1000000 * split_docs // n_docs AS split_ppm
         |FROM agg""".stripMargin,
 
-    // identical math to p_pack_sequences — the distributed-prefix path
-    // must be indistinguishable by result
+    // identical math to p_pack_sequences — a multi-range prefix must be
+    // indistinguishable by result
     "p_pack_dist" ->
       """SELECT id, n_toks, (cum_end - n_toks) // 2048 AS bin,
         |  (cum_end - n_toks) % 2048 AS bin_off FROM (

@@ -370,10 +370,14 @@ object Similarity {
     // invocation (round-22 ScanAudit: d_embed_neardup 8 parquet scans of
     // embeddings). Caller-released via CacheScope.releaseAll; the budget
     // guard's head() below materializes it before the joins fan out.
+    // Serialized, as nbScoreLabeled's: the relation is corpus-sized, so
+    // its blocks stay serialized rather than holding per-batch object
+    // headers on-heap.
     val e = graft.CacheScope.cache(
       df.select(col(blockCol).as("blk"), col(idCol).as("id"),
           asDouble(col(vecCol)).as("v"))
-        .withColumn("nrm", norm(col("v"))))
+        .withColumn("nrm", norm(col("v"))),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // One tiny row per block; joining it back is broadcast-sized under
     // AQE. Cached too: consumed by the guard job and the tagged join.
     val sizes = graft.CacheScope.cache(

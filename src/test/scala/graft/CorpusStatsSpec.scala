@@ -4,6 +4,7 @@ import graft.dedup.Dedup
 import graft.pack.Packing
 import graft.sim.Similarity
 import graft.text.CorpusStats
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CorpusStatsSpec extends SparkSpec {
@@ -138,33 +139,42 @@ class CorpusStatsSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("packSequences distributed prefix matches the driver-collect path exactly") {
+  // every doc's first token must sit where the sequential id-ordered tape
+  // puts it: (bin, bin_off) = (off / capacity, off % capacity)
+  private def assertSequentialTape(packed: DataFrame, capacity: Long,
+                                   nDocs: Long): Unit = {
+    val rows = packed.orderBy("id").as[(Long, Long, Long, Long)].collect()
+    assert(rows.length == nDocs)
+    var off = 0L
+    rows.foreach { case (id, nToks, bin, binOff) =>
+      assert((bin, binOff) == ((off / capacity, off % capacity)), s"doc $id")
+      off += nToks
+    }
+  }
+
+  test("packSequences over many id ranges reproduces the sequential tape") {
     val df = Tables.load(spark, sf0, "documents")
-    val driver = Packing.packSequences(df, "text", "doc_id", capacity = 2048)
-      .orderBy("id").collect().toSeq
-    val dist = Packing.packSequences(df.repartition(5), "text", "doc_id",
-        capacity = 2048, rangeSize = 17, distributedPrefix = true)
-      .orderBy("id").collect().toSeq
-    assert(driver == dist)
-    // and no collect happens on the distributed path's plan: the prefix
-    // subtree must be a Window, not a LogicalRDD from parallelize
-    val plan = Packing.packSequences(df, "text", "doc_id", capacity = 2048,
-      distributedPrefix = true).queryExecution.optimizedPlan.toString
+    assertSequentialTape(Packing.packSequences(df.repartition(5), "text",
+      "doc_id", capacity = 2048, rangeSize = 17), 2048, df.count())
+    // the prefix subtree is a Window, not a LogicalRDD from parallelize
+    val plan = Packing.packSequences(df, "text", "doc_id", capacity = 2048)
+      .queryExecution.optimizedPlan.toString
     assert(!plan.contains("LogicalRDD"), plan)
   }
 
-  test("packSequences bins are contiguous and capacity-consistent") {
-    // every bin's token span must start strictly inside the bin (first
-    // token offset < (bin+1)*capacity) — i.e. assignment matches the tape.
+  test("packSequences builds its plan without running a job") {
     val df = Tables.load(spark, sf0, "documents")
-    val rows = Packing.packSequences(df, "text", "doc_id", capacity = 1024)
-      .orderBy("id").as[(Long, Long, Long, Long)].collect()
-    var off = 0L
-    rows.foreach { case (_, nToks, bin, binOff) =>
-      assert(off / 1024 == bin)
-      assert(off % 1024 == binOff)
-      off += nToks
-    }
+    try {
+      val n = jobsStarted(Packing.packSequences(df, "text", "doc_id",
+        capacity = 2048))
+      assert(n == 0, s"$n jobs ran while the plan was built")
+    } finally CacheScope.releaseAll()
+  }
+
+  test("packSequences bins are contiguous and capacity-consistent") {
+    val df = Tables.load(spark, sf0, "documents")
+    assertSequentialTape(Packing.packSequences(df, "text", "doc_id",
+      capacity = 1024), 1024, df.count())
   }
 
   // ---------------- source mixing ----------------

@@ -206,17 +206,15 @@ class DegenerateInputSpec extends SparkSpec {
   test("Packing is total on empty/one/null-text corpora") {
     afterEach {
       import graft.pack.Packing
-      for (dist <- Seq(false, true)) {
-        assert(Packing.packSequences(emptyDocs, "text", "doc_id", 64L,
-          distributedPrefix = dist).count() == 0)
-        assert(Packing.packSequences(oneDoc, "text", "doc_id", 64L,
-          distributedPrefix = dist).count() == 1)
-        // null text packs as a zero-length doc (bin assigned, no cost) —
-        // it must not null-poison bin/bin_off
-        val packed = Packing.packSequences(nullDocs, "text", "doc_id", 64L,
-          distributedPrefix = dist).collect()
-        assert(packed.length == 3 && packed.forall(!_.isNullAt(2)))
-      }
+      assert(Packing.packSequences(emptyDocs, "text", "doc_id", 64L)
+        .count() == 0)
+      assert(Packing.packSequences(oneDoc, "text", "doc_id", 64L)
+        .count() == 1)
+      // null text packs as a zero-length doc (bin assigned, no cost) —
+      // it must not null-poison bin/bin_off
+      val packed = Packing.packSequences(nullDocs, "text", "doc_id", 64L)
+        .collect()
+      assert(packed.length == 3 && packed.forall(!_.isNullAt(2)))
       assert(Packing.lengthBuckets(emptyDocs, "text", "doc_id").count() == 0)
       assert(Packing.lengthBuckets(nullDocs, "text", "doc_id").count() == 3)
       assert(Packing.selectWithinBudget(
@@ -240,6 +238,20 @@ class DegenerateInputSpec extends SparkSpec {
       // null text tokenizes to null/empty: the doc must not silently
       // crash the chunker
       assert(Packing.chunkDocs(nullDocs, "text", "doc_id").count() >= 1)
+    }
+  }
+
+  test("packSequences leaves null ids out of the tape") {
+    afterEach {
+      // a null id has no place on an id-ordered tape and cannot join back
+      // by id: the row is dropped, and its two tokens must not shift the
+      // surviving docs, whose bins and offsets run from 0
+      val docs = docsOf(Row(1L, "a b c", null, null),
+        Row(null, "d e", null, null), Row(2L, "f", null, null))
+      val packed = graft.pack.Packing.packSequences(docs, "text", "doc_id", 4L)
+        .orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(packed.toSeq == Seq((1L, 3L, 0L, 0L), (2L, 1L, 0L, 3L)))
     }
   }
 

@@ -251,35 +251,8 @@ class LlmOpsSpec extends SparkSpec {
       "shape") {
     // the star rounds' job count follows the graph's shape (a chain needs
     // more rounds than a star); the driver path's must not
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    def jobs(pairs: DataFrame): Int = {
-      val group = s"dedup-clusters-${System.nanoTime()}"
-      val counted = new java.util.concurrent.atomic.AtomicInteger
-      val drained = new java.util.concurrent.CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-            case Some(`group`) => counted.incrementAndGet()
-            case Some(g) if g == s"$group-end" => drained.countDown()
-            case _ =>
-          }
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, "dedupClusters")
-        Dedup.dedupClusters(pairs).collect()
-        // one marker job after the call: the listener sees job starts in
-        // order, so once it sees the marker it has seen every call job
-        sc.setJobGroup(s"$group-end", "marker")
-        sc.parallelize(Seq(1), 1).count()
-        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        counted.get
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
-    }
+    def jobs(pairs: DataFrame): Int =
+      jobsStarted(Dedup.dedupClusters(pairs).collect())
     val chain = jobs((1001L to 1064L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
     val star = jobs((2001L to 2064L).map(i => (3000L, i)).toDF("id_a", "id_b"))
     assert(chain == star, s"64-link chain ran $chain jobs, 64-leaf star $star")

@@ -34,6 +34,37 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
+  /** Number of Spark jobs `body` starts. */
+  def jobsStarted(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-started-${System.nanoTime()}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet()
+          case Some(g) if g == s"$group-end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      // one marker job after the body: the listener sees job starts in
+      // order, so once it sees the marker it has seen every body job
+      sc.setJobGroup(s"$group-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      counted.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   override def afterAll(): Unit = {
     import scala.jdk.CollectionConverters._
     tempDirs.asScala.foreach { p =>
