@@ -6,11 +6,14 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * Per-query progress goes to stderr so a hung/slow query is identifiable.
   *
-  * The full record (SPARK_GRAFT_BENCH_OUT, default BENCH.out.json) adds
+  * The full record (`--out=<path>`, default BENCH.out.json) adds
   * per-query cold/min/max columns, each query's raw rolling minimum
   * across sessions, and the two regression gates that read the previous
   * record: per-query `suspects` (see [[regressionGate]]) and streaming
   * `rps_suspects`. `--strict` turns a fired gate into a non-zero exit.
+  *
+  * Usage: runMain graft.Bench [--strict] [--out=<path>] [queryPrefix,...]
+  * An unknown `--` option fails.
   */
 object Bench {
 
@@ -80,16 +83,12 @@ object Bench {
     * informational. */
   private[graft] def rollEligibleConfig(env: Map[String, String]): Boolean =
     !env.contains("SPARK_GRAFT_MASTER") &&
-      env.getOrElse("SPARK_GRAFT_CPUS", "32") == "32" &&
-      !env.contains("SPARK_GRAFT_STREAM_FILES") &&
-      // ADVICE r19 (medium): the remaining execution-shaping knobs.
-      // A bench against a smaller corpus sets raw rollmin / rps values
-      // no default sf0.1 run can ever match (--strict would fail
-      // forever after); a non-default iteration count skews every
-      // min-of-N roll.
+      // ADVICE r19 (medium): a bench against a smaller corpus sets raw
+      // rollmin / rps values no default sf0.1 run can ever match
+      // (--strict would fail forever after).
       env.getOrElse("SPARK_GRAFT_SF_DIR",
         "/root/testdata/sf0.1") == "/root/testdata/sf0.1" &&
-      env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3") == "3"
+      env.getOrElse("SPARK_GRAFT_CPUS", "32") == "32"
 
   /** Outcome of [[regressionGate]] for one session. */
   case class Gate(rollmin: Map[String, Double], ratios: Map[String, Double],
@@ -177,18 +176,33 @@ object Bench {
       System.err.println(s"[bench] warmup failed: ${e.getMessage}")
     }
 
+  /** The parsed command line of [[main]]. */
+  private[graft] case class Options(strict: Boolean, out: String,
+                                    prefixes: Seq[String])
+
+  /** `--strict` exits non-zero when a regression gate fires; `--out=<path>`
+    * names the full record. The first other argument holds
+    * comma-separated query-name prefixes, same contract as Verify's third
+    * arg (focused timing runs while iterating). An unknown `--` option
+    * fails. */
+  private[graft] def parseArgs(args: Seq[String]): Options = {
+    val (opts, queryArgs) = args.partition(_.startsWith("--"))
+    opts.filterNot(o => o == "--strict" || o.startsWith("--out="))
+      .foreach(o => sys.error(s"Bench: unknown option $o"))
+    Options(opts.contains("--strict"),
+      opts.find(_.startsWith("--out=")).fold("BENCH.out.json")(
+        _.stripPrefix("--out=")),
+      queryArgs.headOption.getOrElse("").split(",").toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
+    val Options(strict, out, prefixes) = parseArgs(args.toSeq)
+    val outFile = java.nio.file.Paths.get(out)
+    val iters = 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // match the driver (r15 VERDICT)
     val spark = Sessions.build(cpus)
     warmup(spark, sfDir)
-    // Optional arg: comma-separated query-name prefixes, same contract as
-    // Verify's third arg (focused timing runs while iterating).
-    // `--strict` exits non-zero when a regression gate below fires.
-    val strict = args.contains("--strict")
-    val prefixes = args.filterNot(_ == "--strict")
-      .headOption.getOrElse("").split(",").toSeq
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val rt = Runtime.getRuntime
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => prefixes.exists(kv._1.startsWith))
@@ -256,13 +270,11 @@ object Bench {
 
     // Read everything consumed from the previous record BEFORE the write
     // below overwrites it.
-    val outFile = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.out.json"))
     val cfgEligible = rollEligibleConfig(sys.env.toMap)
     if (!cfgEligible)
       System.err.println("[bench] non-default execution config " +
-        "(SPARK_GRAFT_MASTER/CPUS/STREAM_FILES/SF_DIR/BENCH_ITERS " +
-        "set): rolling records frozen, ratio gates off")
+        "(SPARK_GRAFT_MASTER/CPUS/SF_DIR set): rolling records frozen, " +
+        "ratio gates off")
     val gate = regressionGate(
       prior = readPrevMap(outFile, Seq("rollmin", "min")),
       sessionMin = results.map(r => r.name -> r.min).toMap,

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place the harness mains (Bench / Verify / ScaleBench) build their
-  * SparkSession, so the execution-environment knobs behave identically
-  * everywhere:
+/** The one place `src/main` builds a SparkSession: the harness mains
+  * (Bench, Verify, ScaleBench, FaultInjection and its child JVMs,
+  * ConcurrentServe, SpillCertify and its child JVM, ScanAudit) and
+  * perfbench all come through here, so every session gets the same UTC
+  * clock, no UI, AQE, streaming state policy and local-cluster wiring.
+  * Only deployment settings come from the environment:
   *
   *  - `SPARK_GRAFT_MASTER` — overrides the master URL. The interesting
   *    value is `local-cluster[N,C,MEM_MB]`: Spark's standalone-in-a-box
@@ -18,6 +21,8 @@ import org.apache.spark.sql.SparkSession
   *    Worker from SPARK_HOME, so they need (a) this project's classes
   *    on their classpath and (b) the same JDK-17 --add-opens set the
   *    driver gets from build.sbt — both wired here, not in each main.
+  *  - `SPARK_GRAFT_EXECUTOR_MEM` — the executor memory of such a master.
+  *  - `SPARK_GRAFT_CLASSES` — the classes dir those executors load.
   *
   * Every session built here also runs the one streaming state-store
   * policy, [[StreamState]], at session scope, so every stream started
@@ -57,8 +62,10 @@ object Sessions {
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
 
   /** The streaming state and checkpoint policy, applied at session scope by
-    * [[build]] and by the few sessions built elsewhere (the test session,
-    * FaultInjection's crash child), so every stream runs the same one:
+    * [[build]] and by the test session, so every stream runs the same one.
+    * It also keeps the `file:` binding fixed: `FileSystem`'s cache is
+    * keyed without the conf, so a session built without it would bind
+    * `file:` to Hive's `ProxyLocalFileSystem` for the whole JVM.
     *  - RocksDB provider (default since round 22): state lives off-heap
     *    and on disk instead of in executor-heap HashMaps, the documented
     *    OOM source for large state. On the 15-gate board (two interleaved
@@ -95,11 +102,9 @@ object Sessions {
     * need this project's compiled classes (the closures they deserialize
     * reference graft.* classes) and the JDK-17 opens. sbt runs from the
     * project root, so the relative classes dir resolves; an explicit
-    * override is available for running from elsewhere. Shared by
-    * [[build]] and by harness tools that construct their own
-    * local-cluster child sessions (SpillCertify's multi-JVM mode). */
-  private[graft] def wireLocalCluster(b0: SparkSession.Builder,
-                                      executorMem: Option[String])
+    * override is available for running from elsewhere. */
+  private def wireLocalCluster(b0: SparkSession.Builder,
+                               executorMem: Option[String])
       : SparkSession.Builder = {
     val classes = sys.env.getOrElse("SPARK_GRAFT_CLASSES",
       new java.io.File("target/scala-2.13/classes").getAbsolutePath)
@@ -119,20 +124,31 @@ object Sessions {
   }
 
   /** Build the standard harness session: `cpus` threads (or the
-    * SPARK_GRAFT_MASTER override), `cpus` shuffle partitions, AQE, UTC,
-    * no UI, and the [[StreamState]] policy. */
-  def build(cpus: String): SparkSession = {
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    * SPARK_GRAFT_MASTER override, its executors sized by
+    * SPARK_GRAFT_EXECUTOR_MEM), `cpus` shuffle partitions, and the rest
+    * as the overload below. */
+  def build(cpus: String,
+            extra: Map[String, String] = Map.empty): SparkSession =
+    build(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus,
+      sys.env.get("SPARK_GRAFT_EXECUTOR_MEM").filter(_.nonEmpty), extra)
+
+  /** Build a session on `master` with `shufflePartitions`, AQE, UTC, no
+    * UI and the [[StreamState]] policy, then `extra` on top (a FAIR
+    * scheduler, a warehouse dir). `executorMem` sizes the executors of
+    * a `local-cluster` master and is ignored otherwise. */
+  def build(master: String, shufflePartitions: String,
+            executorMem: Option[String],
+            extra: Map[String, String]): SparkSession = {
     var b = SparkSession.builder()
       .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config(StreamState)
+      .config(extra)
     if (master.startsWith("local-cluster"))
-      b = wireLocalCluster(b,
-        sys.env.get("SPARK_GRAFT_EXECUTOR_MEM").filter(_.nonEmpty))
+      b = wireLocalCluster(b, executorMem)
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

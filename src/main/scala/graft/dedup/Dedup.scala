@@ -418,19 +418,16 @@ object Dedup {
     val candByA = a.join(b, cond)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .groupBy(col("id_a")).agg(collect_set(col("id_b")).as("__bs"))
-    // The verified pair list itself is cached (caller-released): it is the
-    // op's PRODUCT and every downstream consumer re-reads it — the cluster
-    // builder, threshold re-filters, and repeated invocations on the same
-    // corpus all share one candidate join + verification instead of
-    // re-running them. Pairs are three slim columns; at 100 TB this is the
-    // relation you would persist to parquet between pipeline stages.
-    graft.CacheScope.cache(candByA
+    // The verified pair list is not cached, as on the driver path: every
+    // consumer in the library reads it once, and dedupClusters caches its
+    // own edges. A cache here would only serve repeated calls.
+    candByA
       .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .select(col("id_a"), col("sh_a"), explode(col("__bs")).as("id_b"))
       .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= tEff))
+      .filter(col("jaccard") >= tEff)
   }
 
   /** Asymmetric near-dup: pairs whose SMALLER shingle set is mostly

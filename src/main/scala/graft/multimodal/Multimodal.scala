@@ -63,9 +63,7 @@ object Multimodal {
     * canvas and `ImageIO.read` would allocate the full raster before any
     * pixel data is validated — an executor OOM no catch recovers from.
     */
-  val maxDecodePixels: Long =
-    sys.props.get("graft.multimodal.maxDecodePixels").map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
+  val maxDecodePixels: Long = 64L * 1024 * 1024
 
   /** Real image decode: `javax.imageio` (JDK-bundled PNG/JPEG/GIF/BMP
     * readers, headless-safe). Returns (width, height, channels, per-channel

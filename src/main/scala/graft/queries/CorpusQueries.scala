@@ -132,89 +132,11 @@ object CorpusQueries {
   private[graft] def stageOrderedQuartiles(s: SparkSession, dir: String,
                                     name: String, src: DataFrame,
                                     tsCol: String,
-                                    disorderMicros: Long = 0L,
-                                    nFilesOverride: Int = 0)
+                                    disorderMicros: Long = 0L)
       : java.nio.file.Path = {
     import scala.jdk.CollectionConverters._
-    // Replay file count (default 4 — the gates' published shape). The
-    // state-at-volume sweeps (ScaleBench × SPARK_GRAFT_STREAM_FILES)
-    // scale it with the corpus so each micro-batch covers a CONSTANT
-    // event-time slice: with a fixed file count, per-batch volume grows
-    // linearly with input and the measured "peak state" measures batch
-    // size (the watermark only advances between batches), not the
-    // engine's state retention. Ordered-replay APPEND output is
-    // file-count-invariant (same final watermark ⇒ same emitted set),
-    // which the 10× hash-equal staging cross-check in PLANS r17 records.
-    // "span:<seconds>" sizes the replay by EVENT-TIME slice, identical
-    // for every source regardless of row count — the only alignment that
-    // is safe for multi-source (stream-stream join) gates: a row-count
-    // split gives the sides different files-per-span, one side's
-    // watermark then lags the global minimum and the measured "state"
-    // is the inter-source lag, not retention (measured: join_append 10×
-    // peak 100k rows under a count-based split). The events corpus spans
-    // 30 days at any factor base, so span:648000 (7.5 d — the base
-    // quartile) stages 4 files at 1×, ~40 at 10×, ~400 at 100×.
-    // Callers that PUBLISH staged files by index (the restart gates and
-    // the crash harness copy part-00001..4 into their own input dirs)
-    // pin nFilesOverride=4: with an env-scaled staging they would replay
-    // only the first 4 of N files — measured as the 16-file selfcheck
-    // failing exactly the three restart gates at 1/4 of the rows.
-    val nFiles = if (nFilesOverride > 0) nFilesOverride
-    else sys.env.get("SPARK_GRAFT_STREAM_FILES") match {
-      case Some(v) if v.startsWith("span:") =>
-        // Memoize the span→file-count resolution in a marker file keyed
-        // like the stage itself (corpus dir + data fingerprint + query +
-        // ts column + raw spec): the min/max full-corpus aggregation
-        // otherwise re-ran on EVERY stageOrderedQuartiles call — for an
-        // already-staged corpus that is a pure extra full scan INSIDE
-        // ScaleBench's timed region, inflating span-mode wall times and
-        // exponents at large factors (r17 ADVICE).
-        // The key carries a formula version token so a future change to
-        // the nFiles computation can't silently serve stale counts from
-        // old markers (ADVICE r18).
-        val marker = java.nio.file.Paths.get("/tmp/graft-streamspan-" +
-          java.util.UUID.nameUUIDFromBytes(
-            s"spanfiles-v2|$dir|${Tables.dirFingerprint(dir)}|$name|$tsCol|$v"
-              .getBytes("UTF-8")).toString)
-        def computeAndRecord(): Int = {
-          val slice = v.stripPrefix("span:").toLong // seconds per file
-          val mm = src.agg(
-            expr(s"unix_micros(cast(min($tsCol) AS timestamp))"),
-            expr(s"unix_micros(cast(max($tsCol) AS timestamp))")).head()
-          val spanSec = (mm.getLong(1) - mm.getLong(0)) / 1000000L
-          val n = math.max(4L, (spanSec + slice - 1) / slice).toInt
-          // temp-write + ATOMIC_MOVE: a concurrent reader (SpillCertify /
-          // ConcurrentServe child JVMs staging the same corpus) must
-          // never observe a partially-written marker (ADVICE r18)
-          val tmp = java.nio.file.Files.createTempFile(
-            marker.getParent, marker.getFileName.toString, ".tmp")
-          java.nio.file.Files.write(tmp, n.toString.getBytes("UTF-8"))
-          try java.nio.file.Files.move(tmp, marker,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          catch { case _: Throwable => // lost a race: another JVM moved
-            java.nio.file.Files.deleteIfExists(tmp)                // first
-          }
-          n
-        }
-        if (java.nio.file.Files.exists(marker))
-          // fall back to recompute (and rewrite) on ANY read/parse
-          // failure — an empty/garbled marker, or one deleted by a
-          // racing JVM / /tmp cleaner between the exists() check and
-          // the read (ADVICE r19: a propagating IOException here
-          // failed the query instead of degrading to the slow path)
-          try new String(java.nio.file.Files.readAllBytes(marker),
-            "UTF-8").trim.toInt
-          catch {
-            case scala.util.control.NonFatal(_) => computeAndRecord()
-          }
-        else computeAndRecord()
-      case Some(v) => math.max(1, v.toInt)
-      case None => 4
-    }
     val mode =
-      (if (disorderMicros == 0L) "ordered" else s"disorder$disorderMicros") +
-        (if (nFiles == 4) "" else s"|files$nFiles")
+      if (disorderMicros == 0L) "ordered" else s"disorder$disorderMicros"
     val stage = java.nio.file.Paths.get("/tmp/graft-streamstage-" +
       java.util.UUID.nameUUIDFromBytes(
         s"$dir|${Tables.dirFingerprint(dir)}|$name|$mode"
@@ -229,12 +151,12 @@ object CorpusQueries {
           pmod(xxhash64(src.columns.map(col): _*), lit(disorderMicros))
       // cache the global sort: the four quartile filters would otherwise
       // re-run the single-partition window sort once each
-      val ranked = src.withColumn("__q", ntile(nFiles).over(
+      val ranked = src.withColumn("__q", ntile(4).over(
         org.apache.spark.sql.expressions.Window.orderBy(orderCol)))
         .cache()
       java.nio.file.Files.createDirectories(stage)
       try {
-        for (q <- 1 to nFiles) {
+        for (q <- 1 to 4) {
           val sub = stage.resolve(s"__build$q")
           ranked.filter(col("__q") === q).drop("__q")
             .coalesce(1).write.mode("overwrite").parquet(sub.toString)
@@ -1221,8 +1143,7 @@ object CorpusQueries {
     // memoized shared one.
     "x_stream_restart" -> ((s, dir) => {
       val src = eventsWm(s, dir)
-      val stage = stageOrderedQuartiles(s, dir, "events_wm", src, "ts",
-        nFilesOverride = 4)
+      val stage = stageOrderedQuartiles(s, dir, "events_wm", src, "ts")
       twoPhaseRestart(s, src.schema, stage, "window", windowedAppendAgg)
         .orderBy("w_start", "event_type")
     }),
@@ -1242,7 +1163,7 @@ object CorpusQueries {
     "x_stream_restart_disorder" -> ((s, dir) => {
       val src = eventsWm(s, dir)
       val stage = stageOrderedQuartiles(s, dir, "events_wm", src, "ts",
-        90L * 60 * 1000000, nFilesOverride = 4)
+        90L * 60 * 1000000)
       twoPhaseRestart(s, src.schema, stage, "window_disorder",
           windowedAppendAgg)
         .orderBy("w_start", "event_type")
@@ -1293,8 +1214,7 @@ object CorpusQueries {
     // drift impossible).
     "x_stream_restart_session" -> ((s, dir) => {
       val src = eventsWmSess(s, dir)
-      val stage = stageOrderedQuartiles(s, dir, "events_wm_sess", src, "ts",
-        nFilesOverride = 4)
+      val stage = stageOrderedQuartiles(s, dir, "events_wm_sess", src, "ts")
       twoPhaseRestart(s, src.schema, stage, "session", sessionAppendAgg)
         .orderBy("user_id", "w_start")
     }),

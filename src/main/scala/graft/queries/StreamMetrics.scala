@@ -38,19 +38,6 @@ object StreamMetrics {
   def record(sinkName: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val name = sinkName.stripSuffix("_sink")
     val ps = q.recentProgress
-    // Fixed-cost audit knob (r19 VERDICT item 6): per-trigger durationMs
-    // breakdown on stderr — shows whether a gate's per-batch cost is
-    // user work (addBatch) or Spark-fixed machinery (planning, WAL/state
-    // commit, trigger scheduling). Telemetry only; off unless set.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS")) {
-      import scala.jdk.CollectionConverters._
-      ps.foreach { p =>
-        val d = p.durationMs.asScala.toSeq.sortBy(-_._2.longValue)
-          .map { case (k, v) => s"$k=$v" }.mkString(" ")
-        System.err.println(
-          s"[stream-progress] $name batch=${p.batchId} rows=${p.numInputRows} $d")
-      }
-    }
     val rows = ps.map(_.numInputRows).sum
     val ms = ps.map(p =>
       Option(p.durationMs.get("triggerExecution"))

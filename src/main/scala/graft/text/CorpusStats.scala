@@ -610,7 +610,7 @@ object CorpusStats {
   /** As [[wordpieceTrain]]; `forceDecimalTier` pins the DECIMAL(38,0)
     * scoring tier for parity testing (the tier engages automatically
     * when the corpus exceeds the Long tier's √Long.Max symbol bound). */
-  def wordpieceTrain(df: DataFrame, textCol: String, steps: Int,
+  private[graft] def wordpieceTrain(df: DataFrame, textCol: String, steps: Int,
                      forceDecimalTier: Boolean): DataFrame = {
     val spark = df.sparkSession
     val Scale = 1000000000L

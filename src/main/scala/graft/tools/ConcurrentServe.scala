@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Concurrent-serving certification (r16 VERDICT item 7): every gate on
   * the board runs queries SERIALLY, but a production engine serves
   * overlapping queries from one session — and the harness's own
@@ -42,18 +40,7 @@ object ConcurrentServe {
     // queries onto SEPARATE executor JVMs — concurrency composed with
     // real process boundaries (cross-JVM shuffle while another tenant's
     // stages interleave on the same executors).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    var b = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      b = graft.Sessions.wireLocalCluster(b,
-        sys.env.get("SPARK_GRAFT_EXECUTOR_MEM").filter(_.nonEmpty))
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build(cpus, Map("spark.scheduler.mode" -> "FAIR"))
 
     System.err.println(s"[serve] serial reference pass over $sfDir")
     val ref = serveQueries.map { n =>

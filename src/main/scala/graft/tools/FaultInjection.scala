@@ -151,15 +151,9 @@ object FaultInjection {
   }
 
   private def crashChild(runDir: java.nio.file.Path): Unit = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the parent resumes under the same policy, so the crash certifies
-      // a same-mode recovery rather than a conf migration
-      .config(graft.Sessions.StreamState)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // the parent resumes under the same policy, so the crash certifies
+    // a same-mode recovery rather than a conf migration
+    val s = graft.Sessions.build("local[4]", "4", None, Map.empty)
     val schema = org.apache.spark.sql.types.DataType.fromJson(
       new String(java.nio.file.Files.readAllBytes(
         runDir.resolve("schema.json")), "UTF-8"))
@@ -210,7 +204,7 @@ object FaultInjection {
         (CorpusQueries.eventsWmSess(spark, sfDir), "events_wm_sess")
       else (CorpusQueries.eventsWm(spark, sfDir), "events_wm")
     val stage = CorpusQueries.stageOrderedQuartiles(
-      spark, sfDir, stageName, src, "ts", nFilesOverride = 4)
+      spark, sfDir, stageName, src, "ts")
     def runPhase(runDir: java.nio.file.Path): Unit = {
       val stream = spark.readStream.schema(src.schema).format("parquet")
         .option("maxFilesPerTrigger", "1")
@@ -317,14 +311,8 @@ object FaultInjection {
     val conf = new String(java.nio.file.Files.readAllBytes(
       runDir.resolve("bw.conf")), "UTF-8").trim.split(":")
     val (sfDir, variant, haltAfter) = (conf(0), conf(1), conf(2).toInt)
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        runDir.resolve("warehouse").toUri.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build("local[2]", "8", None,
+      Map("spark.sql.warehouse.dir" -> runDir.resolve("warehouse").toUri.toString))
     val dest = if (variant == "bucketed")
       runDir.resolve("warehouse").resolve("fault_bw")
     else runDir.resolve("dest")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 
 /** Whole-board plan audit (optimization rounds): for EVERY registered
@@ -72,11 +71,7 @@ object ScanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val prefix = args.drop(1).headOption.getOrElse("")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.build("local[8]", "8", None, Map.empty)
     spark.sparkContext.setLogLevel("ERROR")
     println("query\tparquet_scans\tdup_table_scans\tdup_max\texchanges\tbcast\tsmj\tbnl\tinmem\tcached_rels")
     for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)

@@ -28,7 +28,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.tools.SpillCertify [--factor=10] [--cpus=8]
   *          [--master=local-cluster[2,2,4096]] [--exec-mem=1500m]
-  *          [queryPrefix ... | __probe__]
+  *          [queryPrefix ...]
   *  - `--factor`: blow-up factor of the base corpus (default 10; 1 = the
   *    base dir itself);
   *  - `--cpus`: the child's local[k] (default 8);
@@ -86,22 +86,8 @@ object SpillCertify {
     names.map { name =>
       val t0 = System.nanoTime()
       val (h, rows) =
-        try {
-          if (name == "__probe__") {
-            // synthetic guaranteed-spill: a 30M-DISTINCT-group aggregation
-            // whose hash map (~1 GB) cannot fit a small heap, forcing the
-            // hash-agg → sort-agg fallback and shuffle spill — validates
-            // the listener/metric path itself (a global orderBy would be
-            // optimized away under count by EliminateSorts)
-            import org.apache.spark.sql.functions._
-            val n = spark.range(0L, 30L * 1000 * 1000, 1L, 8)
-              .select(xxhash64(col("id")).as("k"), col("id"))
-              .groupBy("k").agg(sum("id").as("s"))
-              .filter(col("s") < 0).count()
-            (s"probe-$n", n)
-          } else
-            ResultHash.of(graft.SparkEntry.queries(name)(spark, sfDir))
-        } catch { case e: Throwable =>
+        try ResultHash.of(graft.SparkEntry.queries(name)(spark, sfDir))
+        catch { case e: Throwable =>
           System.err.println(s"[$tag] $name FAILED: ${e.getMessage}")
           ("ERROR:" + e.getClass.getSimpleName, -1L)
         }
@@ -128,15 +114,7 @@ object SpillCertify {
                  else s"local[$cpus]"
     val execMem = if (conf.length > 5) Some(conf(5)).filter(_.nonEmpty)
                   else None
-    var b = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      b = graft.Sessions.wireLocalCluster(b, execMem)
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build(master, parts, execMem, Map.empty)
     val rs = runAll(spark, sfDir, names, "spill-child")
     val out = rs.map { case (n, h, r, m, d, s) =>
       f"$n\t$h\t$r\t$m\t$d\t$s%.2f" }.mkString("", "\n", "\n")
@@ -152,8 +130,7 @@ object SpillCertify {
                                     names: Seq[String])
 
   /** `--name=value` options anywhere in `args`, the rest query prefixes
-    * (`__probe__` alone selects the synthetic probe; none selects every
-    * cert query). An unknown `--` option fails. */
+    * (none selects every cert query). An unknown `--` option fails. */
   private[graft] def parseArgs(args: Seq[String]): Options = {
     val (opts, queryArgs) = args.partition(_.startsWith("--"))
     val known = Seq("factor", "cpus", "master", "exec-mem")
@@ -168,7 +145,6 @@ object SpillCertify {
       valued("cpus").getOrElse("8"),
       valued("master").getOrElse(""), valued("exec-mem").getOrElse(""),
       if (queryArgs.isEmpty) certQueries
-      else if (queryArgs.contains("__probe__")) Seq("__probe__")
       else certQueries.filter(n => queryArgs.exists(n.startsWith)))
   }
 

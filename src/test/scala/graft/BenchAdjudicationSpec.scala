@@ -87,18 +87,24 @@ class BenchAdjudicationSpec extends AnyFunSuite {
     assert(!Bench.rollEligibleConfig(Map(
       "SPARK_GRAFT_MASTER" -> "local-cluster[2,8,8192]")))
     assert(!Bench.rollEligibleConfig(Map("SPARK_GRAFT_CPUS" -> "8")))
-    assert(!Bench.rollEligibleConfig(Map(
-      "SPARK_GRAFT_STREAM_FILES" -> "span:648000")))
-    // ADVICE r19 (medium): the remaining execution-shaping knobs freeze
-    // rolls too — a smaller corpus or a different iteration count each
-    // sets records a default run can never match
+    // ADVICE r19 (medium): a smaller corpus freezes rolls too — it sets
+    // records a default run can never match
     assert(!Bench.rollEligibleConfig(Map(
       "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.01")))
     assert(Bench.rollEligibleConfig(Map(
       "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.1")),
       "explicitly naming the default corpus stays eligible")
-    assert(!Bench.rollEligibleConfig(Map("SPARK_GRAFT_BENCH_ITERS" -> "6")))
-    assert(Bench.rollEligibleConfig(Map("SPARK_GRAFT_BENCH_ITERS" -> "3")),
-      "explicitly naming the default iteration count stays eligible")
+  }
+
+  test("Bench options: --out names the record, --strict, typos fail") {
+    import Bench.{Options, parseArgs}
+    assert(parseArgs(Nil) == Options(false, "BENCH.out.json", Seq("")))
+    assert(parseArgs(Seq("--strict", "--out=out/rolls.json", "q_a,t_b")) ==
+      Options(true, "out/rolls.json", Seq("q_a", "t_b")))
+    // options and the prefix list mix in any order
+    assert(parseArgs(Seq("q_a", "--out=r.json")) ==
+      Options(false, "r.json", Seq("q_a")))
+    for (typo <- Seq("--out", "--strct", "--iters=6"))
+      intercept[RuntimeException](parseArgs(Seq(typo)))
   }
 }

@@ -29,7 +29,6 @@ class CertToolsSpec extends SparkSpec {
     // options and query prefixes mix in any order
     assert(parseArgs(Seq("q_window", "--cpus=2", "q5_")) ==
       Options(10, "2", "", "", Seq("q5_local_supplier", "q_window_rank")))
-    assert(parseArgs(Seq("--factor=1", "__probe__")).names == Seq("__probe__"))
     for (typo <- Seq("--factr=1", "--cpus", "--probe"))
       intercept[RuntimeException](parseArgs(Seq(typo)))
   }

@@ -82,6 +82,19 @@ class LlmOpsSpec extends SparkSpec {
     assert(fast == brute, s"prefix filter diverged: ${fast.diff(brute)} extra, ${brute.diff(fast)} missing")
   }
 
+  test("jaccard pairs: the distributed path caches only its shingle and " +
+      "prefix relations, as the driver path caches only its shingles") {
+    val df = Seq((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "x y z w v"))
+      .toDF("doc_id", "text")
+    CacheScope.releaseAll()
+    val pairs = Dedup.jaccardPairsDistributed(df, "text", "doc_id")
+    assert(pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 2L)))
+    assert(CacheScope.liveCount == 2,
+      "the verified pair product must not be cached")
+    CacheScope.releaseAll()
+  }
+
   test("jaccard pairs: both paths agree on Int ids, null ids and blocks, " +
       "one-shingle and equal-size near-duplicate documents") {
     import org.apache.spark.sql.Row

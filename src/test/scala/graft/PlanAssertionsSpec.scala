@@ -120,10 +120,8 @@ class PlanAssertionsSpec extends SparkSpec {
   test("ngram jaccard: no self-join keyed only on coarse (source, lang) blocks") {
     // d_ngram_jaccard's small sf0 corpus is joined on the driver, a local
     // relation with no join; the distributed entry on the same input is
-    // the plan larger corpora run, so that is the one inspected. It
-    // persists its result relation, so cache substitution collapses
-    // the OPTIMIZED plan to an InMemoryRelation leaf — inspect the ANALYZED
-    // plan, which still carries the join tree as constructed
+    // the plan larger corpora run, so that is the one inspected: its
+    // ANALYZED plan, which carries the join tree as constructed
     import org.apache.spark.sql.functions.{col, round}
     val docs = Tables.load(spark, sf0, "documents")
       .select(col("doc_id"), col("source"), col("lang"), col("text"))

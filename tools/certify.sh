@@ -18,9 +18,8 @@
 #   2b. SpillCertify multi-JVM  — the same spill regime inside SEPARATE
 #                                 1500m executor JVMs (spill ×
 #                                 cross-process shuffle fetch composed).
-#                                 DEFAULT since r19 (the strongest
-#                                 resource certification the repo has;
-#                                 ~14 min). Opt out: CERTIFY_SPILL_LC=0.
+#                                 Always run (the strongest resource
+#                                 certification the repo has; ~14 min).
 #   3. ConcurrentServe          — 8 queries × 2 waves concurrent == serial
 #                                 at sf0.01 AND sf0.1
 #   4. iterative_oracle.py      — exact union-find / kNN / PageRank
@@ -40,8 +39,7 @@
 # concurrency stage.
 #
 # Exit 0 = every stage green; first failing stage aborts (set -e) with
-# its own diagnostics on stderr. Runtime ~60-75 min cold with the
-# default multi-JVM spill stage (~45-60 without; the 100× blow-up
+# its own diagnostics on stderr. Runtime ~60-75 min cold (the 100× blow-up
 # builds once into /tmp/graft-scale100 and is reused).
 # NOTE: stages launch sbt runMain children that lazy-load classes from
 # target/scala-2.13/classes — do not recompile while this runs.
@@ -92,15 +90,12 @@ echo "=== certify 2/4: spill certification (100x blow-up, 1500m child) ==="
 SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SPILL_BASE:-/root/testdata/sf0.1} \
 sbt -batch "runMain graft.tools.SpillCertify --factor=100 --cpus=4"
 
-# DEFAULT since r19 (was opt-in; r18 VERDICT item 4): the same spill
-# certification with the pressured side running as SEPARATE 1500m
-# executor JVMs under local-cluster — spill + cross-process shuffle
-# fetch composed. Opt out with CERTIFY_SPILL_LC=0.
-if [ "${CERTIFY_SPILL_LC:-1}" = "1" ]; then
-  echo "=== certify 2b/4: spill inside separate executor JVMs ==="
-  SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SPILL_BASE:-/root/testdata/sf0.1} \
-  sbt -batch "runMain graft.tools.SpillCertify --factor=100 --cpus=4 --master=local-cluster[2,2,4096] --exec-mem=1500m"
-fi
+# The same spill certification with the pressured side running as
+# SEPARATE 1500m executor JVMs under local-cluster — spill +
+# cross-process shuffle fetch composed.
+echo "=== certify 2b/4: spill inside separate executor JVMs ==="
+SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SPILL_BASE:-/root/testdata/sf0.1} \
+sbt -batch "runMain graft.tools.SpillCertify --factor=100 --cpus=4 --master=local-cluster[2,2,4096] --exec-mem=1500m"
 
 echo "=== certify 3/4: concurrent serving (sf0.01 + sf0.1) ==="
 sbt -batch "runMain graft.tools.ConcurrentServe $SF"

@@ -55,7 +55,7 @@ cleanup() {
 trap cleanup EXIT
 
 echo "=== gate_drill 1/3: baseline focused run (uninjected, fresh rolls) ==="
-SPARK_GRAFT_BENCH_OUT="$ROLLS" sbt -batch "runMain graft.Bench $QUERIES" \
+sbt -batch "runMain graft.Bench --out=$ROLLS $QUERIES" \
   2>&1 | grep -E '^\[bench\]' | sed 's/^/  /' | tail -15
 
 echo "=== gate_drill 2/3: inject 5x slowdown into q_window_rank, recompile ==="
@@ -86,7 +86,7 @@ sbt -batch compile >/tmp/graft-drill-compile.log 2>&1 || {
 
 echo "=== gate_drill 3/3: injected --strict run against the same rolls ==="
 rc=0
-SPARK_GRAFT_BENCH_OUT="$ROLLS" sbt -batch "runMain graft.Bench --strict $QUERIES" \
+sbt -batch "runMain graft.Bench --strict --out=$ROLLS $QUERIES" \
   2>&1 | grep -E '^\[bench\]' | sed 's/^/  /' | tail -15 || true
 # sbt swallows the forked exit code into a nonzero of its own; read the
 # verdict from the record instead, which is what a round reader does.
