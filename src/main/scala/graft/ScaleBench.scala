@@ -43,10 +43,9 @@ import org.apache.spark.sql.functions._
 object ScaleBench {
 
   /** Build the `factor`× all-tables blow-up under `bigDir`. With
-    * `reuseOk`, an already-materialized blow-up (and with it the memoized
-    * streaming replay staging, which keys on the dir fingerprint) is
-    * reused — for re-measuring one setting (e.g. the streaming
-    * state-partition count) without paying the build again. */
+    * `reuseOk`, an already-materialized blow-up is reused — for
+    * re-measuring one setting (e.g. the streaming state-partition count)
+    * without paying the build again. */
   private def buildBlowup(spark: SparkSession, sfDir: String, factor: Int,
                           bigDir: String, skew: Boolean,
                           reuseOk: Boolean): Unit = {

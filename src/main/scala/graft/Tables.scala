@@ -60,11 +60,12 @@ object Tables {
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
   /** Cheap content fingerprint of a testdata dir: every file's relative
-    * path, size and mtime folded into one hash. Streaming gates mix this
-    * into their /tmp staging-dir keys so that REGENERATED testdata at the
-    * same path invalidates the memoized replay stage instead of silently
-    * replaying stale files (round-12 ADVICE). Pure directory-listing
-    * metadata — no Spark job, microseconds at testdata file counts.
+    * path, size and mtime folded into one hash, so REGENERATED testdata at
+    * the same path reads as different data. Two keys carry it:
+    * ScaleBench's blow-up provenance marker (`--reuse` keeps a blow-up
+    * only if it was built from the same base data) and the in-JVM
+    * trained-merges key in CorpusQueries. Pure directory-listing metadata
+    * — no Spark job, microseconds at testdata file counts.
     */
   def dirFingerprint(dir: String): String = {
     import scala.jdk.CollectionConverters._

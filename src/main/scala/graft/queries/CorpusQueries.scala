@@ -5,7 +5,7 @@ import graft.dedup.Dedup
 import graft.pack.Packing
 import graft.sim.Similarity
 import graft.text.{CorpusStats, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus-assembly and corpus-statistics operators — the steps between a
@@ -35,8 +35,8 @@ object CorpusQueries {
     * `p_pack_bpe`) exist to gate the ENCODE path, and re-running the
     * 5-round training loop inside each of them measured training three
     * extra times per bench pass. Memoized per (dir, data fingerprint,
-    * trainer, steps) — same contract as the streaming-staging memo: a
-    * regenerated corpus invalidates the key, and the TRAINING path stays
+    * trainer, steps) in this JVM: a regenerated corpus invalidates the
+    * key ([[Tables.dirFingerprint]]), and the TRAINING path stays
     * fully benched/gated by `t_bpe_train` / `t_wordpiece_train`, which
     * never consult the memo. Values are (a, b, merged) triples — the
     * driver-held learned constant, a few rows. */
@@ -54,134 +54,6 @@ object CorpusQueries {
         trained.orderBy("step").collect().toSeq
           .map(r => (r.getString(1), r.getString(2), r.getString(3)))
       })
-
-  /** Stage `src` as a 4-file parquet dir and open it as a bona-fide file
-    * STREAM replayed one file per trigger, so downstream aggregation state
-    * genuinely crosses four micro-batches. Staging is memoized per
-    * (input dir, data fingerprint, name) — deterministic path + _SUCCESS
-    * check, invalidated if the testdata is regenerated — because it
-    * is replay SETUP, not part of the streaming op, and re-writing it per
-    * bench iteration was half the query's cost.
-    */
-  private def replayAsStream(s: SparkSession, dir: String, name: String,
-                             src: DataFrame): DataFrame = {
-    val stage = java.nio.file.Paths.get("/tmp/graft-streamstage-" +
-      java.util.UUID.nameUUIDFromBytes(
-        s"$dir|${Tables.dirFingerprint(dir)}|$name".getBytes("UTF-8")).toString)
-    if (!java.nio.file.Files.exists(stage.resolve("_SUCCESS")))
-      src.repartition(4).write.mode("overwrite").parquet(stage.toString)
-    s.readStream.schema(src.schema).format("parquet")
-      .option("maxFilesPerTrigger", "1").load(stage.toString)
-  }
-
-  /** Stage `src` as 4 parquet files in EVENT-TIME order — file k holds the
-    * k-th quartile of the `tsCol` order — and open it as a file stream
-    * replayed one file per trigger. Arrival order == event order at file
-    * granularity, so no row ever arrives behind the watermark (the
-    * hash-split [[replayAsStream]] staging can deliver a row late, and
-    * watermark DROPS then depend on arrival order — the reason the
-    * complete-mode gates exist). Drop-free replay makes the append+
-    * watermark emitted set a pure function of the data: every window
-    * whose end the final watermark (max event time − delay) has passed,
-    * with full counts — which is what lets the PRODUCTION streaming path
-    * (withWatermark + append, bounded state) be hash-oracle-checked at
-    * all. FileStreamSource picks files oldest-modified-first
-    * (latestFirst=false); the mtimes are pinned explicitly rather than
-    * trusting write latency. The global-sort ntile is replay SETUP (runs
-    * once per (dir, name), memoized), not part of the streaming op.
-    */
-  private def replayAsStreamOrdered(s: SparkSession, dir: String,
-                                    name: String, src: DataFrame,
-                                    tsCol: String): DataFrame = {
-    val stage = stageOrderedQuartiles(s, dir, name, src, tsCol)
-    s.readStream.schema(src.schema).format("parquet")
-      .option("maxFilesPerTrigger", "1").load(stage.toString)
-  }
-
-  /** BOUNDED-DISORDER replay (round-14): like [[replayAsStreamOrdered]]
-    * but rows are replayed in PERTURBED event-time order — each row's
-    * replay position is its event time plus a deterministic per-row
-    * jitter drawn from [0, `disorderMicros`). Real streams are not
-    * event-time-ordered; they are disordered within the watermark
-    * delay, and THAT is the regime the watermark contract covers. With
-    * disorder bound δ strictly below the delay D, no row can ever
-    * arrive behind the watermark: a row r replayed in batch q+1 has
-    * perturbed time ≥ every file-q perturbed time b, so its TRUE time
-    * ≥ b − δ, while the watermark after batch q is ≤ b − D < b − δ.
-    * Hence zero drops, the final watermark (max true ts − D) is
-    * unchanged, and the emitted append set must be IDENTICAL to the
-    * ordered replay's — the disorder gates assert exactly that by
-    * sharing the ordered gates' aggregation AND oracle. Determinism of
-    * the gate itself: the jitter is xxhash64 of the row (same data ⇒
-    * same replay layout), so the staging stays memoizable. */
-  private def replayAsStreamDisordered(s: SparkSession, dir: String,
-                                       name: String, src: DataFrame,
-                                       tsCol: String,
-                                       disorderMicros: Long): DataFrame = {
-    val stage = stageOrderedQuartiles(s, dir, name, src, tsCol,
-      disorderMicros)
-    s.readStream.schema(src.schema).format("parquet")
-      .option("maxFilesPerTrigger", "1").load(stage.toString)
-  }
-
-  /** The staging half of [[replayAsStreamOrdered]]: materialize `src` as
-    * four event-time-quartile parquet files (part-00001..4, mtime-pinned
-    * so FileStreamSource reads them in event order), memoized per
-    * (dir, data fingerprint, name). Exposed separately so the RESTART
-    * gate can publish the files incrementally into its own input dir. */
-  private[graft] def stageOrderedQuartiles(s: SparkSession, dir: String,
-                                    name: String, src: DataFrame,
-                                    tsCol: String,
-                                    disorderMicros: Long = 0L)
-      : java.nio.file.Path = {
-    import scala.jdk.CollectionConverters._
-    val mode =
-      if (disorderMicros == 0L) "ordered" else s"disorder$disorderMicros"
-    val stage = java.nio.file.Paths.get("/tmp/graft-streamstage-" +
-      java.util.UUID.nameUUIDFromBytes(
-        s"$dir|${Tables.dirFingerprint(dir)}|$name|$mode"
-          .getBytes("UTF-8")).toString)
-    if (!java.nio.file.Files.exists(stage.resolve("_SUCCESS"))) {
-      // replay position: true event time; in disorder mode, plus a
-      // deterministic per-row jitter in [0, δ) — xxhash64 of the whole
-      // row, so identical data stages identically
-      val orderCol =
-        if (disorderMicros == 0L) col(tsCol)
-        else expr(s"unix_micros(cast($tsCol AS timestamp))") +
-          pmod(xxhash64(src.columns.map(col): _*), lit(disorderMicros))
-      // cache the global sort: the four quartile filters would otherwise
-      // re-run the single-partition window sort once each
-      val ranked = src.withColumn("__q", ntile(4).over(
-        org.apache.spark.sql.expressions.Window.orderBy(orderCol)))
-        .cache()
-      java.nio.file.Files.createDirectories(stage)
-      try {
-        for (q <- 1 to 4) {
-          val sub = stage.resolve(s"__build$q")
-          ranked.filter(col("__q") === q).drop("__q")
-            .coalesce(1).write.mode("overwrite").parquet(sub.toString)
-          val ls = java.nio.file.Files.list(sub)
-          val part =
-            try ls.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"no parquet part written under $sub"))
-            finally ls.close()
-          val dst = stage.resolve(f"part-$q%05d.parquet")
-          java.nio.file.Files.move(part, dst,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(
-              1700000000000L + q * 60000L))
-          val wk = java.nio.file.Files.walk(sub)
-          try wk.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.delete)
-          finally wk.close()
-        }
-      } finally ranked.unpersist()
-      java.nio.file.Files.createFile(stage.resolve("_SUCCESS"))
-    }
-    stage
-  }
 
   /** The events relation the watermarked window gates aggregate. */
   private[graft] def eventsWm(s: SparkSession, dir: String): DataFrame =
@@ -225,51 +97,15 @@ object CorpusQueries {
           "yyyy-MM-dd HH:mm:ss.SSSSSS").as("w_start"),
         col("user_id"), col("n"), col("sum_value"))
 
-  private def freshRestartRunDir(gate: String): java.nio.file.Path =
-    RestartRuns.fresh(gate)
-
-  /** Two-phase checkpointed-restart runner shared by the restart gates:
-    * publish staged quartile files 1–2 into the run's input dir, stream
-    * them into a parquet sink with AvailableNow and terminate (the
-    * STOP), publish quartiles 3–4, and start a NEW query from the same
-    * checkpoint. Recovery must restore (a) the file-source offsets (no
-    * re-read, no double counts) and (b) the operator state, so state
-    * straddling the stop emits once with full counts — making the union
-    * of both phases' output equal the continuous run's emitted set,
-    * which is what lets every restart gate share its continuous twin's
-    * batch oracle verbatim. Checkpoint/output live in a fresh temp dir
-    * per invocation (restart state must not leak across bench
-    * iterations); `stage` is the memoized quartile staging. */
-  private def twoPhaseRestart(s: SparkSession,
-                              schema: org.apache.spark.sql.types.StructType,
-                              stage: java.nio.file.Path, runName: String,
-                              agg: DataFrame => DataFrame): DataFrame = {
-    val run = freshRestartRunDir(runName)
-    val in = run.resolve("in")
-    java.nio.file.Files.createDirectories(in)
-    def publish(q: Int): Unit = {
-      val dst = in.resolve(f"part-$q%05d.parquet")
-      java.nio.file.Files.copy(stage.resolve(f"part-$q%05d.parquet"), dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(
-          1700000000000L + q * 60000L))
-    }
-    def phase(): Unit = {
-      val stream = s.readStream.schema(schema).format("parquet")
-        .option("maxFilesPerTrigger", "1").load(in.toString)
-      val q = startWithStreamConf(s) {
-        agg(stream).writeStream.format("parquet")
-          .option("path", run.resolve("out").toString)
-          .option("checkpointLocation", run.resolve("ckpt").toString)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-    }
-    publish(1); publish(2); phase() // first half, then STOP
-    publish(3); publish(4); phase() // resume from the checkpoint
-    s.read.parquet(run.resolve("out").toString)
+  /** A restart gate: stage `src` in four files ordered by `order` into a
+    * fresh run dir of `gate`, and run `agg` across a checkpointed stop
+    * after file 2 ([[Replay.restart]]). */
+  private def restartGate(s: SparkSession, gate: String, src: DataFrame,
+                          order: Column,
+                          agg: DataFrame => DataFrame): DataFrame = {
+    val run = RestartRuns.fresh(gate)
+    Replay.restart(s, Replay.stage(src, order, 4, run.resolve("stage")),
+      run, split = 2)(Replay.appendParquet(agg))
   }
 
   /** Run a streaming `start()` with the gates' state partitions pinned to
@@ -918,11 +754,12 @@ object CorpusQueries {
     // which is what makes a streaming query hash-oracle-able at all.
     "x_stream_dedup" -> ((s, dir) => {
       // File streams read directories; the testdata tables are single
-      // files, so stage the corpus into a temp dir split 4 ways and
-      // replay one file per trigger — the aggregation state must then
-      // genuinely carry across four micro-batches.
+      // files, so stage the corpus split 4 ways and replay one file per
+      // trigger — the aggregation state must then genuinely carry across
+      // four micro-batches.
       val src = docs(s, dir).select(col("doc_id"), col("text"))
-      val stream = replayAsStream(s, dir, "docs", src)
+      val stream = Replay.stream(s, RestartRuns.fresh("x_stream_dedup"),
+        src, Replay.rowHash(src))
       val agg = stream.select(md5(col("text")).as("digest"), col("doc_id"))
         .groupBy(col("digest")).agg(min(col("doc_id")).as("keep_id"))
       runToCompletion(s, agg, "x_stream_dedup_sink")
@@ -941,7 +778,8 @@ object CorpusQueries {
     "x_stream_window" -> ((s, dir) => {
       val src = Tables.load(s, dir, "events")
         .select(col("ts"), col("event_type"), col("value"))
-      val stream = replayAsStream(s, dir, "events", src)
+      val stream = Replay.stream(s, RestartRuns.fresh("x_stream_window"),
+        src, Replay.rowHash(src))
       val agg = stream
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -968,7 +806,8 @@ object CorpusQueries {
         .groupBy(col("user_id")).agg(min(col("c_mktsegment")).as("segment"))
       val src = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("value"))
-      val stream = replayAsStream(s, dir, "events_enrich", src)
+      val stream = Replay.stream(s, RestartRuns.fresh("x_stream_enrich"),
+        src, Replay.rowHash(src))
       val agg = stream.join(broadcast(users), Seq("user_id"), "left")
         .groupBy(col("segment"), col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -994,7 +833,8 @@ object CorpusQueries {
     "x_stream_session" -> ((s, dir) => {
       val src = Tables.load(s, dir, "events")
         .select(col("user_id"), col("ts"), col("value"))
-      val stream = replayAsStream(s, dir, "events_session", src)
+      val stream = Replay.stream(s, RestartRuns.fresh("x_stream_session"),
+        src, Replay.rowHash(src))
       val agg = stream
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n"),
@@ -1019,22 +859,25 @@ object CorpusQueries {
     // equals the batch join and the gate is hash-oracle-able. Production
     // adds withWatermark on both sides + the interval condition so state
     // evicts once the watermark passes click_ts + 1h; the gate omits the
-    // watermark because the staged replay hash-splits rows across files
-    // (arrival order ≠ event order), and watermark eviction would make
-    // the result depend on that arrival order. The join keys on user_id,
-    // so both streams shuffle once on the same key and the interval
-    // check runs within the co-partitioned state.
+    // watermark because the staged replay orders rows across files by a
+    // row hash (arrival order ≠ event order), and watermark eviction
+    // would make the result depend on that arrival order. The join keys
+    // on user_id, so both streams shuffle once on the same key and the
+    // interval check runs within the co-partitioned state.
     "x_stream_join" -> ((s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-      val clicks = replayAsStream(s, dir, "events_click",
-        ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("click_ts")))
-      val buys = replayAsStream(s, dir, "events_buy",
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"),
-            col("event_id").as("purchase_id"), col("ts").as("purchase_ts")))
+      val run = RestartRuns.fresh("x_stream_join")
+      val clickSrc = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("click_id"),
+          col("ts").as("click_ts"))
+      val buySrc = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"),
+          col("event_id").as("purchase_id"), col("ts").as("purchase_ts"))
+      val clicks = Replay.stream(s, run.resolve("clicks"), clickSrc,
+        Replay.rowHash(clickSrc))
+      val buys = Replay.stream(s, run.resolve("buys"), buySrc,
+        Replay.rowHash(buySrc))
       val joined = clicks.join(buys,
         col("user_id") === col("p_user") &&
           col("purchase_ts") >= col("click_ts") &&
@@ -1060,16 +903,17 @@ object CorpusQueries {
       val ev = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("ts").cast("timestamp").as("ts"))
-      val clicks = replayAsStreamOrdered(s, dir, "events_click_ord",
-        ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("click_ts")), "click_ts")
+      val run = RestartRuns.fresh("x_stream_join_append")
+      val clicks = Replay.stream(s, run.resolve("clicks"),
+          ev.filter(col("event_type") === "click")
+            .select(col("user_id"), col("event_id").as("click_id"),
+              col("ts").as("click_ts")), col("click_ts"))
         .withWatermark("click_ts", "2 hours")
-      val buys = replayAsStreamOrdered(s, dir, "events_buy_ord",
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"),
-            col("event_id").as("purchase_id"),
-            col("ts").as("purchase_ts")), "purchase_ts")
+      val buys = Replay.stream(s, run.resolve("buys"),
+          ev.filter(col("event_type") === "purchase")
+            .select(col("user_id").as("p_user"),
+              col("event_id").as("purchase_id"),
+              col("ts").as("purchase_ts")), col("purchase_ts"))
         .withWatermark("purchase_ts", "2 hours")
       val joined = clicks.join(buys,
         col("user_id") === col("p_user") &&
@@ -1095,7 +939,8 @@ object CorpusQueries {
     // just asserted.
     "x_stream_window_append" -> ((s, dir) => {
       val src = eventsWm(s, dir)
-      val stream = replayAsStreamOrdered(s, dir, "events_wm", src, "ts")
+      val stream = Replay.stream(s, RestartRuns.fresh("x_stream_window_append"),
+        src, col("ts"))
       runAppend(s, windowedAppendAgg(stream), "x_stream_window_append_sink")
         .select(col("w_start"), col("event_type"), col("n"),
           col("sum_value"))
@@ -1108,12 +953,12 @@ object CorpusQueries {
     // 90-minute disorder bound, strictly below the 2-hour delay.
     // Determinism no longer leans on ordered replay; it is the
     // watermark contract itself doing the work (no drop is possible
-    // when disorder < delay — proof at replayAsStreamDisordered), so
+    // when disorder < delay — proof at Replay.jittered), so
     // the emitted set must be IDENTICAL to the ordered run's.
     "x_stream_window_disorder" -> ((s, dir) => {
       val src = eventsWm(s, dir)
-      val stream = replayAsStreamDisordered(s, dir, "events_wm", src,
-        "ts", 90L * 60 * 1000000)
+      val stream = Replay.stream(s, RestartRuns.fresh("x_stream_window_disorder"),
+        src, Replay.jittered(src, "ts", 90L * 60 * 1000000))
       runAppend(s, windowedAppendAgg(stream),
           "x_stream_window_disorder_sink")
         .select(col("w_start"), col("event_type"), col("n"),
@@ -1137,16 +982,13 @@ object CorpusQueries {
     // window state, so windows straddling the stop emit once with full
     // counts — making the union of both phases' output equal the
     // single-run emitted set, which is what lets a RESTARTED run share
-    // x_stream_window_append's batch oracle verbatim. Checkpoint/output
-    // live in a fresh temp dir per invocation (restart state must not
-    // leak across bench iterations); the quartile staging is the
-    // memoized shared one.
-    "x_stream_restart" -> ((s, dir) => {
-      val src = eventsWm(s, dir)
-      val stage = stageOrderedQuartiles(s, dir, "events_wm", src, "ts")
-      twoPhaseRestart(s, src.schema, stage, "window", windowedAppendAgg)
-        .orderBy("w_start", "event_type")
-    }),
+    // x_stream_window_append's batch oracle verbatim. Staging,
+    // checkpoint and output live in a fresh run dir per invocation
+    // (restart state must not leak across bench iterations).
+    "x_stream_restart" -> ((s, dir) =>
+      restartGate(s, "x_stream_restart", eventsWm(s, dir),
+          col("ts"), windowedAppendAgg)
+        .orderBy("w_start", "event_type")),
 
     // RESTART × DISORDER — the matrix corner the two families above
     // leave open: a checkpointed stop amid OUT-OF-ORDER arrival, the
@@ -1157,15 +999,13 @@ object CorpusQueries {
     // the stop out of event-time order; recovery must restore the
     // watermark and window state such that no late-but-in-bound row is
     // dropped and nothing double-counts. disorder < delay still bounds
-    // the emitted set (the replayAsStreamDisordered no-drop proof holds
-    // for ANY prefix of the perturbed order, hence across the restart),
-    // so the two-phase union shares windowAppendOracle verbatim.
+    // the emitted set (the Replay.jittered no-drop proof holds for ANY
+    // prefix of the perturbed order, hence across the restart), so the
+    // two-phase union shares windowAppendOracle verbatim.
     "x_stream_restart_disorder" -> ((s, dir) => {
       val src = eventsWm(s, dir)
-      val stage = stageOrderedQuartiles(s, dir, "events_wm", src, "ts",
-        90L * 60 * 1000000)
-      twoPhaseRestart(s, src.schema, stage, "window_disorder",
-          windowedAppendAgg)
+      restartGate(s, "x_stream_restart_disorder", src,
+          Replay.jittered(src, "ts", 90L * 60 * 1000000), windowedAppendAgg)
         .orderBy("w_start", "event_type")
     }),
 
@@ -1179,7 +1019,8 @@ object CorpusQueries {
     // state and are withheld — the oracle's HAVING mirrors it.
     "x_stream_session_append" -> ((s, dir) => {
       val src = eventsWmSess(s, dir)
-      val stream = replayAsStreamOrdered(s, dir, "events_wm_sess", src, "ts")
+      val stream = Replay.stream(s, RestartRuns.fresh("x_stream_session_append"),
+        src, col("ts"))
       runAppend(s, sessionAppendAgg(stream), "x_stream_session_append_sink")
         .select(col("w_start"), col("user_id"), col("n"), col("sum_value"))
         .orderBy("user_id", "w_start")
@@ -1195,8 +1036,8 @@ object CorpusQueries {
     // Same sessionAppendAgg, same oracle; 90-minute disorder bound.
     "x_stream_session_disorder" -> ((s, dir) => {
       val src = eventsWmSess(s, dir)
-      val stream = replayAsStreamDisordered(s, dir, "events_wm_sess",
-        src, "ts", 90L * 60 * 1000000)
+      val stream = Replay.stream(s, RestartRuns.fresh("x_stream_session_disorder"),
+        src, Replay.jittered(src, "ts", 90L * 60 * 1000000))
       runAppend(s, sessionAppendAgg(stream),
           "x_stream_session_disorder_sink")
         .select(col("w_start"), col("user_id"), col("n"), col("sum_value"))
@@ -1212,12 +1053,10 @@ object CorpusQueries {
     // makes the two-phase union share x_stream_session_append's oracle
     // verbatim (the shared sessionAppendAgg definition makes parameter
     // drift impossible).
-    "x_stream_restart_session" -> ((s, dir) => {
-      val src = eventsWmSess(s, dir)
-      val stage = stageOrderedQuartiles(s, dir, "events_wm_sess", src, "ts")
-      twoPhaseRestart(s, src.schema, stage, "session", sessionAppendAgg)
-        .orderBy("user_id", "w_start")
-    }),
+    "x_stream_restart_session" -> ((s, dir) =>
+      restartGate(s, "x_stream_restart_session", eventsWmSess(s, dir),
+          col("ts"), sessionAppendAgg)
+        .orderBy("user_id", "w_start")),
 
     // RefinedWeb/C4 line-wise quality signals. Documents are single-line
     // word streams, so line structure is synthesized deterministically

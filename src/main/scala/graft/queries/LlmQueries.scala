@@ -623,14 +623,8 @@ object LlmQueries {
       val cb = modelVectors(s, dir, 4)
       val queries = e.filter(col("vec_id") < 3)
         .select(col("vec_id"), col("embedding"))
-      val stage = java.nio.file.Paths.get("/tmp/graft-streamstage-" +
-        java.util.UUID.nameUUIDFromBytes(
-          s"$dir|${graft.Tables.dirFingerprint(dir)}|knn_queries"
-            .getBytes("UTF-8")).toString)
-      if (!java.nio.file.Files.exists(stage.resolve("_SUCCESS")))
-        queries.repartition(3).write.mode("overwrite").parquet(stage.toString)
-      val stream = s.readStream.schema(queries.schema).format("parquet")
-        .option("maxFilesPerTrigger", "1").load(stage.toString)
+      val stream = Replay.stream(s, RestartRuns.fresh("x_stream_knn"),
+        queries, Replay.rowHash(queries), n = 3)
       s.streams.active
         .filter(q => Option(q.name).contains("x_stream_knn_sink"))
         .foreach(_.stop())
@@ -667,61 +661,31 @@ object LlmQueries {
     // were not recovered, phase 2 would re-serve phase-1 queries and the
     // appended sink would hold duplicate rows — failing the hash oracle
     // (the SAME s_knn_ivfpq batch oracle, because per-query serving
-    // results are independent of batching and of the stop). Run dirs go
-    // through RestartRuns (fresh per invocation, shutdown-hook cleaned).
+    // results are independent of batching and of the stop). One replay
+    // file per query vector (ordered by vec_id): serve queries 0 and 1,
+    // STOP, resume from the checkpoint with only query 2 left.
     "x_stream_restart_knn" -> ((s, dir) => {
       val e = emb(s, dir)
       val centroids = modelVectors(s, dir, 3)
       val cb = modelVectors(s, dir, 4)
       val queries = e.filter(col("vec_id") < 3)
         .select(col("vec_id"), col("embedding"))
-      val run = RestartRuns.fresh("knn")
-      val in = run.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      def publish(q: Int): Unit = {
-        // one replay file per query vector (vec_id q−1), pinned mtime so
-        // the file source's latestFirst=false ordering is deterministic
-        import scala.jdk.CollectionConverters._
-        val sub = run.resolve(s"__build$q")
-        queries.filter(col("vec_id") === (q - 1)).coalesce(1)
-          .write.mode("overwrite").parquet(sub.toString)
-        val ls = java.nio.file.Files.list(sub)
-        val part =
-          try ls.iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet part written under $sub"))
-          finally ls.close()
-        val dst = in.resolve(f"part-$q%05d.parquet")
-        java.nio.file.Files.move(part, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + q * 60000L))
-      }
-      def phase(): Unit = {
-        val stream = s.readStream.schema(queries.schema).format("parquet")
-          .option("maxFilesPerTrigger", "1").load(in.toString)
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              Similarity.ivfPqKnn(e, "vec_id", "embedding",
-                  batch, "vec_id", "embedding",
-                  centroids, cb, m = 8, nProbe = 2, k = 5)
-                .select(col("qid"), col("id"),
-                  round(col("adc"), 6).as("adc"), col("rank"))
-                .write.mode("append")
-                .parquet(run.resolve("out").toString)
-              ()
-            }
+      val run = RestartRuns.fresh("x_stream_restart_knn")
+      val staged = Replay.stage(queries, col("vec_id"), 3,
+        run.resolve("stage"))
+      Replay.restart(s, staged, run, split = 2) { (stream, out) =>
+        stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+          if (!batch.isEmpty) {
+            Similarity.ivfPqKnn(e, "vec_id", "embedding",
+                batch, "vec_id", "embedding",
+                centroids, cb, m = 8, nProbe = 2, k = 5)
+              .select(col("qid"), col("id"),
+                round(col("adc"), 6).as("adc"), col("rank"))
+              .write.mode("append").parquet(out)
+            ()
           }
-          .option("checkpointLocation", run.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      publish(1); publish(2); phase() // serve queries 0 and 1, then STOP
-      publish(3); phase() // resume from the checkpoint: only query 2 left
-      s.read.parquet(run.resolve("out").toString).orderBy("qid", "rank")
+        }
+      }.orderBy("qid", "rank")
     }),
 
     // MMR diversified re-rank: top-20 brute shortlist → greedy top-5

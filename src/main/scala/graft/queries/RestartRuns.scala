@@ -1,17 +1,15 @@
 package graft.queries
 
-/** Working-dir registry for the checkpointed-RESTART gates
-  * (`x_stream_restart*`): each invocation gets a fresh temp dir holding
-  * its input files, checkpoint, and sink output; THAT GATE's previous
-  * dir is deleted on the next invocation (iterations of one gate run
+/** Working-dir registry for the streaming gates: each invocation of a
+  * gate gets a fresh temp dir holding its staged replay files
+  * ([[Replay]]) and, for the checkpointed-RESTART gates, its input
+  * files, checkpoint and sink output. THAT GATE's previous dir is
+  * deleted on the next invocation (iterations of one gate run
   * sequentially, so its prior DataFrame is already consumed) and
-  * everything is removed by a JVM shutdown hook — unbounded /tmp
-  * accumulation across bench/verify cycles was a round-13 self-review
-  * finding. Keyed per gate name (advice r13): the gates return LAZY
-  * parquet reads over their run dir, so a SIBLING gate constructing
-  * must not invalidate an unconsumed sibling result. Shared by
-  * CorpusQueries (`x_stream_restart` / `x_stream_restart_session`) and
-  * LlmQueries (`x_stream_restart_knn`, the serving-path recovery gate). */
+  * everything is removed by a JVM shutdown hook, so nothing accumulates
+  * in /tmp across bench/verify cycles. Keyed per gate name: the restart
+  * gates return LAZY parquet reads over their run dir, so a SIBLING gate
+  * constructing must not invalidate an unconsumed sibling result. */
 private[graft] object RestartRuns {
   private val last =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
@@ -31,7 +29,7 @@ private[graft] object RestartRuns {
   }))
 
   def fresh(gate: String): java.nio.file.Path = {
-    val run = java.nio.file.Files.createTempDirectory(s"graft-restart-$gate-")
+    val run = java.nio.file.Files.createTempDirectory(s"graft-$gate-")
     deleteTree(last.put(gate, run))
     run
   }

@@ -172,8 +172,7 @@ object FaultInjection {
           Runtime.getRuntime.halt(9)
         }
     })
-    val stream = s.readStream.schema(schema).format("parquet")
-      .option("maxFilesPerTrigger", "1").load(runDir.resolve("in").toString)
+    val stream = graft.queries.Replay.open(s, schema, runDir.resolve("in"))
     aggFor(aggKind)(stream)
       .writeStream.format("parquet")
       .option("path", runDir.resolve("out").toString)
@@ -186,75 +185,50 @@ object FaultInjection {
     sys.exit(3)
   }
 
-  private def publish(stage: java.nio.file.Path, in: java.nio.file.Path,
-                      q: Int): Unit = {
-    val dst = in.resolve(f"part-$q%05d.parquet")
-    java.nio.file.Files.copy(stage.resolve(f"part-$q%05d.parquet"), dst)
-    java.nio.file.Files.setLastModifiedTime(dst,
-      java.nio.file.attribute.FileTime.fromMillis(
-        1700000000000L + q * 60000L))
-  }
-
   private def crashMode(spark: SparkSession, sfDir: String,
                         aggKind: String = "window",
                         haltAfter: Int = 2): Boolean = {
-    import graft.queries.CorpusQueries
-    val (src, stageName) =
-      if (aggKind == "session")
-        (CorpusQueries.eventsWmSess(spark, sfDir), "events_wm_sess")
-      else (CorpusQueries.eventsWm(spark, sfDir), "events_wm")
-    val stage = CorpusQueries.stageOrderedQuartiles(
-      spark, sfDir, stageName, src, "ts")
-    def runPhase(runDir: java.nio.file.Path): Unit = {
-      val stream = spark.readStream.schema(src.schema).format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(runDir.resolve("in").toString)
-      val q = CorpusQueries.startWithStreamConf(spark) {
-        aggFor(aggKind)(stream)
-          .writeStream.format("parquet")
-          .option("path", runDir.resolve("out").toString)
-          .option("checkpointLocation", runDir.resolve("ckpt").toString)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-    }
-    // continuous reference: all four quartiles, one run, same aggregation
-    val ref = java.nio.file.Files.createTempDirectory("graft-crashref-")
-    java.nio.file.Files.createDirectories(ref.resolve("in"))
-    (1 to 4).foreach(publish(stage, ref.resolve("in"), _))
-    runPhase(ref)
-    val (refHash, refRows) = hashOf(
-      spark.read.parquet(ref.resolve("out").toString))
-    System.err.println(s"[fault] crash($aggKind,halt=$haltAfter) reference: $refRows rows hash=$refHash")
+    import graft.queries.{CorpusQueries, Replay}
+    val src =
+      if (aggKind == "session") CorpusQueries.eventsWmSess(spark, sfDir)
+      else CorpusQueries.eventsWm(spark, sfDir)
+    val tag = s"crash($aggKind,halt=$haltAfter)"
+    val root = java.nio.file.Files.createTempDirectory("graft-crash-")
+    try {
+      val staged = Replay.stage(src,
+        org.apache.spark.sql.functions.col("ts"), 4, root.resolve("stage"))
+      val query = Replay.appendParquet(aggFor(aggKind))
+      // continuous reference: all four files, one run, same aggregation
+      val ref = root.resolve("ref")
+      Replay.phase(spark, staged, ref, 1 to 4)(query)
+      val (refHash, refRows) = hashOf(
+        spark.read.parquet(ref.resolve("out").toString))
+      System.err.println(s"[fault] $tag reference: $refRows rows hash=$refHash")
 
-    // faulted run: phase 1 in a child JVM that halts mid-replay
-    val run = java.nio.file.Files.createTempDirectory("graft-crashrun-")
-    java.nio.file.Files.createDirectories(run.resolve("in"))
-    java.nio.file.Files.write(run.resolve("schema.json"),
-      src.schema.json.getBytes("UTF-8"))
-    java.nio.file.Files.write(run.resolve("crash.conf"),
-      s"$aggKind:$haltAfter".getBytes("UTF-8"))
-    (1 to 2).foreach(publish(stage, run.resolve("in"), _))
-    val exit = childJvm(Seq("crash-child", run.toString)).start().waitFor()
-    System.err.println(s"[fault] crash($aggKind,halt=$haltAfter) child exited $exit (9 = halted mid-replay)")
-    if (exit != 9) {
-      System.err.println("[fault] crash: FAIL (child did not halt as designed)")
-      return false
-    }
-    // resume from the TORN checkpoint in this (different!) JVM
-    (3 to 4).foreach(publish(stage, run.resolve("in"), _))
-    runPhase(run)
-    val (gotHash, gotRows) = hashOf(
-      spark.read.parquet(run.resolve("out").toString))
-    System.err.println(s"[fault] crash($aggKind,halt=$haltAfter) recovered: $gotRows rows hash=$gotHash")
-    val ok = gotHash == refHash
-    System.err.println(s"[fault] crash($aggKind,halt=$haltAfter): " +
-      (if (ok) "PASS (non-graceful stop, recovery hash-identical)"
-       else "FAIL (recovered output diverges from continuous run)"))
-    Seq(ref, run).foreach(graft.queries.RestartRuns.deleteTree)
-    ok
+      // faulted run: phase 1 in a child JVM that halts mid-replay
+      val run = root.resolve("run")
+      (1 to 2).foreach(staged.publish(run.resolve("in"), _))
+      java.nio.file.Files.write(run.resolve("schema.json"),
+        src.schema.json.getBytes("UTF-8"))
+      java.nio.file.Files.write(run.resolve("crash.conf"),
+        s"$aggKind:$haltAfter".getBytes("UTF-8"))
+      val exit = childJvm(Seq("crash-child", run.toString)).start().waitFor()
+      System.err.println(s"[fault] $tag child exited $exit (9 = halted mid-replay)")
+      if (exit != 9) {
+        System.err.println("[fault] crash: FAIL (child did not halt as designed)")
+        return false
+      }
+      // resume from the TORN checkpoint in this (different!) JVM
+      Replay.phase(spark, staged, run, 3 to 4)(query)
+      val (gotHash, gotRows) = hashOf(
+        spark.read.parquet(run.resolve("out").toString))
+      System.err.println(s"[fault] $tag recovered: $gotRows rows hash=$gotHash")
+      val ok = gotHash == refHash
+      System.err.println(s"[fault] $tag: " +
+        (if (ok) "PASS (non-graceful stop, recovery hash-identical)"
+         else "FAIL (recovered output diverges from continuous run)"))
+      ok
+    } finally graft.queries.RestartRuns.deleteTree(root)
   }
 
   // ----------------------------------------------------------- batch-write
@@ -305,8 +279,10 @@ object FaultInjection {
 
   /** Child-JVM entry for batch-write: starts the write, and a daemon
     * watcher `Runtime.halt(9)`s the JVM (no shutdown hooks, no committer
-    * cleanup) the moment `haltAfter` part-files have been staged —
-    * mid-write by construction. */
+    * cleanup) the moment `haltAfter` part-files have been staged. The
+    * write's tasks with partition id ≥ `haltAfter` wait until then, so
+    * the job cannot commit before the halt: mid-write by construction,
+    * however the host schedules the watcher. */
   private def batchWriteChild(runDir: java.nio.file.Path): Unit = {
     val conf = new String(java.nio.file.Files.readAllBytes(
       runDir.resolve("bw.conf")), "UTF-8").trim.split(":")
@@ -317,18 +293,21 @@ object FaultInjection {
       runDir.resolve("warehouse").resolve("fault_bw")
     else runDir.resolve("dest")
     val watcher = new Thread(() => {
-      while (true) {
-        val n = stagedPartFiles(dest)
-        // Halt only while NOTHING is reader-visible yet: once
-        // FileOutputCommitter's (non-atomic) job commit starts renaming
-        // task outputs out of _temporary, a halt would land mid-commit —
-        // visible part-files with no _SUCCESS is within the committer's
-        // contract (readers gate on _SUCCESS), so the parent's stricter
-        // zero-visible-part-files assertion would false-FAIL. Guarding on
-        // visiblePartFiles.isEmpty pins the tear provably pre-commit;
-        // commit outrunning every 5 ms poll still exits 3 (loud, caught
-        // by the parent).
-        if (n >= haltAfter && visiblePartFiles(dest).isEmpty) {
+      val deadline = System.nanoTime() + 300L * 1000000000L
+      while (System.nanoTime() < deadline) {
+        // The held tasks keep the job from committing, so nothing can be
+        // reader-visible here; the check keeps a halt from ever landing
+        // mid-commit should that change. A walk that meets a task attempt
+        // directory while a task commit renames it throws: that poll is
+        // skipped.
+        val tear =
+          try Some(stagedPartFiles(dest))
+            .filter(_ >= haltAfter && visiblePartFiles(dest).isEmpty)
+          catch {
+            case _: java.io.IOException | _: java.io.UncheckedIOException =>
+              None
+          }
+        tear.foreach { n =>
           System.err.println(s"[fault-child] halting JVM: $n part-file(s) " +
             s"staged, none committed (variant=$variant, " +
             s"haltAfter=$haltAfter)")
@@ -336,10 +315,20 @@ object FaultInjection {
         }
         Thread.sleep(5)
       }
+      System.err.println(s"[fault-child] $haltAfter part-file(s) never " +
+        "staged within 300 s")
+      Runtime.getRuntime.halt(3)
     })
     watcher.setDaemon(true)
     watcher.start()
-    val df = batchWriteDf(spark, sfDir)
+    // hold every write task from partition haltAfter on until the halt;
+    // the parent's reference frame is not held
+    val frame = batchWriteDf(spark, sfDir)
+    val df = spark.createDataFrame(frame.rdd.mapPartitionsWithIndex {
+      (part, rows) =>
+        if (part >= haltAfter) while (true) Thread.sleep(1000)
+        rows
+    }, frame.schema)
     variant match {
       case "partitioned" =>
         graft.io.Sinks.parquetSink(df, dest.toString, Seq("l_returnflag"))
@@ -383,66 +372,67 @@ object FaultInjection {
     val (refHash, refRows) = hashOf(df)
     System.err.println(s"[fault] $tag reference: $refRows rows hash=$refHash")
     val runDir = java.nio.file.Files.createTempDirectory("graft-bw-")
-    java.nio.file.Files.write(runDir.resolve("bw.conf"),
-      s"$sfDir:$variant:$haltAfter".getBytes("UTF-8"))
-    val exit = childJvm(Seq("batch-write-child", runDir.toString))
-      .start().waitFor()
-    System.err.println(s"[fault] $tag child exited $exit (9 = halted mid-write)")
-    if (exit != 9) {
-      System.err.println(s"[fault] $tag: FAIL (child did not halt mid-write " +
-        "— tear never landed, nothing was asserted)")
-      return false
-    }
-    val dest = if (variant == "bucketed")
-      runDir.resolve("warehouse").resolve("fault_bw")
-    else runDir.resolve("dest")
-    val vis = visiblePartFiles(dest)
-    val success = java.nio.file.Files.exists(dest.resolve("_SUCCESS"))
-    if (vis.nonEmpty || success) {
-      System.err.println(s"[fault] $tag: FAIL (torn write left reader-" +
-        s"visible output: ${vis.size} part-file(s), _SUCCESS=$success — " +
-        s"first: ${vis.take(3).mkString(", ")})")
-      return false
-    }
-    System.err.println(s"[fault] $tag: torn destination invisible to " +
-      s"readers (0 committed part-files, no _SUCCESS; " +
-      s"${stagedPartFiles(dest)} file(s) stranded in staging)")
-    // retried job: overwrite the torn destination, then read back and hash
-    val reread = variant match {
-      case "bucketed" =>
-        // same writer path (bucket spec + saveAsTable); the parent session
-        // has its own warehouse, so recovery writes the table fresh there —
-        // the retry-over-torn-staging case is covered by the other variants.
-        // A PREVIOUS run's table location can survive in the warehouse dir
-        // while the fresh JVM's in-memory catalog has no table entry: DROP
-        // is then a no-op and saveAsTable's CREATE path refuses the
-        // existing location (locationAlreadyExists — caught by the first
-        // back-to-back full fault_injection.sh sweep). Clear both.
-        spark.sql("DROP TABLE IF EXISTS fault_bw_recover")
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val whDir = if (wh.startsWith("file:"))
-          java.nio.file.Paths.get(java.net.URI.create(wh))
-        else java.nio.file.Paths.get(wh)
-        graft.queries.RestartRuns.deleteTree(whDir.resolve("fault_bw_recover"))
-        graft.io.Sinks.writeBucketed(df, "fault_bw_recover", 8,
-          Seq("l_orderkey"), Seq("l_orderkey"))
-        spark.table("fault_bw_recover")
-      case "partitioned" =>
-        graft.io.Sinks.parquetSink(df, dest.toString, Seq("l_returnflag"))
-        spark.read.parquet(dest.toString)
-          .select(df.columns.map(org.apache.spark.sql.functions.col): _*)
-      case _ =>
-        graft.io.Sinks.parquetSink(df, dest.toString)
-        spark.read.parquet(dest.toString)
-    }
-    val (gotHash, gotRows) = hashOf(reread)
-    val ok = gotHash == refHash && gotRows == refRows
-    System.err.println(s"[fault] $tag recovered: $gotRows rows hash=$gotHash")
-    System.err.println(s"[fault] $tag: " +
-      (if (ok) "PASS (torn write invisible; retried write hash-identical)"
-       else "FAIL (retried write diverges from reference)"))
-    graft.queries.RestartRuns.deleteTree(runDir)
-    ok
+    try {
+      java.nio.file.Files.write(runDir.resolve("bw.conf"),
+        s"$sfDir:$variant:$haltAfter".getBytes("UTF-8"))
+      val exit = childJvm(Seq("batch-write-child", runDir.toString))
+        .start().waitFor()
+      System.err.println(s"[fault] $tag child exited $exit (9 = halted mid-write)")
+      if (exit != 9) {
+        System.err.println(s"[fault] $tag: FAIL (child did not halt mid-write " +
+          "— tear never landed, nothing was asserted)")
+        return false
+      }
+      val dest = if (variant == "bucketed")
+        runDir.resolve("warehouse").resolve("fault_bw")
+      else runDir.resolve("dest")
+      val vis = visiblePartFiles(dest)
+      val success = java.nio.file.Files.exists(dest.resolve("_SUCCESS"))
+      if (vis.nonEmpty || success) {
+        System.err.println(s"[fault] $tag: FAIL (torn write left reader-" +
+          s"visible output: ${vis.size} part-file(s), _SUCCESS=$success — " +
+          s"first: ${vis.take(3).mkString(", ")})")
+        return false
+      }
+      System.err.println(s"[fault] $tag: torn destination invisible to " +
+        s"readers (0 committed part-files, no _SUCCESS; " +
+        s"${stagedPartFiles(dest)} file(s) stranded in staging)")
+      // retried job: overwrite the torn destination, then read back and hash
+      val reread = variant match {
+        case "bucketed" =>
+          // same writer path (bucket spec + saveAsTable); the parent session
+          // has its own warehouse, so recovery writes the table fresh there —
+          // the retry-over-torn-staging case is covered by the other variants.
+          // A PREVIOUS run's table location can survive in the warehouse dir
+          // while the fresh JVM's in-memory catalog has no table entry: DROP
+          // is then a no-op and saveAsTable's CREATE path refuses the
+          // existing location (locationAlreadyExists — caught by the first
+          // back-to-back full fault_injection.sh sweep). Clear both.
+          spark.sql("DROP TABLE IF EXISTS fault_bw_recover")
+          val wh = spark.conf.get("spark.sql.warehouse.dir")
+          val whDir = if (wh.startsWith("file:"))
+            java.nio.file.Paths.get(java.net.URI.create(wh))
+          else java.nio.file.Paths.get(wh)
+          graft.queries.RestartRuns.deleteTree(whDir.resolve("fault_bw_recover"))
+          graft.io.Sinks.writeBucketed(df, "fault_bw_recover", 8,
+            Seq("l_orderkey"), Seq("l_orderkey"))
+          spark.table("fault_bw_recover")
+        case "partitioned" =>
+          graft.io.Sinks.parquetSink(df, dest.toString, Seq("l_returnflag"))
+          spark.read.parquet(dest.toString)
+            .select(df.columns.map(org.apache.spark.sql.functions.col): _*)
+        case _ =>
+          graft.io.Sinks.parquetSink(df, dest.toString)
+          spark.read.parquet(dest.toString)
+      }
+      val (gotHash, gotRows) = hashOf(reread)
+      val ok = gotHash == refHash && gotRows == refRows
+      System.err.println(s"[fault] $tag recovered: $gotRows rows hash=$gotHash")
+      System.err.println(s"[fault] $tag: " +
+        (if (ok) "PASS (torn write invisible; retried write hash-identical)"
+         else "FAIL (retried write diverges from reference)"))
+      ok
+    } finally graft.queries.RestartRuns.deleteTree(runDir)
   }
 
   def main(args: Array[String]): Unit = {

@@ -18,7 +18,10 @@ import org.apache.spark.sql.SparkSession
   *  2. It spawns a CHILD JVM with `-Xmx1500m` (`ChildHeap`) and 8 large
   *     shuffle partitions (`ChildParts`, on local[8]) so per-task
   *     execution memory is ~1500m·0.6/8 ≈ 110 MB against
-  *     multi-hundred-MB per-task sorts — the spill paths MUST engage. The child records per-query `memoryBytesSpilled` /
+  *     multi-hundred-MB per-task sorts, and Spark's force-spill
+  *     thresholds (`ChildForceSpill`) spill every sorter, window buffer
+  *     and sort-merge-join buffer past 10,000 rows whatever the heap —
+  *     the spill paths MUST engage. The child records per-query `memoryBytesSpilled` /
   *     `diskBytesSpilled` from its own task metrics and the same canonical
   *     result hash.
   *  3. The parent asserts (a) every query's child hash equals its
@@ -46,6 +49,17 @@ object SpillCertify {
     * headline sorts and aggregates cannot fit in execution memory. */
   private val ChildHeap = "1500m"
   private val ChildParts = "8"
+
+  /** The child session's force-spill thresholds, in rows: a sorter (sort,
+    * shuffle write), a window frame buffer or a sort-merge-join match
+    * buffer spills once it holds this many, so the spill paths run even
+    * when the data fits the child's execution memory. The reference
+    * session keeps Spark's defaults. */
+  private val ChildForceSpill: Map[String, String] = Seq(
+    "spark.shuffle.spill.numElementsForceSpillThreshold",
+    "spark.sql.windowExec.buffer.spill.threshold",
+    "spark.sql.sortMergeJoinExec.buffer.spill.threshold")
+    .map(_ -> "10000").toMap
 
   /** Spill-prone headline subset: full-partition window sorts, sort-merge
     * as-of, multi-join TPC-H shapes, line-grain explode shuffles, corpus
@@ -114,7 +128,7 @@ object SpillCertify {
                  else s"local[$cpus]"
     val execMem = if (conf.length > 5) Some(conf(5)).filter(_.nonEmpty)
                   else None
-    val spark = graft.Sessions.build(master, parts, execMem, Map.empty)
+    val spark = graft.Sessions.build(master, parts, execMem, ChildForceSpill)
     val rs = runAll(spark, sfDir, names, "spill-child")
     val out = rs.map { case (n, h, r, m, d, s) =>
       f"$n\t$h\t$r\t$m\t$d\t$s%.2f" }.mkString("", "\n", "\n")

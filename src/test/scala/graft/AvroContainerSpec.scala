@@ -20,7 +20,7 @@ class AvroContainerSpec extends SparkSpec {
         |{"name":"name","type":"string"},
         |{"name":"age","type":"int"},
         |{"name":"email","type":["null","string"],"default":null}]}""".stripMargin
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro-evo")
+    val dir = tempDir("graft-avro-evo")
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](writerSchema))
     w.create(writerSchema, dir.resolve("old.avro").toFile)
     val r = new GenericData.Record(writerSchema)
@@ -36,7 +36,7 @@ class AvroContainerSpec extends SparkSpec {
 
   test("readAvroContainer reads an Avro object container file end-to-end") {
     val schema = new Schema.Parser().parse(schemaJson)
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro")
+    val dir = tempDir("graft-avro")
     val f = dir.resolve("people.avro").toFile
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
     w.create(schema, f)

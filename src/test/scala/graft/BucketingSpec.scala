@@ -10,7 +10,7 @@ class BucketingSpec extends SparkSpec {
   import spark.implicits._
 
   test("partitioned write enables partition pruning on read") {
-    val out = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val out = tempDir("graft-part").toString
     Sinks.parquetSink(Tables.load(spark, sf0, "lineitem"), out,
       partitionCols = Seq("l_returnflag"))
     val pruned = spark.read.parquet(out).filter(col("l_returnflag") === "R")
@@ -30,7 +30,7 @@ class BucketingSpec extends SparkSpec {
     val centroids = e.filter(col("vec_id") < 3).orderBy("vec_id")
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
-    val out = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val out = tempDir("graft-ivf").toString
     Sinks.parquetSink(
       graft.sim.Similarity.ivfAssign(e, "embedding", centroids),
       out, partitionCols = Seq("cell"))

@@ -70,8 +70,7 @@ class CurationPipelineSpec extends SparkSpec {
     // (p_shard_shuffle assignment), partitioned parquet on disk, and read
     // it back: the artifact a dataloader actually consumes
     val draw = Packing.stableDraw(col("doc_id"))
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-curated-shards").toString
+    val outDir = tempDir("graft-curated-shards").toString
     kept4.withColumn("shard", (draw % 4).cast("int"))
       .repartition(col("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(outDir)

@@ -77,7 +77,7 @@ class EdgeOpsSpec extends SparkSpec {
   }
 
   test("streaming dedup-within-watermark drops restamped duplicates") {
-    val d = java.nio.file.Files.createTempDirectory("graft-ddw")
+    val d = tempDir("graft-ddw")
     // same key, two different event times within the watermark window
     Seq((1L, "2024-01-01 00:00:00"), (1L, "2024-01-01 00:00:30"),
         (2L, "2024-01-01 00:01:00"))

@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * settings (paths, master URL, core count, memory size), and every
   * session is built by [[Sessions]], so each gets the same UTC clock,
   * streaming state policy and `file:` binding. A new knob or a
-  * hand-built session fails here.
+  * hand-built session fails here, and so does a second copy of the
+  * streaming replay layout or its retired cross-process memo.
   */
 class KnobCensusSpec extends AnyFunSuite {
 
@@ -49,6 +50,15 @@ class KnobCensusSpec extends AnyFunSuite {
         .quote("SparkSession.builder()").r.findAllIn(code(read(p))).size)
       .filter(_._2 > 0)
     assert(calls == Seq("Sessions.scala" -> 1), calls)
+  }
+
+  test("one file under src/ holds the replay layout; no staging memo") {
+    val sources = files("src").filter(_.toString.endsWith(".scala"))
+    def count(lit: String): Map[String, Int] = sources.map(p =>
+      p.getFileName.toString -> java.util.regex.Pattern.quote(lit).r
+        .findAllIn(read(p)).size).filter(_._2 > 0).toMap
+    assert(count("1700000000000" + "L").keySet == Set("Replay.scala"))
+    assert(count("graft-stream" + "stage").isEmpty)
   }
 
   test("src/main reads no graft.* system property") {

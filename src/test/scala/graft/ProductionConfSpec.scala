@@ -137,8 +137,8 @@ class ProductionConfSpec extends SparkSpec {
     // file-based stream in the Kafka envelope shape (EP3 pattern); the sink
     // path is loadSolr (config/cloudsolr.conf:74-78) via the pass-through
     // stage inside foreachBatch — the Connect task loop for the Solr chain
-    val dir = java.nio.file.Files.createTempDirectory("graft-ep1")
-    val stage = java.nio.file.Files.createTempDirectory("graft-ep1-stage")
+    val dir = tempDir("graft-ep1")
+    val stage = tempDir("graft-ep1-stage")
     Seq(
       ("""{"name": "quickstart-text-file-source", "config": {"topic":"twitter"}}""",
         "twitter", 0, 0L, 1484897702123L),
@@ -160,7 +160,7 @@ class ProductionConfSpec extends SparkSpec {
       q.processAllAvailable(); q.stop()
     }
 
-    run(java.nio.file.Files.createTempDirectory("graft-ep1-ck1").toString)
+    run(tempDir("graft-ep1-ck1").toString)
     assert(store.size == 2, s"expected 2 docs, got ${store.size}")
     val firstIds = store.keySet().toArray.toSet
     val firstNames = store.values().toArray
@@ -172,7 +172,7 @@ class ProductionConfSpec extends SparkSpec {
     // derives id from name_s (config/cloudsolr.conf:62-67), so the replayed
     // docs carry the SAME keys and the keyed store stays at 2 — overwrite,
     // not duplicate. (uuid_s differs per replay; the uniqueKey must not.)
-    run(java.nio.file.Files.createTempDirectory("graft-ep1-ck2").toString)
+    run(tempDir("graft-ep1-ck2").toString)
     assert(store.size == 2,
       s"replay duplicated documents: ${store.keySet()}")
     assert(store.keySet().toArray.toSet == firstIds,
@@ -202,12 +202,12 @@ class ProductionConfSpec extends SparkSpec {
     // file-based stream (no broker in this container): Kafka-envelope-shaped
     // rows arrive as files; foreachBatch applies the compiled pipeline —
     // exactly the Connect task loop (poll batch -> morphline -> produce)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ep3")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ep3-ckpt").toString
+    val dir = tempDir("graft-ep3")
+    val ckpt = tempDir("graft-ep3-ckpt").toString
     // FileStreamSource wants a flat directory of files: stage each batch as
     // one parquet file moved into the watched dir
     def writeBatch(name: String, rows: Seq[(String, String, Int, Long)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ep3-stage")
+      val tmp = tempDir("graft-ep3-stage")
       rows.toDF("value", "topic", "partition", "offset")
         .repartition(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)

@@ -51,8 +51,7 @@ class QuickstartSpec extends SparkSpec {
       // 3. Streaming: the SAME pipeline runs unchanged on a stream;
       //    produce each micro-batch to a kafka-shaped sink with a
       //    per-row topic (with a broker, use StreamingOps.kafkaSink).
-      val staged = java.nio.file.Files
-        .createTempDirectory("graft-quickstart").toString
+      val staged = tempDir("graft-quickstart").toString // README: Files.createTempDirectory
       envelope.write.mode("overwrite").parquet(staged)
       val q = pipeline(StreamingOps.fileSource(spark, envelope.schema, staged))
         .transform(df => Sinks.kafkaProduce(df,

@@ -13,7 +13,7 @@ class SequenceFileSpec extends SparkSpec {
   import spark.implicits._
 
   test("sequence file of (Text, BytesWritable) round-trips to (key, body)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-seqfile")
+    val dir = tempDir("graft-seqfile")
     val file = new Path(dir.resolve("part-00000.seq").toString)
     val conf = new Configuration()
     val writer = SequenceFile.createWriter(conf,
@@ -40,7 +40,7 @@ class SequenceFileSpec extends SparkSpec {
   }
 
   test("downstream parser consumes the body column (readJson over sequence-file input)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-seqfile2")
+    val dir = tempDir("graft-seqfile2")
     val file = new Path(dir.resolve("data.seq").toString)
     val writer = SequenceFile.createWriter(new Configuration(),
       SequenceFile.Writer.file(file),

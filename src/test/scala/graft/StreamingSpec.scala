@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{ControlOps, RecordOps}
 import graft.pipeline.Pipeline
+import graft.queries.Replay
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -632,39 +633,6 @@ class StreamingSpec extends SparkSpec {
       s"checkpoint restart replayed ${StreamingSpec.published.size()} records")
   }
 
-  /** Stage `src` as four single-file parquet quartiles of `tsCol` order
-    * under `base/$tag-f{1..4}` and create the stream input dir
-    * `base/$tag-in`; returns (inDir, publish) where publish(q) copies
-    * quartile q into inDir with a pinned mtime, so FileStreamSource
-    * (oldest-modified-first) delivers files in event-time order — the
-    * drop-free replay the checkpointed-restart tests share.
-    */
-  private def stageOrderedQuartiles(src: org.apache.spark.sql.DataFrame,
-      tsCol: String, base: java.nio.file.Path,
-      tag: String): (java.nio.file.Path, Int => Unit) = {
-    import org.apache.spark.sql.expressions.Window
-    val ranked = src.withColumn("__q",
-      ntile(4).over(Window.orderBy(col(tsCol)))).cache()
-    for (q <- 1 to 4)
-      ranked.filter(col("__q") === q).drop("__q")
-        .coalesce(1).write.parquet(s"$base/$tag-f$q")
-    ranked.unpersist()
-    val inDir = base.resolve(s"$tag-in")
-    java.nio.file.Files.createDirectories(inDir)
-    def publish(q: Int): Unit = {
-      import scala.jdk.CollectionConverters._
-      val ls = java.nio.file.Files.list(base.resolve(s"$tag-f$q"))
-      val part = try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-        finally ls.close()
-      val dst = inDir.resolve(f"part-$q%05d.parquet")
-      java.nio.file.Files.copy(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + q * 60000L))
-    }
-    (inDir, publish)
-  }
-
   test("append+watermark window survives a checkpointed RESTART: " +
       "recovered state completes windows spanning the stop") {
     // The production-path claim the x_stream_*_append gates check is
@@ -676,26 +644,14 @@ class StreamingSpec extends SparkSpec {
       .select(col("ts").cast("timestamp").as("ts"), col("event_type"),
         col("value"))
     val base = tempDir("graft-restart")
-    val (inDir, publish) = stageOrderedQuartiles(src, "ts", base, "ev")
-    val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
-    def runPhase(): Unit = {
-      val stream = spark.readStream.schema(src.schema).format("parquet")
-        .option("maxFilesPerTrigger", "1").load(inDir.toString)
-      val agg = stream.withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").cast("string").as("w_start"),
-          col("event_type"), col("n"))
-      val q = agg.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    publish(1); publish(2); runPhase() // phase 1: first half, then STOP
-    publish(3); publish(4); runPhase() // restart from the checkpoint
-    val got = spark.read.parquet(outDir)
+    val staged = Replay.stage(src, col("ts"), 4, base.resolve("stage"))
+    // phase 1: first half, then STOP; restart from the checkpoint
+    val got = Replay.restart(spark, staged, base, split = 2)(
+        Replay.appendParquet(_.withWatermark("ts", "2 hours")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("window.start").cast("string").as("w_start"),
+            col("event_type"), col("n"))))
       .select("w_start", "event_type", "n")
       .as[(String, String, Long)].collect().toSet
     // expected: batch windows closed by the final (ms-floored) watermark
@@ -724,26 +680,14 @@ class StreamingSpec extends SparkSpec {
       .select(col("ts").cast("timestamp").as("ts"), col("user_id"),
         col("value"))
     val base = tempDir("graft-restart-sess")
-    val (inDir, publish) = stageOrderedQuartiles(src, "ts", base, "ev")
-    val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
-    def runPhase(): Unit = {
-      val stream = spark.readStream.schema(src.schema).format("parquet")
-        .option("maxFilesPerTrigger", "1").load(inDir.toString)
-      val agg = stream.withWatermark("ts", "2 hours")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("session_window.start").cast("string").as("w_start"),
-          col("user_id"), col("n"))
-      val q = agg.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    publish(1); publish(2); runPhase() // first half, then STOP
-    publish(3); publish(4); runPhase() // restart from the checkpoint
-    val got = spark.read.parquet(outDir)
+    val staged = Replay.stage(src, col("ts"), 4, base.resolve("stage"))
+    // first half, then STOP; restart from the checkpoint
+    val got = Replay.restart(spark, staged, base, split = 2)(
+        Replay.appendParquet(_.withWatermark("ts", "2 hours")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("session_window.start").cast("string").as("w_start"),
+            col("user_id"), col("n"))))
       .select("w_start", "user_id", "n")
       .as[(String, Long, Long)].collect().toSet
     // expected: batch gaps-and-islands sessions whose END the final
@@ -782,17 +726,17 @@ class StreamingSpec extends SparkSpec {
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         col("ts").as("purchase_ts"))
     val base = tempDir("graft-restart-join")
-    val (inC, publishClick) = stageOrderedQuartiles(clicksB, "click_ts",
-      base, "click")
-    val (inB, publishBuy) = stageOrderedQuartiles(buysB, "purchase_ts",
-      base, "buy")
+    val clickFiles = Replay.stage(clicksB, col("click_ts"), 4,
+      base.resolve("click"))
+    val buyFiles = Replay.stage(buysB, col("purchase_ts"), 4,
+      base.resolve("buy"))
+    val (inC, inB) = (base.resolve("click-in"), base.resolve("buy-in"))
+    Seq(inC, inB).foreach(java.nio.file.Files.createDirectories(_))
     val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
     def runPhase(): Unit = {
-      val clicks = spark.readStream.schema(clicksB.schema).format("parquet")
-        .option("maxFilesPerTrigger", "1").load(inC.toString)
+      val clicks = Replay.open(spark, clicksB.schema, inC)
         .withWatermark("click_ts", "2 hours")
-      val buys = spark.readStream.schema(buysB.schema).format("parquet")
-        .option("maxFilesPerTrigger", "1").load(inB.toString)
+      val buys = Replay.open(spark, buysB.schema, inB)
         .withWatermark("purchase_ts", "2 hours")
       val joined = clicks.join(buys,
         col("user_id") === col("p_user") &&
@@ -808,10 +752,10 @@ class StreamingSpec extends SparkSpec {
     }
     val outSchema = StructType(Seq(StructField("user_id", LongType),
       StructField("click_id", LongType), StructField("purchase_id", LongType)))
-    (1 to 4).foreach(publishClick); runPhase() // clicks buffer, then STOP
+    (1 to 4).foreach(clickFiles.publish(inC, _)); runPhase() // clicks buffer, then STOP
     assert(spark.read.schema(outSchema).parquet(outDir).isEmpty,
       "pairs emitted before any purchase arrived")
-    (1 to 4).foreach(publishBuy); runPhase() // restart: purchases stream
+    (1 to 4).foreach(buyFiles.publish(inB, _)); runPhase() // restart: purchases stream
     val got = spark.read.parquet(outDir)
       .select("user_id", "click_id", "purchase_id")
       .as[(Long, Long, Long)].collect().toSet
@@ -906,28 +850,7 @@ class StreamingSpec extends SparkSpec {
             pmod(xxhash64(col("ts"), col("value"), lit(seed)), lit(delta))
       }
       // stage 4 replay files split by PERTURBED position
-      val base = tempDir("graft-disorder")
-      val staged = src.withColumn("__q", ntile(4).over(
-        org.apache.spark.sql.expressions.Window.orderBy(pos)))
-      val inDir = base.resolve("in")
-      java.nio.file.Files.createDirectories(inDir)
-      for (q <- 1 to 4) {
-        val sub = base.resolve(s"f$q")
-        staged.filter(col("__q") === q).drop("__q")
-          .coalesce(1).write.mode("overwrite").parquet(sub.toString)
-        import scala.jdk.CollectionConverters._
-        val ls = java.nio.file.Files.list(sub)
-        val part = try ls.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-          finally ls.close()
-        val dst = inDir.resolve(f"part-$q%05d.parquet")
-        java.nio.file.Files.copy(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + q * 60000L))
-      }
-      val stream = spark.readStream.schema(src.schema).format("parquet")
-        .option("maxFilesPerTrigger", "1").load(inDir.toString)
+      val stream = Replay.stream(spark, tempDir("graft-disorder"), src, pos)
       val name = s"disorder_${jitterSeed.getOrElse(0L)}"
       spark.streams.active
         .filter(q => Option(q.name).contains(name)).foreach(_.stop())
